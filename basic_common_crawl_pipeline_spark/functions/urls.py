@@ -100,7 +100,14 @@ def canonicalize_url(url: str | None) -> str | None:
         norm = "/"
     if path.endswith("/") and not norm.endswith("/"):
         norm += "/"
-    return urlunsplit((scheme, netloc, norm, parts.query, ""))
+    canon = urlunsplit((scheme, netloc, norm, parts.query, ""))
+    if canon[-1].isspace():
+        # whitespace the input's strip could not reach — before a dropped
+        # '#'/empty '?', or left by dot-segment removal ('/p /.') — ends
+        # the form; canonicalize again so the result is a fixpoint (the
+        # strip removes it), as surt's re-canonicalization requires
+        return canonicalize_url(canon)
+    return canon
 
 
 def host_of(url: str | None) -> str | None:
@@ -189,6 +196,9 @@ def canon_host_surt(
     if path.endswith("/") and not norm.endswith("/"):
         norm += "/"
     canon = urlunsplit((scheme, netloc, norm, parts.query, ""))
+    if canon[-1].isspace():
+        # not yet a fixpoint: same repeat as canonicalize_url
+        return canon_host_surt(canon)
     rev = host if ":" in host else ",".join(reversed(host.split(".")))
     if nondefault_port:
         rev += f":{port}"

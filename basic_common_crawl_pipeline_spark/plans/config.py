@@ -59,27 +59,9 @@ class CrawlConfig:
     bloom_partitions: int = 16
     bloom_bits: int = 1 << 20
     bloom_k: int = 7
-    # True: broadcast the wave's candidate/selected sets into the joins
-    # against pages so the fat table streams from its cache/bucket layout
-    # and never shuffles. False: shuffle_hash — at 10^9+ frontier scale
-    # pages is bucketed by url, so only the frontier side shuffles.
-    # "auto" (default): pick per wave from the frontier row count —
-    # broadcast while the wave is below broadcast_threshold, flip to
-    # shuffle_hash when it grows past it (the count is one column-pruned
-    # scan of the small frontier table, folded into the per-wave
-    # frontier-drained check).
-    broadcast_frontier: bool | str = "auto"
-    # max frontier rows to broadcast in auto mode: ~100k canon_url rows
-    # ≈ a few MB serialized — far under Spark's 8GB broadcast limit and
-    # cheap to ship to every executor once per wave
-    broadcast_threshold: int = 100_000
     # check (once, at run_crawl start) that pages is unique per url — the
     # wave joins assume one capture per URL (see run_crawl docstring)
     validate_pages_unique: bool = False
-    # False → skip the metrics-only count jobs per wave (class breakdown,
-    # discovered/extracted counts); selected-count still flows from the
-    # sequencer's offsets pass. Production telemetry on; benchmarks off.
-    collect_metrics: bool = True
     # every N waves, fold the append-tables' delta chains (seen /
     # crawl_order / results) into one base path (Iceberg
     # rewrite-data-files): a 1000-wave crawl otherwise unions 1000 deltas

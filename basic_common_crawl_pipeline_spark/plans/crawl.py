@@ -151,6 +151,40 @@ class MetricsServer:
         self._httpd.server_close()
 
 
+def url_partitioned(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan reports hash partitioning on exactly
+    its ``url`` column — a materialized cache built by
+    ``repartition(n, "url")`` or a table bucketed by url. Read from the
+    planned node, not plan text; a cache not yet filled reports unknown
+    partitioning (its AQE plan settles on first use) and counts as not
+    partitioned."""
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return False
+    keys = part.expressions()
+    return (
+        keys.size() == 1
+        and keys.apply(0).getClass().getSimpleName() == "AttributeReference"
+        and keys.apply(0).name() == "url"
+    )
+
+
+def url_partitioned_pages(pages: DataFrame) -> DataFrame:
+    """``pages`` itself when it is already url-partitioned
+    (``url_partitioned``); otherwise a copy hash-partitioned by url over
+    ``spark.sql.shuffle.partitions``, persisted and filled. The wave's
+    shuffle_hash joins then exchange only the frontier side: over pages
+    with unknown partitioning (a plain ``read.parquet``) every wave would
+    re-shuffle the pages table, html included — this pays that shuffle
+    once per crawl. The caller unpersists a returned copy."""
+    if url_partitioned(pages):
+        return pages
+    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    copy = pages.repartition(n, "url").persist()
+    copy.count()
+    return copy
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -166,7 +200,7 @@ def run_crawl(
     Per-wave driver latency is ONE blocking Spark action (the wave's
     combined metrics/offsets/frontier-size job inside ``run_wave``):
 
-    - the frontier-drained check and the auto join-strategy input reuse
+    - the frontier-drained check and the wave's small-wave gate reuse
       the previous wave's ``frontier_size`` metric (a fresh ``count()``
       runs only once, for the first wave of a run);
     - snapshot commits run on a background thread, overlapped with the
@@ -186,12 +220,18 @@ def run_crawl(
     append-table deltas into the new run's tables — refused instead).
 
     PRECONDITION: ``pages`` must be unique per url (one capture per URL).
-    The wave's broadcast index join would duplicate a candidate per extra
-    capture, corrupting crawl order and the seen set. Real CDX indexes
-    hold multiple captures per URL — dedupe at ingest (keep the latest
-    warc_ts) rather than per wave: one shuffle once instead of every wave.
+    The wave's shuffle_hash left joins against pages (index lookup and
+    html fetch) emit one row per matching capture, so an extra capture
+    duplicates a candidate, corrupting crawl order and the seen set. Real
+    CDX indexes hold multiple captures per URL — dedupe at ingest (keep
+    the latest warc_ts) rather than per wave: one shuffle once instead of
+    every wave.
     ``config.validate_pages_unique`` checks this once at crawl start
     (column-pruned to url — the fat html column is never read).
+
+    ``pages`` not already hash-partitioned by url (cached or bucketed)
+    is partitioned once here and cached for the crawl
+    (``url_partitioned_pages``).
     """
     if config.validate_pages_unique:
         from pyspark.sql import functions as F
@@ -273,6 +313,8 @@ def run_crawl(
     # the robots dim is re-read every wave (broadcast join build) — cache
     # it once per crawl instead of recomputing its lineage per wave
     robots = robots.persist()
+    input_pages = pages
+    pages = url_partitioned_pages(pages)
     try:
         while state.wave < config.max_waves:
             if frontier_count is None:
@@ -448,6 +490,8 @@ def run_crawl(
         for cached_df in retiring:
             cached_df.unpersist()
         robots.unpersist()
+        if pages is not input_pages:
+            pages.unpersist()
         if committer is not None:
             committer.shutdown()
     if store is not None and store.current_snapshot() is not None:

@@ -169,6 +169,11 @@ def frontier_from_seeds(seeds: DataFrame, parallelism: int | None = None) -> Dat
     )
 
 
+# waves of at most this many frontier rows (the count the caller already
+# holds) skip the politeness salt phase and sort crawl order in one task
+SMALL_WAVE_ROWS = 100_000
+
+
 def empty_seen(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], "canon_url string")
 
@@ -201,16 +206,6 @@ def run_wave(
     frontier_count: int | None = None,
     seen_is_empty: bool = False,
 ) -> WaveOutput:
-    # join-strategy choice (J1): static bool from config, or — in "auto"
-    # mode — per wave from the frontier row count the caller measured in
-    # its frontier-drained check (no extra action here)
-    if config.broadcast_frontier == "auto":
-        use_broadcast = (
-            frontier_count is not None
-            and frontier_count <= config.broadcast_threshold
-        )
-    else:
-        use_broadcast = bool(config.broadcast_frontier)
     # 1. candidates = frontier ∖ seen. With the partitioned bloom
     #    (operators/seen.py): bloom-negative rows are *definitely* unseen
     #    and skip the exact anti-join entirely; only bloom-positive rows
@@ -255,30 +250,16 @@ def run_wave(
     )
 
     # 3. index lookup (J1 metadata side): scan reads ONLY url/status/lang.
-    #    With broadcast_frontier (default): broadcast the wave's candidate
-    #    set and STREAM the pages table — pages bytes never shuffle. A
-    #    left join can't build its small left side, so it decomposes into
-    #    inner-hit + anti-miss (both build the small side). At 10^9+
-    #    frontier scale flip the flag: pages is bucketed by url, so a
-    #    sort-merge join shuffles only the frontier side.
+    #    shuffle_hash, not sort-merge: builds the hash map on the frontier
+    #    side and streams pages without sorting them — pages cached or
+    #    bucketed hash-partitioned by url reuse their partitioning (no
+    #    exchange on the pages side; pinned in tests/test_plans.py).
     index = pages.select(
         F.col("url").alias("canon_url"),
         F.col("status").alias("__status"),
         F.col("lang").alias("__lang"),
     )
-    if use_broadcast:
-        hits = index.join(F.broadcast(cand), "canon_url")
-        missed = cand.join(
-            F.broadcast(hits.select("canon_url")), "canon_url", "left_anti"
-        ).withColumn("__status", F.lit(None).cast("int")).withColumn(
-            "__lang", F.lit(None).cast("string")
-        )
-        cand = hits.unionByName(missed)
-    else:
-        # shuffle_hash, not sort-merge: builds the hash map on the frontier
-        # side and streams pages without sorting them — pages cached
-        # hash-partitioned by url reuses its partitioning (no exchange)
-        cand = cand.hint("shuffle_hash").join(index, "canon_url", "left")
+    cand = cand.hint("shuffle_hash").join(index, "canon_url", "left")
 
     # 4. classify: disallowed / miss / ineligible / eligible (F1-F3)
     lang_ok = F.array_contains(
@@ -300,17 +281,12 @@ def run_wave(
         F.greatest(F.lit(1), F.floor(F.lit(config.wave_seconds) / F.col("__delay"))),
     )
     # small waves skip the salt phase (one shuffle+sort stage less): the
-    # salting exists to break mega-host hot keys, which a wave under the
-    # broadcast threshold cannot contain. Gated on the wave SIZE, not the
-    # join strategy — a static broadcast_frontier=True config with a huge
-    # wave must still salt. Identical output either way (top-k is
-    # distributive; asserted by the politeness tests).
+    # salting exists to break mega-host hot keys, which a wave of at most
+    # SMALL_WAVE_ROWS frontier rows cannot contain. Identical output
+    # either way (top-k is distributive; asserted by the politeness tests).
     # One ranking pass yields selected AND deferred — no anti-join
     # (select-then-subtract would shuffle eligible+selected again).
-    small_wave = (
-        frontier_count is not None
-        and frontier_count <= config.broadcast_threshold
-    )
+    small_wave = frontier_count is not None and frontier_count <= SMALL_WAVE_ROWS
     salt = 1 if small_wave else config.salt_partitions
     ranked = rank_per_host_topk(
         eligible,
@@ -324,7 +300,7 @@ def run_wave(
     #    driver action below (no dedicated collect); the sorted pass is
     #    cached so committing crawl_order doesn't re-run the sort.
     #    Small waves sort in one task (like the salt skip): selected is
-    #    ≤ Σ budgets ≤ frontier rows, i.e. broadcast-sized, and range
+    #    ≤ Σ budgets ≤ frontier rows ≤ SMALL_WAVE_ROWS, and range
     #    partitioning would pay a sampling pass a small sort doesn't need.
     seq_cache: list = []
     sorted_sel = global_seq_sorted(
@@ -334,24 +310,20 @@ def run_wave(
         single_partition=small_wave,
     )
 
-    # 7. fetch + extract (J1 content side): html joined ONLY for selected;
-    #    broadcast the selected set → the fat html column never shuffles
-    #    (selected ⊆ index hits, so inner ≡ left here). host/surt/priority
-    #    ride THROUGH the fetch join and the Arrow extract stage: the
-    #    alternative — extract then re-join back to selected — exchanges
-    #    the text-fat extracted rows a second time every wave (mapInPandas
-    #    output partitioning is unknown to the planner, so that join
-    #    re-shuffles BOTH sides).
+    # 7. fetch + extract (J1 content side): html joined ONLY for selected,
+    #    the same shuffle_hash left join as step 3 — only the selected side
+    #    exchanges, so over url-partitioned pages the fat html column never
+    #    shuffles (selected ⊆ index hits, so left ≡ inner here; pinned in
+    #    tests/test_plans.py). host/surt/priority ride THROUGH the fetch
+    #    join and the Arrow extract stage: the alternative — extract then
+    #    re-join back to selected — exchanges the text-fat extracted rows
+    #    a second time every wave (mapInPandas output partitioning is
+    #    unknown to the planner, so that join re-shuffles BOTH sides).
     from functools import partial
 
     through = ("host", "surt", "priority")
     pages_html = pages.select(F.col("url").alias("canon_url"), "html")
-    if use_broadcast:
-        fetched = pages_html.join(F.broadcast(selected), "canon_url")
-    else:
-        fetched = selected.hint("shuffle_hash").join(
-            pages_html, "canon_url", "left"
-        )
+    fetched = selected.hint("shuffle_hash").join(pages_html, "canon_url", "left")
     extract_schema = StructType(
         [_EXTRACT_SCHEMA[0]]
         + [selected.schema[c] for c in through]
@@ -435,40 +407,38 @@ def run_wave(
     #   - per-sorted-partition row counts  → sequencer offsets + selected
     #     count (operators/ordering.py phase 2, no dedicated collect);
     #   - the next frontier's size         → the caller's drained check
-    #     and next wave's join-strategy input (no fresh count() per wave);
-    #   - (collect_metrics) the full class/extract/discovery breakdown.
+    #     and next wave's small-wave gate (no fresh count() per wave);
+    #   - the full class/extract/discovery breakdown.
     # The union is column-pruned to the constant tag, so the real work is
     # one pass over the wave's caches — and it doubles as the
     # materialization point for sorted_sel / new_frontier / processed.
     one = F.lit(1).cast("long")
-    tags = sorted_sel.select(
-        F.concat(F.lit("pid:"), F.col("__pid").cast("string")).alias("k"),
-        one.alias("w"),
-    ).unionByName(
-        new_frontier.select(F.lit("frontier").alias("k"), one.alias("w"))
-    )
-    if config.collect_metrics:
-        tags = (
-            tags.unionByName(
-                cand.select(F.col("__class").alias("k"), one.alias("w"))
-            )
-            .unionByName(
-                extracted.filter(F.col("text").isNotNull()).select(
-                    F.lit("extracted").alias("k"), one.alias("w")
-                )
-            )
-            .unionByName(
-                extracted.select(F.explode("links").alias("l")).select(
-                    F.lit("discovered").alias("k"), one.alias("w")
-                )
-            )
-            .unionByName(
-                extracted.select(
-                    F.lit("fetched_bytes").alias("k"),
-                    F.col("html_bytes").alias("w"),
-                )
+    tags = (
+        sorted_sel.select(
+            F.concat(F.lit("pid:"), F.col("__pid").cast("string")).alias("k"),
+            one.alias("w"),
+        )
+        .unionByName(
+            new_frontier.select(F.lit("frontier").alias("k"), one.alias("w"))
+        )
+        .unionByName(cand.select(F.col("__class").alias("k"), one.alias("w")))
+        .unionByName(
+            extracted.filter(F.col("text").isNotNull()).select(
+                F.lit("extracted").alias("k"), one.alias("w")
             )
         )
+        .unionByName(
+            extracted.select(F.explode("links").alias("l")).select(
+                F.lit("discovered").alias("k"), one.alias("w")
+            )
+        )
+        .unionByName(
+            extracted.select(
+                F.lit("fetched_bytes").alias("k"),
+                F.col("html_bytes").alias("w"),
+            )
+        )
+    )
     counts = {
         r["k"]: r["n"]
         for r in tags.groupBy("k").agg(F.sum("w").alias("n")).collect()
@@ -484,31 +454,24 @@ def run_wave(
         sorted_sel, pid_counts, start=next_seq
     ).select("seq", "wave", F.col("canon_url").alias("url"), "host", "priority")
 
-    if config.collect_metrics:
-        n_extracted = counts.get("extracted", 0)
-        metrics = {
-            "wave": wave,
-            "candidates": sum(
-                counts.get(c, 0)
-                for c in ("disallowed", "miss", "ineligible", "eligible")
-            ),
-            "disallowed": counts.get("disallowed", 0),
-            "misses": counts.get("miss", 0),
-            "ineligible": counts.get("ineligible", 0),
-            "selected": n_selected,
-            "deferred": counts.get("eligible", 0) - n_selected,
-            "extracted": n_extracted,
-            "extract_failures": n_selected - n_extracted,
-            "discovered": counts.get("discovered", 0),
-            "fetched_bytes": counts.get("fetched_bytes", 0),
-            "frontier_size": frontier_size,
-        }
-    else:
-        metrics = {
-            "wave": wave,
-            "selected": n_selected,
-            "frontier_size": frontier_size,
-        }
+    n_extracted = counts.get("extracted", 0)
+    metrics = {
+        "wave": wave,
+        "candidates": sum(
+            counts.get(c, 0)
+            for c in ("disallowed", "miss", "ineligible", "eligible")
+        ),
+        "disallowed": counts.get("disallowed", 0),
+        "misses": counts.get("miss", 0),
+        "ineligible": counts.get("ineligible", 0),
+        "selected": n_selected,
+        "deferred": counts.get("eligible", 0) - n_selected,
+        "extracted": n_extracted,
+        "extract_failures": n_selected - n_extracted,
+        "discovered": counts.get("discovered", 0),
+        "fetched_bytes": counts.get("fetched_bytes", 0),
+        "frontier_size": frontier_size,
+    }
     # lineage truncation, AFTER the single action: the lazy checkpoints
     # wrap the now-hot caches, so their materialization (triggered by the
     # next wave's action, or the background commit) is a block copy —

@@ -71,16 +71,7 @@ def main() -> None:
         t0 = time.time()
         state = run_crawl(
             spark, pages, seeds, robots,
-            CrawlConfig(
-                wave_seconds=65536.0, max_waves=3, salt_partitions=8,
-                collect_metrics=False,
-                # the bench corpus is hash-partitioned by url and cached —
-                # the co-located shuffle_hash join is the right physical
-                # plan at every wave size here (measured: beats broadcast
-                # even at 8k-row waves, and has no driver-serial build),
-                # exactly the bucketed-pages cluster layout
-                broadcast_frontier=False,
-            ),
+            CrawlConfig(wave_seconds=65536.0, max_waves=3, salt_partitions=8),
         )
         trial_sec = time.time() - t0
         urls = sum(m["selected"] for m in state.metrics)
@@ -118,12 +109,7 @@ def main() -> None:
         t0 = time.time()
         bout = run_wave(
             spark, bfrontier, empty_seen(spark), bpages, brobots, wave=0,
-            config=CrawlConfig(
-                wave_seconds=1 << 20, salt_partitions=8, collect_metrics=False,
-                # wave ≈ whole corpus → broadcasting the frontier would be
-                # serial driver work; use the shuffled (bucketed) path
-                broadcast_frontier=False,
-            ),
+            config=CrawlConfig(wave_seconds=1 << 20, salt_partitions=8),
         )
         bout.new_frontier.localCheckpoint(True)
         trial_sec = time.time() - t0

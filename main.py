@@ -88,6 +88,8 @@ def main() -> None:
         return
 
     if args.cmd == "crawl":
+        # a plain parquet read has no url partitioning: run_crawl
+        # partitions and caches it once per crawl, not once per wave
         pages = spark.read.parquet(args.pages)
         seeds = spark.read.parquet(args.seeds)
         robots = spark.read.parquet(args.robots)

@@ -85,10 +85,7 @@ def main() -> None:
             t0 = time.time()
             out = run_wave(
                 spark, frontier, empty_seen(spark), pages, robots, wave=0,
-                config=CrawlConfig(
-                    wave_seconds=16.0, salt_partitions=salt,
-                    collect_metrics=False, broadcast_frontier=False,
-                ),
+                config=CrawlConfig(wave_seconds=16.0, salt_partitions=salt),
                 frontier_count=n_frontier,
             )
             sec = time.time() - t0

@@ -4,6 +4,7 @@ change crawl order, seen set, or extracted bytes."""
 
 from __future__ import annotations
 
+from basic_common_crawl_pipeline_spark.plans import wave
 from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
 from basic_common_crawl_pipeline_spark.plans.crawl import collect_outputs, run_crawl
 from basic_common_crawl_pipeline_spark.sources.pages import (
@@ -27,69 +28,22 @@ def _run(spark, corpus, root, shuffle_partitions):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_broadcast_and_shuffle_join_strategies_agree(spark, tmp_path):
-    """broadcast_frontier=True (stream pages) and False (shuffled joins —
-    the 10^9-frontier path) are physical strategies only: identical
-    crawl output required."""
-    corpus = synth_corpus(n_pages=150, n_hosts=4, seed=21, n_seeds=6)
-    outs = []
-    for flag in (True, False):
-        cfg = CrawlConfig(
-            wave_seconds=8.0, max_waves=2, salt_partitions=3,
-            broadcast_frontier=flag,
-        )
-        pages, seeds, robots = corpus_to_spark(spark, corpus)
-        store = SnapshotStore(str(tmp_path / f"bf_{flag}"))
-        run_crawl(spark, pages, seeds, robots, cfg, store=store)
-        outs.append(collect_outputs(spark, store))
-    (o_a, r_a, s_a), (o_b, r_b, s_b) = outs
-    assert [(r["seq"], r["url"]) for r in o_a] == [(r["seq"], r["url"]) for r in o_b]
-    assert s_a == s_b
-    assert {r["canon_url"]: r["text"] for r in r_a} == {
-        r["canon_url"]: r["text"] for r in r_b
-    }
-
-
-def test_crawl_invariant_to_partitioning(spark, tmp_path):
+def test_crawl_invariant_to_partitioning(spark, tmp_path, monkeypatch):
+    """Also invariant to the wave-size gate: with SMALL_WAVE_ROWS=0 every
+    wave takes the large-wave path (salted per-host top-k, range-
+    partitioned global sort) and must give the same crawl."""
     corpus = synth_corpus(n_pages=200, n_hosts=5, seed=7, n_seeds=8)
     o3, r3, s3 = _run(spark, corpus, str(tmp_path / "p3"), 3)
     o17, r17, s17 = _run(spark, corpus, str(tmp_path / "p17"), 17)
-    assert [(r["seq"], r["wave"], r["url"]) for r in o3] == [
-        (r["seq"], r["wave"], r["url"]) for r in o17
-    ]
-    assert {r["canon_url"]: r["text"] for r in r3} == {
-        r["canon_url"]: r["text"] for r in r17
-    }
-    assert s3 == s17
+    monkeypatch.setattr(wave, "SMALL_WAVE_ROWS", 0)
+    ob, rb, sb = _run(spark, corpus, str(tmp_path / "big"), 8)
+    for o, r, s in ((o17, r17, s17), (ob, rb, sb)):
+        assert [(x["seq"], x["wave"], x["url"]) for x in o] == [
+            (x["seq"], x["wave"], x["url"]) for x in o3
+        ]
+        assert {x["canon_url"]: x["text"] for x in r} == {
+            x["canon_url"]: x["text"] for x in r3
+        }
+        assert s == s3
     assert len(o3) > 10
 
-
-def test_auto_strategy_switch_matches_static_strategies(spark, tmp_path):
-    """broadcast_frontier='auto' with a threshold the growing frontier
-    crosses mid-crawl (wave 0 broadcasts, later waves shuffle) must still
-    produce identical output to both static strategies."""
-    corpus = synth_corpus(n_pages=150, n_hosts=4, seed=21, n_seeds=6)
-    outs = []
-    for flag, thresh in ((True, 0), ("auto", 10), (False, 0)):
-        cfg = CrawlConfig(
-            wave_seconds=8.0, max_waves=3, salt_partitions=3,
-            broadcast_frontier=flag, broadcast_threshold=thresh,
-        )
-        pages, seeds, robots = corpus_to_spark(spark, corpus)
-        store = SnapshotStore(str(tmp_path / f"auto_{flag}"))
-        state = run_crawl(spark, pages, seeds, robots, cfg, store=store)
-        outs.append((collect_outputs(spark, store), state.metrics))
-    (out_t, m_t), (out_auto, m_auto), (out_f, m_f) = outs
-    # the auto run really crossed the boundary: wave 0 frontier (6 seeds)
-    # <= 10 broadcasts, later waves (discovered links) exceed it
-    assert m_auto[0]["candidates"] <= 10
-    assert any(m["candidates"] > 10 for m in m_auto[1:])
-    for (o, r, s) in (out_auto, out_f):
-        assert [(x["seq"], x["url"]) for x in o] == [
-            (x["seq"], x["url"]) for x in out_t[0]
-        ]
-        assert s == out_t[2]
-        assert {x["canon_url"]: x["text"] for x in r} == {
-            x["canon_url"]: x["text"] for x in out_t[1]
-        }
-    assert m_t == m_auto == m_f

@@ -153,7 +153,7 @@ def test_prometheus_exposition_format():
 def test_wave_index_scan_prunes_html(spark, tmp_path):
     """The wave's index join (S2/P7) must scan only (url, status, lang):
     the fat html column appears in NO scan except the post-politeness
-    fetch join's — under both join strategies."""
+    fetch join's."""
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
@@ -168,30 +168,114 @@ def test_wave_index_scan_prunes_html(spark, tmp_path):
     path = str(tmp_path / "pages")
     pages.write.parquet(path)
     pages_pq = spark.read.parquet(path)
-    for flag in (True, False):
+    out = run_wave(
+        spark, frontier_from_seeds(seeds), empty_seen(spark),
+        pages_pq, robots, wave=0,
+        config=CrawlConfig(wave_seconds=16.0),
+    )
+    plan = _plan(out.results)
+    # every parquet scan's ReadSchema over the pages table either
+    # omits html (index side) or is the url+html fetch side
+    scans = [
+        seg.split("ReadSchema:")[1].splitlines()[0]
+        for seg in plan.split("FileScan parquet")[1:]
+        if "ReadSchema:" in seg
+    ]
+    pages_scans = [s for s in scans if "status" in s or "html" in s]
+    assert any("status" in s and "html" not in s for s in pages_scans), plan
+    for s in pages_scans:
+        if "html" in s:
+            assert "status" not in s and "lang" not in s, s
+    for df in out.cached:
+        df.unpersist()
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _shuffles_outside(plan, input_cache) -> list:
+    """Every ShuffleExchangeExec of an executed plan, found by walking node
+    classes through py4j: into AQE plans, query stages, reused exchanges
+    and the cached plans of InMemoryTableScans — except ``input_cache``
+    (an InMemoryRelation), whose own build exchanges are not the plan's."""
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "ShuffleExchangeExec":
+            found.append(node)
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "ReusedExchangeExec":
+            stack.append(node.child())
+        elif name == "InMemoryTableScanExec":
+            if not node.relation().cacheBuilder().equals(input_cache.cacheBuilder()):
+                stack.append(node.relation().cachedPlan())
+        stack.extend(_seq(node.children()))
+    return found
+
+
+def test_wave_never_shuffles_html_over_url_partitioned_pages(spark, tmp_path):
+    """Over pages cached hash-partitioned by url (as pages_from_documents
+    and the benchmark's generator build them, and as run_crawl partitions
+    a plain parquet read once per crawl), the wave's shuffle_hash joins
+    exchange only the frontier side: no shuffle in the wave's executed
+    plans, caches included, carries the html column. A round-robin copy
+    of the same pages is the negative control — there the fetch join
+    must shuffle html, so the walk provably sees it."""
+    from basic_common_crawl_pipeline_spark.plans.catalog import (
+        pages_from_documents,
+    )
+    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
+    from basic_common_crawl_pipeline_spark.plans.crawl import (
+        url_partitioned,
+        url_partitioned_pages,
+    )
+    from basic_common_crawl_pipeline_spark.plans.wave import (
+        empty_seen,
+        frontier_from_seeds,
+        run_wave,
+    )
+
+    pages, seeds, robots = pages_from_documents(spark, SF)
+    scattered = pages.repartition(3).persist()
+    scattered.count()
+    pages.write.parquet(str(tmp_path / "plain"))
+    plain = spark.read.parquet(str(tmp_path / "plain"))
+    assert url_partitioned(pages)
+    assert not url_partitioned(scattered) and not url_partitioned(plain)
+    assert url_partitioned_pages(pages) is pages
+    prepared = url_partitioned_pages(plain)
+    assert url_partitioned(prepared)
+
+    def html_shuffles(p):
         out = run_wave(
-            spark, frontier_from_seeds(seeds), empty_seen(spark),
-            pages_pq, robots, wave=0,
-            config=CrawlConfig(
-                wave_seconds=16.0, collect_metrics=False,
-                broadcast_frontier=flag,
-            ),
+            spark, frontier_from_seeds(seeds), empty_seen(spark), p, robots,
+            wave=0, config=CrawlConfig(wave_seconds=16.0),
         )
-        plan = _plan(out.results)
-        # every parquet scan's ReadSchema over the pages table either
-        # omits html (index side) or is the url+html fetch side
-        scans = [
-            seg.split("ReadSchema:")[1].splitlines()[0]
-            for seg in plan.split("FileScan parquet")[1:]
-            if "ReadSchema:" in seg
-        ]
-        pages_scans = [s for s in scans if "status" in s or "html" in s]
-        assert any("status" in s and "html" not in s for s in pages_scans), plan
-        for s in pages_scans:
-            if "html" in s:
-                assert "status" not in s and "lang" not in s, s
+        assert out.metrics["extracted"] > 0
+        input_cache = p._jdf.queryExecution().optimizedPlan()  # InMemoryRelation
+        shuffles = _shuffles_outside(
+            out.results._jdf.queryExecution().executedPlan(), input_cache
+        )
         for df in out.cached:
             df.unpersist()
+        assert shuffles  # the frontier side does exchange
+        return [
+            s for s in shuffles
+            if "html" in [a.name() for a in _seq(s.output())]
+        ]
+
+    try:
+        assert html_shuffles(pages) == []
+        assert html_shuffles(prepared) == []
+        assert html_shuffles(scattered)
+    finally:
+        scattered.unpersist()
+        prepared.unpersist()
 
 
 def test_ann_sig_layout_partition_pruning(spark, tmp_path):
@@ -332,7 +416,7 @@ def test_wave_leaves_materialize_without_rerunning_the_wave(spark):
     out = run_wave(
         spark, frontier_from_seeds(seeds), empty_seen(spark),
         pages, robots, wave=0,
-        config=CrawlConfig(wave_seconds=16.0, collect_metrics=False),
+        config=CrawlConfig(wave_seconds=16.0),
     )
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -668,17 +752,17 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
 
 def test_wave_fetch_join_over_bucketed_pages_drops_exchanges(spark, tmp_path):
-    """The crawl's at-scale join strategy (broadcast_frontier=False →
-    shuffle_hash) over a pages table written with sources/bucketed.py:
-    the bucketed scan's HashPartitioning(url) propagates through the
-    index projection's alias, so the pages side of BOTH url joins
-    (index lookup and html fetch) plans no re-shuffle — strictly fewer
-    hash exchanges than the same wave over plain parquet, with
-    byte-identical output."""
+    """The crawl's shuffle_hash url joins over a pages table written with
+    sources/bucketed.py: the bucketed scan's HashPartitioning(url)
+    propagates through the index projection's alias, so the pages side
+    of BOTH url joins (index lookup and html fetch) plans no re-shuffle —
+    strictly fewer hash exchanges than the same wave over plain parquet,
+    with byte-identical output."""
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
     from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
+    from basic_common_crawl_pipeline_spark.plans.crawl import url_partitioned
     from basic_common_crawl_pipeline_spark.plans.wave import (
         empty_seen,
         frontier_from_seeds,
@@ -699,15 +783,13 @@ def test_wave_fetch_join_over_bucketed_pages_drops_exchanges(spark, tmp_path):
             path=str(tmp_path / "bk"),
         )
         bk = read_bucketed_table(spark, "bk_wave_pages")
+        assert url_partitioned(bk) and not url_partitioned(plain)
 
         def run(p):
             out = run_wave(
                 spark, frontier_from_seeds(seeds), empty_seen(spark), p,
                 robots, wave=0,
-                config=CrawlConfig(
-                    wave_seconds=16.0, broadcast_frontier=False,
-                    collect_metrics=False,
-                ),
+                config=CrawlConfig(wave_seconds=16.0),
             )
             plan = out.results._jdf.queryExecution().executedPlan().toString()
             rows = sorted(

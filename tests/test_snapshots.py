@@ -92,8 +92,9 @@ def test_compaction_rewrites_delta_chain(spark, tmp_path):
 
 
 def test_metrics_table_handles_sparse_dicts(spark):
-    """collect_metrics=False waves record only (wave, selected); the
-    metrics table must still build with nulls for the absent counters."""
+    """Snapshots committed by older versions may hold per-wave dicts
+    with only (wave, selected); the metrics table must still build with
+    nulls for the absent counters, so such crawls stay resumable."""
     from basic_common_crawl_pipeline_spark.plans.crawl import metrics_table
 
     df = metrics_table(spark, [{"wave": 0, "selected": 7}])

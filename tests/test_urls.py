@@ -49,6 +49,15 @@ TRICKY = [
     "http://../a",
     "http://.../",
     "http://.:8080/x",
+    # whitespace directly before a dropped fragment / empty query, or
+    # exposed by dot-segment removal: canonical forms must not keep it
+    # (re-canonicalizing strips it)
+    "http://h.test/p #x",
+    "http://h.test/p\u3000#x",
+    "http://h.test/p\xa0#top",
+    "http://h.test/p\u3000?",
+    "http://h.test/a/. #x",
+    "http://h.test/a /.",
 ]
 
 
