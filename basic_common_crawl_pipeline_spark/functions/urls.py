@@ -61,12 +61,33 @@ def _simple_triple(url: str) -> tuple[str, str, str] | None:
     )
 
 
+def _host_reparses(host: str) -> bool:
+    """Whether a canonical netloc built from the lowered, dot-stripped
+    ``host`` parses back to that host — else the URL has no valid
+    authority and both canonicalize_url and canon_host_surt reject it.
+
+    It does not for an empty host (only dots: the canonical form
+    "http://" + path would parse a '//'-leading path as the authority),
+    a host holding a bracket, or an IPv6 literal urlsplit rejects. The
+    last two pass the first parse only when a bracket hides in the
+    userinfo (``http://[::1]@]/x``, ``http://[::1]@[::1:99999/``)."""
+    if not host or "[" in host or "]" in host:
+        return False
+    if ":" in host:
+        try:
+            urlsplit(f"//[{host}]")
+        except ValueError:
+            return False
+    return True
+
+
 def canonicalize_url(url: str | None) -> str | None:
     """Deterministic canonical form: lowercase scheme+host, strip default
     port, drop fragment, normalize dot-segments, ensure non-empty path.
 
-    Returns None for non-http(s) or unparseable URLs (those never enter
-    the frontier).
+    Returns None for non-http(s) or unparseable URLs, and for an
+    authority with no valid host (``_host_reparses``); those never enter
+    the frontier.
     """
     if url is None:
         return None
@@ -88,6 +109,8 @@ def canonicalize_url(url: str | None) -> str | None:
     if not host:
         return None
     host = host.lower().rstrip(".")
+    if not _host_reparses(host):
+        return None
     # urlsplit().hostname strips the brackets of IPv6 literals; restore
     # them or the canonical form won't round-trip through urlsplit.
     netloc = f"[{host}]" if ":" in host else host
@@ -178,13 +201,8 @@ def canon_host_surt(
     if not host:
         return (None, None, None)
     host = host.lower().rstrip(".")
-    if not host:
-        # a host of only dots strips to empty: canonicalize_url still
-        # emits the degenerate canonical form ("http:///..."), but
-        # host_of/surt re-parse it, find no hostname, and return None —
-        # delegate so the fused form stays exactly equal to the
-        # composition on this edge (pinned by tests/test_urls.py)
-        return (canonicalize_url(url), None, None)
+    if not _host_reparses(host):
+        return (None, None, None)
     netloc = f"[{host}]" if ":" in host else host
     nondefault_port = port is not None and port != _DEFAULT_PORTS.get(scheme)
     if nondefault_port:

@@ -44,6 +44,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+_REPARTITION_NODES = {"Repartition", "RepartitionByExpression", "RebalancePartitions"}
+
+
+def _has_repartition(plan) -> bool:
+    """Whether a logical plan node (py4j) or any node under it is an
+    explicit repartition — read from the node classes, so a column or
+    alias that merely names one does not count."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() in _REPARTITION_NODES:
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 def spread_input(df: DataFrame, key: str | None = None) -> DataFrame:
     spark = df.sparkSession
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -53,12 +70,8 @@ def spread_input(df: DataFrame, key: str | None = None) -> DataFrame:
         return df
     if not (0 < n_files < target):
         return df
-    try:
-        logical = df._jdf.queryExecution().logical().toString()
-        if "Repartition" in logical or "RebalancePartitions" in logical:
-            return df
-    except Exception:
-        pass
+    if _has_repartition(df._jdf.queryExecution().analyzed()):
+        return df
     if key is not None:
         return df.repartition(target, F.col(key))
     return df.repartition(target)

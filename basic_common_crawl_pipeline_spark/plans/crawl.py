@@ -169,20 +169,67 @@ def url_partitioned(df: DataFrame) -> bool:
     )
 
 
+def _leaves(df: DataFrame) -> list:
+    """The leaf nodes of ``df``'s analyzed logical plan (py4j objects)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def _checkpoint_rdds(df: DataFrame) -> dict:
+    """id -> RDD under each ``LogicalRDD`` leaf of ``df`` (a checkpoint's
+    or an RDD-built frame's rows)."""
+    return {
+        leaf.rdd().id(): leaf.rdd()
+        for leaf in _leaves(df)
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
 def url_partitioned_pages(pages: DataFrame) -> DataFrame:
     """``pages`` itself when it is already url-partitioned
-    (``url_partitioned``); otherwise a copy hash-partitioned by url over
-    ``spark.sql.shuffle.partitions``, persisted and filled. The wave's
-    shuffle_hash joins then exchange only the frontier side: over pages
-    with unknown partitioning (a plain ``read.parquet``) every wave would
-    re-shuffle the pages table, html included — this pays that shuffle
-    once per crawl. The caller unpersists a returned copy."""
-    if url_partitioned(pages):
+    (``url_partitioned``) and its plan holds no in-plan rows; otherwise a
+    copy hash-partitioned by url over ``spark.sql.shuffle.partitions``,
+    persisted and filled. The wave's shuffle_hash joins then exchange
+    only the frontier side: over pages with unknown partitioning (a plain
+    ``read.parquet``) every wave would re-shuffle the pages table, html
+    included — this pays that shuffle once per crawl.
+
+    In-plan rows are a ``LocalRelation`` leaf (``createDataFrame`` over
+    local data). Every analysis walks its row Seq (``PreReadCheck``) and
+    hashes its rows (``TreeNode.hashCode``), cached or not, and a wave
+    analyzes its pages dozens of times (``run_wave`` plus the background
+    commit's writes): on a 12k-page crawl those two frames held 41.5% of
+    the driver's planning-thread samples. Such pages are copied even when
+    already url-partitioned, from a lineage cut: a ``localCheckpoint``
+    leaf, O(1) to analyze. It reports unknown partitioning, so the
+    repartition still runs and html still never shuffles per wave. The
+    copy is one pass over the rows against dozens of analyses per wave,
+    so no size threshold applies.
+
+    The caller releases a returned copy with ``release_pages_copy``."""
+    in_plan_rows = any(
+        leaf.getClass().getSimpleName() == "LocalRelation"
+        for leaf in _leaves(pages)
+    )
+    if not in_plan_rows and url_partitioned(pages):
         return pages
     n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    copy = pages.repartition(n, "url").persist()
+    source = pages.localCheckpoint(eager=False) if in_plan_rows else pages
+    copy = source.repartition(n, "url").persist()
     copy.count()
     return copy
+
+
+def release_pages_copy(copy: DataFrame, pages: DataFrame) -> None:
+    """Unpersist ``copy = url_partitioned_pages(pages)`` and the
+    local-checkpoint blocks of its lineage cut (an RDD leaf the copy has
+    and ``pages`` has not), so no pages-sized copy outlives the crawl
+    until a JVM GC."""
+    copy.unpersist()
+    theirs = _checkpoint_rdds(pages)
+    for rdd_id, rdd in _checkpoint_rdds(copy).items():
+        if rdd_id not in theirs:
+            rdd.unpersist(False)
 
 
 def run_crawl(
@@ -231,7 +278,13 @@ def run_crawl(
 
     ``pages`` not already hash-partitioned by url (cached or bucketed)
     is partitioned once here and cached for the crawl
-    (``url_partitioned_pages``).
+    (``url_partitioned_pages``). So are pages whose plan holds in-plan
+    rows (a ``LocalRelation`` leaf, e.g. ``createDataFrame`` over
+    pandas): their copy is cut from that lineage first, because every
+    wave re-analyzes its pages dozens of times and each analysis walks
+    and hashes all those rows — 41.5% of the driver's planning samples
+    on a 12k-page crawl. The copy and its checkpoint blocks are released
+    when the crawl ends (``release_pages_copy``).
     """
     if config.validate_pages_unique:
         from pyspark.sql import functions as F
@@ -320,7 +373,7 @@ def run_crawl(
             if frontier_count is None:
                 # first wave of this run only; every later wave reuses the
                 # previous wave's frontier_size metric (drained check AND
-                # auto-join-strategy input, zero extra actions)
+                # run_wave's SMALL_WAVE_ROWS gate, zero extra actions)
                 frontier_count = state.frontier.count()
             if frontier_count == 0:
                 break
@@ -491,7 +544,7 @@ def run_crawl(
             cached_df.unpersist()
         robots.unpersist()
         if pages is not input_pages:
-            pages.unpersist()
+            release_pages_copy(pages, input_pages)
         if committer is not None:
             committer.shutdown()
     if store is not None and store.current_snapshot() is not None:

@@ -90,6 +90,50 @@ def test_resume_from_snapshot(spark, corpus, oracle_result, tmp_path):
     assert state.wave == CONFIG.max_waves or not state.frontier.take(1)
 
 
+def test_crawl_over_in_plan_rows_matches_oracle_and_leaves_no_copy(
+    spark, corpus, oracle_result, tmp_path
+):
+    """Pages built with ``createDataFrame`` over pandas and cached
+    url-partitioned (a LocalRelation leaf: run_crawl cuts that lineage
+    before its once-per-crawl copy) crawl identically to the oracle, and
+    the crawl leaves no new pages-sized block storage behind: the copy's
+    cache and its local-checkpoint blocks are both released."""
+    import pandas as pd
+
+    plain, seeds, robots = corpus_to_spark(spark, corpus)
+    pages = spark.createDataFrame(
+        pd.DataFrame(corpus.pages)[plain.columns], plain.schema
+    ).repartition(4, "url").persist()
+    pages.count()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def storage():
+        return {
+            r.id(): r.memSize() + r.diskSize() for r in jsc.getRDDStorageInfo()
+        }
+
+    before = storage()
+    cache = pages._jdf.queryExecution().optimizedPlan().cacheBuilder()
+    pages_size = before[cache.cachedColumnBuffers().id()]
+    assert pages_size > 0
+    store = SnapshotStore(str(tmp_path / "snap"))
+    try:
+        run_crawl(spark, pages, seeds, robots, CONFIG, store=store)
+        order, results, seen = collect_outputs(spark, store)
+        left = {
+            rdd_id: size for rdd_id, size in storage().items()
+            if rdd_id not in before and size >= pages_size / 2
+        }
+    finally:
+        pages.unpersist()
+    assert [(r["seq"], r["wave"], r["url"]) for r in order] == [
+        (r["seq"], r["wave"], r["url"]) for r in oracle_result.crawl_order
+    ]
+    assert seen == oracle_result.seen
+    assert {r["canon_url"]: r["text"] for r in results} == oracle_result.extracted
+    assert left == {}
+
+
 def test_crawl_over_deduped_multicapture_pages(spark, corpus, oracle_result, tmp_path):
     """A pages table with 3 captures per url (older duplicates), deduped
     at ingest via latest_capture, crawls identically to the clean table

@@ -218,6 +218,33 @@ def _shuffles_outside(plan, input_cache) -> list:
     return found
 
 
+def _wave_html_shuffles(spark, pages, seeds, robots) -> list:
+    """The html-carrying shuffles of a wave-0 run over cached ``pages``."""
+    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
+    from basic_common_crawl_pipeline_spark.plans.wave import (
+        empty_seen,
+        frontier_from_seeds,
+        run_wave,
+    )
+
+    out = run_wave(
+        spark, frontier_from_seeds(seeds), empty_seen(spark), pages, robots,
+        wave=0, config=CrawlConfig(wave_seconds=16.0),
+    )
+    assert out.metrics["extracted"] > 0
+    input_cache = pages._jdf.queryExecution().optimizedPlan()  # InMemoryRelation
+    shuffles = _shuffles_outside(
+        out.results._jdf.queryExecution().executedPlan(), input_cache
+    )
+    for df in out.cached:
+        df.unpersist()
+    assert shuffles  # the frontier side does exchange
+    return [
+        s for s in shuffles
+        if "html" in [a.name() for a in _seq(s.output())]
+    ]
+
+
 def test_wave_never_shuffles_html_over_url_partitioned_pages(spark, tmp_path):
     """Over pages cached hash-partitioned by url (as pages_from_documents
     and the benchmark's generator build them, and as run_crawl partitions
@@ -229,15 +256,9 @@ def test_wave_never_shuffles_html_over_url_partitioned_pages(spark, tmp_path):
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
-    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
     from basic_common_crawl_pipeline_spark.plans.crawl import (
         url_partitioned,
         url_partitioned_pages,
-    )
-    from basic_common_crawl_pipeline_spark.plans.wave import (
-        empty_seen,
-        frontier_from_seeds,
-        run_wave,
     )
 
     pages, seeds, robots = pages_from_documents(spark, SF)
@@ -251,31 +272,51 @@ def test_wave_never_shuffles_html_over_url_partitioned_pages(spark, tmp_path):
     prepared = url_partitioned_pages(plain)
     assert url_partitioned(prepared)
 
-    def html_shuffles(p):
-        out = run_wave(
-            spark, frontier_from_seeds(seeds), empty_seen(spark), p, robots,
-            wave=0, config=CrawlConfig(wave_seconds=16.0),
-        )
-        assert out.metrics["extracted"] > 0
-        input_cache = p._jdf.queryExecution().optimizedPlan()  # InMemoryRelation
-        shuffles = _shuffles_outside(
-            out.results._jdf.queryExecution().executedPlan(), input_cache
-        )
-        for df in out.cached:
-            df.unpersist()
-        assert shuffles  # the frontier side does exchange
-        return [
-            s for s in shuffles
-            if "html" in [a.name() for a in _seq(s.output())]
-        ]
-
     try:
-        assert html_shuffles(pages) == []
-        assert html_shuffles(prepared) == []
-        assert html_shuffles(scattered)
+        assert _wave_html_shuffles(spark, pages, seeds, robots) == []
+        assert _wave_html_shuffles(spark, prepared, seeds, robots) == []
+        assert _wave_html_shuffles(spark, scattered, seeds, robots)
     finally:
         scattered.unpersist()
         prepared.unpersist()
+
+
+def test_url_partitioned_pages_cuts_in_plan_rows(spark):
+    """Pages built with ``createDataFrame`` over pandas, hash-partitioned
+    by url and cached (the benchmark generator's shape) carry a
+    LocalRelation leaf that every wave analysis would walk and hash.
+    url_partitioned_pages copies them from a lineage cut: no LocalRelation
+    leaf remains, the copy is still url-partitioned, and a wave over it
+    still shuffles no html."""
+    from basic_common_crawl_pipeline_spark.plans.catalog import (
+        pages_from_documents,
+    )
+    from basic_common_crawl_pipeline_spark.plans.crawl import (
+        release_pages_copy,
+        url_partitioned,
+        url_partitioned_pages,
+    )
+
+    def leaf_classes(df):
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+
+    docs_pages, seeds, robots = pages_from_documents(spark, SF)
+    pages = spark.createDataFrame(
+        docs_pages.toPandas(), docs_pages.schema
+    ).repartition(8, "url").persist()
+    pages.count()
+    assert "LocalRelation" in leaf_classes(pages)
+    assert url_partitioned(pages)
+    prepared = url_partitioned_pages(pages)
+    try:
+        assert prepared is not pages
+        assert "LocalRelation" not in leaf_classes(prepared)
+        assert url_partitioned(prepared)
+        assert _wave_html_shuffles(spark, prepared, seeds, robots) == []
+    finally:
+        release_pages_copy(prepared, pages)
+        pages.unpersist()
 
 
 def test_ann_sig_layout_partition_pruning(spark, tmp_path):
@@ -812,3 +853,26 @@ def test_wave_fetch_join_over_bucketed_pages_drops_exchanges(spark, tmp_path):
         assert bk_rows == plain_rows and len(bk_rows) > 0
     finally:
         drop_bucketed_table(spark, "bk_wave_pages")
+
+
+def test_spread_input_probe_reads_plan_nodes(spark, tmp_path):
+    """spread_input skips a frame whose lineage already holds a
+    repartition node, read from the analyzed plan's node classes: a
+    column or alias merely named Repartition must not suppress the
+    spread, while a real repartition (or rebalance) still does."""
+    from pyspark.sql import functions as F
+
+    from basic_common_crawl_pipeline_spark.operators.spread import spread_input
+
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "one"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+
+    def spreads(df):
+        return spread_input(df) is not df
+
+    assert spreads(one)
+    assert spreads(one.withColumnRenamed("id", "Repartition"))
+    assert spreads(one.select(F.col("id").alias("RebalancePartitions")))
+    assert not spreads(one.repartition(2))
+    assert not spreads(one.repartition(2, "id").filter(F.col("id") > 3))
+    assert not spreads(one.hint("rebalance"))
