@@ -25,12 +25,8 @@ API.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 
 def check_pid_layout(parted: DataFrame, n_parts: int, seen_pids) -> None:
@@ -116,36 +112,54 @@ def global_seq_assign(
 ) -> DataFrame:
     """Phase 2: given ``{__pid: row_count}`` (from any counting job over
     ``sorted_df``), prefix-sum the offsets on the driver and add
-    ``seq_col`` in a narrow (partition-local) mapInPandas pass. Range
-    partitions are ascending in ``__pid``, so prefix-summing in pid order
-    yields the global rank."""
-    fields = [f for f in sorted_df.schema.fields if f.name != "__pid"]
-    names = [f.name for f in fields]
-    # StructType.add mutates in place — build a fresh copy for the output.
-    schema = StructType(fields + [StructField(seq_col, LongType())])
-    offsets: dict[int, int] = {}
+    ``seq_col`` in a narrow JVM projection: ``seq`` = the offset of the
+    row's ``__pid`` (a literal map) + the row's index in its partition
+    (``monotonically_increasing_id()`` minus the partition's high bits).
+    Range partitions are ascending in ``__pid``, so prefix-summing in pid
+    order yields the global rank.
+
+    The same expression raises (``raise_error``) when a row's physical
+    partition is not its ``__pid``, or its index reaches its partition's
+    count: a layout that changed between the count and this pass errors
+    instead of misnumbering. Being part of ``seq_col``'s own expression,
+    the guard survives column pruning whenever ``seq_col`` is read."""
+    first: dict[int, int] = {}
+    end: dict[int, int] = {}
     acc = start
     for pid in sorted(pid_counts):
-        offsets[pid] = acc
+        first[pid] = acc
         acc += pid_counts[pid]
+        end[pid] = acc
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Rows of one physical partition arrive across possibly several
-        # batches, in sorted order; number them consecutively.
-        local = 0
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            pid = int(batch["__pid"].iloc[0])
-            base = offsets[pid] + local
-            out = batch[names].copy()
-            out[seq_col] = range(base, base + len(batch))
-            local += len(batch)
-            yield out
+    def by_pid(table: dict[int, int]):
+        literal = F.create_map(
+            *[F.lit(x) for kv in table.items() for x in kv]
+        ).cast("map<int,bigint>")
+        return literal[F.col("__pid")]
 
-    # NB: mapInPandas preserves the per-partition sort because it is a
-    # narrow (partition-local) transformation.
-    return sorted_df.mapInPandas(assign, schema=schema)
+    pid = F.spark_partition_id()
+    names = [c for c in sorted_df.columns if c != "__pid"]
+    # the row index gets its own projection: monotonically_increasing_id
+    # is stateful, so it must be evaluated exactly once per row
+    indexed = sorted_df.withColumn(
+        "__idx",
+        F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33),
+    )
+    seq = by_pid(first) + F.col("__idx")
+    ok = (pid == F.col("__pid")) & (seq < by_pid(end))
+    seq = F.when(ok, seq).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("global_seq_assign: the sorted layout changed between "
+                      "the count and the numbering (row of __pid "),
+                F.col("__pid").cast("string"),
+                F.lit(" in partition "),
+                pid.cast("string"),
+                F.lit(")"),
+            )
+        )
+    )
+    return indexed.select(*names, seq.alias(seq_col))
 
 
 def with_global_seq(

@@ -186,6 +186,36 @@ def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     )
 
 
+# the kernel verify paths collect the vectors to the driver and broadcast
+# them as a float64 matrix: at most this many bytes (rows x dim x 8 B)
+BROADCAST_VECTOR_BYTES = 64 << 20
+
+
+def _vector_shape(vecs: DataFrame) -> tuple[int, int]:
+    """(rows, widest vector) of ``vecs``' ``v`` column, in one job —
+    which also fills ``vecs``' cache."""
+    row = vecs.select(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.max(F.size("v")), F.lit(0)).alias("dim"),
+    ).first()
+    return row["n"], row["dim"]
+
+
+def _collect_matrix(vecs: DataFrame, *extra: str) -> tuple:
+    """(ids, float64 matrix, *extra columns) of an (id, v, ...) frame,
+    id-sorted, collected through Arrow (``toPandas``), not as Rows."""
+    import numpy as np
+
+    pdf = vecs.select("id", "v", *extra).toPandas().sort_values("id")
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+    mat = (
+        np.stack(pdf["v"].to_numpy()).astype(np.float64)
+        if len(pdf)
+        else np.zeros((0, 1), dtype=np.float64)
+    )
+    return (ids, mat, *(pdf[c].to_numpy(dtype=np.float64) for c in extra))
+
+
 def _np_norms(mat) -> "object":
     """Vector norms over a (n, dim) float64 matrix with the EXACT
     left-to-right per-dimension accumulation of ``_norm``'s JVM fold
@@ -244,7 +274,7 @@ def neardup_pairs(
     rows_per_band: int = 2,
     cell_cap: int = 100_000,
     cache: list | None = None,
-    broadcast_vectors_max: int = 1_000_000,
+    broadcast_max_bytes: int = BROADCAST_VECTOR_BYTES,
 ) -> DataFrame:
     """Embedding near-duplicates via banded random-hyperplane LSH:
     signature → band equi-join (cells over ``cell_cap`` rows dropped —
@@ -306,8 +336,8 @@ def neardup_pairs(
     # exchanges carry a 64-float vector per pair side (measured 193 MB
     # for ~350k candidates at sf0.1), and the per-pair interpreted
     # zip_with fold costs ~40 µs (higher-order functions get no codegen).
-    # When the vector table is bounded (``broadcast_vectors_max``,
-    # counted from the ALREADY-persisted sig frame), ship only the
+    # When the vector matrix is bounded (``broadcast_max_bytes`` of
+    # float64, counted over the persisted ``vn``), ship only the
     # (a, b) id pairs (explicit width — AQE byte-coalescing otherwise
     # ran the CPU-bound verify on 8 of 32 cores) and compute the cosine
     # in an Arrow-vectorized batch kernel against a broadcast matrix:
@@ -322,19 +352,10 @@ def neardup_pairs(
     width = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    n_vecs = sigs.count()  # materializes the persisted sigs eagerly
-    if n_vecs <= broadcast_vectors_max:
-        import numpy as np
-
-        rows = vn.collect()  # bounded: ≤ broadcast_vectors_max rows
-        rows.sort(key=lambda r: r["id"])
-        dim = len(rows[0]["v"]) if rows else 1
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        mat = np.array(
-            [list(r["v"]) for r in rows], dtype=np.float64
-        ).reshape(len(rows), dim)
+    n_vecs, dim = _vector_shape(vn)
+    if n_vecs * dim * 8 <= broadcast_max_bytes:
         # norms are the JVM-fold values straight from vn, not recomputed
-        norms = np.array([r["n"] for r in rows], dtype=np.float64)
+        ids, mat, norms = _collect_matrix(vn, "n")
         pair_cos = _pair_cos_kernel(df.sparkSession, ids, mat, norms)
         scored = pairs.repartition(width).select(
             "a", "b", pair_cos("a", "b").alias("cos")
@@ -718,7 +739,7 @@ def semantic_dedup(
     vec_col: str = "embedding",
     cell_cap: int = 100_000,
     cache: list | None = None,
-    broadcast_vectors_max: int = 1_000_000,
+    broadcast_max_bytes: int = BROADCAST_VECTOR_BYTES,
     kernel_min_vectors: int = 10_000,
 ) -> DataFrame:
     """Cluster-then-prune semantic deduplication (the SemDeDup shape,
@@ -764,20 +785,13 @@ def semantic_dedup(
     # Arrow setup outweighs the saved folds (measured at sf0.1/2000
     # vecs: 1.12 → 1.60 s with the kernel; at sf1.0/20000 vecs the
     # kernel wins 6.7 → 4.0 s) — small inputs keep the JVM fold, as
-    # does anything past ``broadcast_vectors_max`` (the shape below:
-    # norms as COLUMNS before the join — a norm inside the post-join
-    # filter would re-fold per PAIR, measured 2.5×).
-    n_vecs = assigned.count()  # materializes the persisted assignment
-    if kernel_min_vectors < n_vecs <= broadcast_vectors_max:
-        import numpy as np
-
-        rows = assigned.select("id", "v").collect()  # bounded
-        rows.sort(key=lambda r: r["id"])
-        dim = len(rows[0]["v"]) if rows else 1
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        mat = np.array(
-            [list(r["v"]) for r in rows], dtype=np.float64
-        ).reshape(len(rows), dim)
+    # does anything past ``broadcast_max_bytes`` of float64 matrix (the
+    # shape below: norms as COLUMNS before the join — a norm inside the
+    # post-join filter would re-fold per PAIR, measured 2.5×).
+    n_vecs, dim = _vector_shape(assigned)  # fills the assignment cache
+    fits = n_vecs * dim * 8 <= broadcast_max_bytes
+    if kernel_min_vectors < n_vecs and fits:
+        ids, mat = _collect_matrix(assigned)
         pair_cos = _pair_cos_kernel(
             df.sparkSession, ids, mat, _np_norms(mat)
         )

@@ -60,9 +60,14 @@ def metrics_table(spark: SparkSession, metrics: list[dict]) -> DataFrame:
     'endpoint' as a snapshot table, not just manifest JSON — the Spark
     analog of the reference's Prometheus counters,
     rust/src/tracing_and_metrics.rs:5-20)."""
+    import pyarrow as pa
+
+    # through Arrow: a LocalRelation, written by every commit without a
+    # Python task (a list-built frame is a PythonRDD — one Python stage
+    # per commit). A missing key stays null.
     cols = [c.split()[0] for c in _METRICS_SCHEMA.split(", ")]
-    rows = [tuple(m.get(c) for c in cols) for m in metrics]
-    return spark.createDataFrame(rows, _METRICS_SCHEMA)
+    table = pa.table({c: [m.get(c) for m in metrics] for c in cols})
+    return spark.createDataFrame(table, _METRICS_SCHEMA)
 
 
 def metrics_prometheus_text(metrics: list[dict], prefix: str = "crawl") -> str:

@@ -175,7 +175,15 @@ SMALL_WAVE_ROWS = 100_000
 
 
 def empty_seen(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "canon_url string")
+    """The seen set of a fresh crawl, as a relation Catalyst can prove
+    empty (an empty ``LocalRelation`` once optimized): every anti-join
+    and union against it is deleted at planning time, and it runs no
+    Python task. (A list-built ``createDataFrame([])`` would be a
+    ``PythonRDD`` over ``defaultParallelism`` partitions: a Python stage
+    in each seen exchange that reads it.)"""
+    return spark.range(1).select(
+        F.lit(None).cast("string").alias("canon_url")
+    ).limit(0)
 
 
 @dataclass

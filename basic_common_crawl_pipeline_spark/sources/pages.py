@@ -185,15 +185,19 @@ def corpus_to_spark(spark, corpus: SynthCorpus):
         [tuple(p[f.name] for f in pages_schema.fields) for p in corpus.pages],
         pages_schema,
     )
-    seeds = spark.createDataFrame(
-        [tuple(s[f.name] for f in seeds_schema.fields) for s in corpus.seeds],
-        seeds_schema,
-    )
-    robots = spark.createDataFrame(
-        [tuple(r[f.name] for f in robots_schema.fields) for r in corpus.robots],
-        robots_schema,
-    )
+    seeds = _arrow_frame(spark, corpus.seeds, seeds_schema)
+    robots = _arrow_frame(spark, corpus.robots, robots_schema)
     return pages, seeds, robots
+
+
+def _arrow_frame(spark, rows: list[dict], schema):
+    """``rows`` as a DataFrame built through Arrow: a ``LocalRelation``,
+    read without a Python task (a list-built frame is a ``PythonRDD``,
+    one Python stage wherever it is scanned)."""
+    import pyarrow as pa
+
+    table = pa.table({f.name: [r[f.name] for r in rows] for f in schema.fields})
+    return spark.createDataFrame(table, schema)
 
 
 def latest_capture(

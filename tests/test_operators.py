@@ -23,16 +23,70 @@ from basic_common_crawl_pipeline_spark.operators.similarity import cosine_topk
 
 
 def test_global_seq_equals_window_rank(spark):
-    df = spark.range(0, 1000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
+    """with_global_seq equals the window rank: on AQE's coalesced layout,
+    over several range partitions (coalescing off), from a start other
+    than 1, and on an empty input."""
+    df = spark.range(0, 4000).select(
+        (F.col("id") % 11).alias("k"), (F.col("id") * 7919 % 4000).alias("v")
+    )
+    want = sorted(
+        (r.k, r.v, r.seq)
+        for r in df.withColumn(
+            "seq", F.row_number().over(Window.orderBy("k", "v"))
+        ).collect()
     )
     got = with_global_seq(df, ["k", "v"]).collect()
-    want = df.withColumn(
-        "seq", F.row_number().over(Window.orderBy("k", "v"))
-    ).collect()
-    assert sorted((r.k, r.v, r.seq) for r in got) == sorted(
-        (r.k, r.v, r.seq) for r in want
+    assert sorted((r.k, r.v, r.seq) for r in got) == want
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    cache: list = []
+    try:
+        got, total = with_global_seq(
+            df, ["k", "v"], start=100, return_total=True, cache_sorted=cache
+        )
+        rows = got.collect()
+        n_parts = cache[0].select("__pid").distinct().count()
+        empty, empty_total = with_global_seq(
+            df.filter(F.col("k") < 0), ["k", "v"], return_total=True
+        )
+        assert empty.collect() == [] and empty_total == 0
+    finally:
+        spark.conf.set(key, old)
+        for c in cache:
+            c.unpersist()
+    assert n_parts > 1 and total == 4000
+    assert sorted((r.k, r.v, r.seq - 99) for r in rows) == want
+
+
+def test_global_seq_assign_skips_a_partition_with_zero_rows(spark):
+    """A sorted layout whose middle partition holds no rows: the counts
+    omit it, and the numbering runs on across it without a gap."""
+    from basic_common_crawl_pipeline_spark.operators.ordering import (
+        global_seq_assign,
     )
+
+    # four ascending range splits of 25 ids; the third is filtered empty
+    parted = (
+        spark.range(0, 100, numPartitions=4)
+        .filter((F.col("id") < 50) | (F.col("id") >= 75))
+        .withColumn("__pid", F.spark_partition_id())
+        .persist()
+    )
+    try:
+        counts = {
+            r["__pid"]: r["count"]
+            for r in parted.groupBy("__pid").count().collect()
+        }
+        assert counts == {0: 25, 1: 25, 3: 25}
+        got = global_seq_assign(parted, counts, start=1).collect()
+    finally:
+        parted.unpersist()
+    ids = sorted(r.id for r in got)
+    assert sorted((r.id, r.seq) for r in got) == [
+        (i, n + 1) for n, i in enumerate(ids)
+    ]
 
 
 def test_politeness_topk_equals_window_topk(spark):
@@ -1528,7 +1582,7 @@ def test_neardup_pairs_shuffle_path_equals_broadcast_path(spark):
     c2: list = []
     a = similarity.neardup_pairs(emb, threshold=0.35, cache=c1)
     b = similarity.neardup_pairs(
-        emb, threshold=0.35, cache=c2, broadcast_vectors_max=0
+        emb, threshold=0.35, cache=c2, broadcast_max_bytes=0
     )
     got = sorted((r["a"], r["b"], r["cos"]) for r in a.collect())
     want = sorted((r["a"], r["b"], r["cos"]) for r in b.collect())

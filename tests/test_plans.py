@@ -194,17 +194,22 @@ def _seq(scala_seq) -> list:
     return [scala_seq.apply(i) for i in range(scala_seq.size())]
 
 
-def _shuffles_outside(plan, input_cache) -> list:
-    """Every ShuffleExchangeExec of an executed plan, found by walking node
-    classes through py4j: into AQE plans, query stages, reused exchanges
-    and the cached plans of InMemoryTableScans — except ``input_cache``
-    (an InMemoryRelation), whose own build exchanges are not the plan's."""
+def _leaf_classes(df) -> list[str]:
+    """Class names of the leaves of ``df``'s analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+def _nodes_outside(plan, input_cache=None) -> list:
+    """Every node of an executed plan, found by walking node classes
+    through py4j: into AQE plans, query stages, reused exchanges and the
+    cached plans of InMemoryTableScans — except ``input_cache`` (an
+    InMemoryRelation), whose own build nodes are not the plan's."""
     found, stack = [], [plan]
     while stack:
         node = stack.pop()
+        found.append(node)
         name = node.getClass().getSimpleName()
-        if name == "ShuffleExchangeExec":
-            found.append(node)
         if name == "AdaptiveSparkPlanExec":
             stack.append(node.executedPlan())
         elif name.endswith("QueryStageExec"):
@@ -212,10 +217,52 @@ def _shuffles_outside(plan, input_cache) -> list:
         elif name == "ReusedExchangeExec":
             stack.append(node.child())
         elif name == "InMemoryTableScanExec":
-            if not node.relation().cacheBuilder().equals(input_cache.cacheBuilder()):
+            if input_cache is None or not node.relation().cacheBuilder().equals(
+                input_cache.cacheBuilder()
+            ):
                 stack.append(node.relation().cachedPlan())
         stack.extend(_seq(node.children()))
     return found
+
+
+def _shuffles_outside(plan, input_cache) -> list:
+    """The ShuffleExchangeExec nodes of ``_nodes_outside``."""
+    return [
+        n for n in _nodes_outside(plan, input_cache)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+
+
+def _python_rdd_in_lineage(rdd) -> bool:
+    """Whether an RDD's lineage holds a ``PythonRDD`` (rows produced by a
+    Python worker, e.g. a list-built ``createDataFrame``)."""
+    seen, stack = set(), [rdd]
+    while stack:
+        r = stack.pop()
+        if r.id() in seen:
+            continue
+        seen.add(r.id())
+        if r.getClass().getSimpleName() == "PythonRDD":
+            return True
+        stack.extend(dep.rdd() for dep in _seq(r.dependencies()))
+    return False
+
+
+def _python_nodes(plan, input_cache=None) -> list[str]:
+    """Class names of the nodes in ``_nodes_outside`` that run a Python
+    worker: the pandas/Arrow UDF operators, and scans of an RDD whose
+    lineage holds a PythonRDD."""
+    out = []
+    for node in _nodes_outside(plan, input_cache):
+        name = node.getClass().getSimpleName()
+        if (
+            name in ("MapInPandasExec", "PythonMapInArrowExec")
+            or name.endswith("EvalPythonExec")
+            or name.startswith("FlatMapGroupsInPandas")
+            or (name == "RDDScanExec" and _python_rdd_in_lineage(node.rdd()))
+        ):
+            out.append(name)
+    return out
 
 
 def _wave_html_shuffles(spark, pages, seeds, robots) -> list:
@@ -297,21 +344,17 @@ def test_url_partitioned_pages_cuts_in_plan_rows(spark):
         url_partitioned_pages,
     )
 
-    def leaf_classes(df):
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        return {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
-
     docs_pages, seeds, robots = pages_from_documents(spark, SF)
     pages = spark.createDataFrame(
         docs_pages.toPandas(), docs_pages.schema
     ).repartition(8, "url").persist()
     pages.count()
-    assert "LocalRelation" in leaf_classes(pages)
+    assert "LocalRelation" in _leaf_classes(pages)
     assert url_partitioned(pages)
     prepared = url_partitioned_pages(pages)
     try:
         assert prepared is not pages
-        assert "LocalRelation" not in leaf_classes(prepared)
+        assert "LocalRelation" not in _leaf_classes(prepared)
         assert url_partitioned(prepared)
         assert _wave_html_shuffles(spark, prepared, seeds, robots) == []
     finally:
@@ -876,3 +919,109 @@ def test_spread_input_probe_reads_plan_nodes(spark, tmp_path):
     assert not spreads(one.repartition(2))
     assert not spreads(one.repartition(2, "id").filter(F.col("id") > 3))
     assert not spreads(one.hint("rebalance"))
+
+
+def _logical_classes(plan) -> list[str]:
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node.getClass().getSimpleName())
+        stack.extend(_seq(node.children()))
+    return out
+
+
+def test_empty_seen_is_proven_empty_at_planning(spark):
+    """empty_seen optimizes to an empty LocalRelation (no Python task),
+    and an anti-join against it is deleted: no Join node remains."""
+    from basic_common_crawl_pipeline_spark.plans.wave import empty_seen
+
+    opt = empty_seen(spark)._jdf.queryExecution().optimizedPlan()
+    assert opt.getClass().getSimpleName() == "LocalRelation"
+    assert opt.data().isEmpty()
+    frontier = spark.range(20).select(F.col("id").cast("string").alias("canon_url"))
+    anti = frontier.join(empty_seen(spark), "canon_url", "left_anti")
+    classes = _logical_classes(anti._jdf.queryExecution().optimizedPlan())
+    assert "Join" not in classes, classes
+    assert anti.count() == 20
+
+
+def test_metrics_table_is_a_local_relation(spark):
+    """metrics_table is built through Arrow: its leaf is a LocalRelation,
+    not a list-built (PythonRDD) LogicalRDD."""
+    from basic_common_crawl_pipeline_spark.plans.crawl import metrics_table
+
+    df = metrics_table(spark, [{"wave": 0, "selected": 3}, {"wave": 1}])
+    assert _leaf_classes(df) == ["LocalRelation"]
+
+
+def test_global_seq_assign_is_a_narrow_jvm_projection(spark):
+    """The numbering pass over the sorted cache runs no Python and no
+    exchange; a frame whose __pid is not its physical partition raises
+    instead of being misnumbered."""
+    from basic_common_crawl_pipeline_spark.operators.ordering import (
+        global_seq_assign,
+        global_seq_sorted,
+    )
+
+    df = spark.range(0, 3000).select((F.col("id") * 7919 % 3000).alias("k"))
+    cache: list = []
+    sorted_df = global_seq_sorted(df, ["k"], cache=cache)
+    counts = {
+        r["__pid"]: r["count"]
+        for r in sorted_df.groupBy("__pid").count().collect()
+    }
+    try:
+        out = global_seq_assign(sorted_df, counts, start=5)
+        assert all(r.seq == r.k + 5 for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan()
+        input_cache = sorted_df._jdf.queryExecution().optimizedPlan()
+        assert _python_nodes(plan, input_cache) == []
+        assert _shuffles_outside(plan, input_cache) == []
+        with pytest.raises(Exception, match="sorted layout changed"):
+            global_seq_assign(sorted_df.repartition(3), counts).collect()
+    finally:
+        for c in cache:
+            c.unpersist()
+
+
+def test_wave_runs_python_only_in_the_extract(spark):
+    """A wave-1 run_wave over seen = empty_seen ∪ wave 0's processed
+    leaf: across the executed plans of its results, crawl_order and
+    new_frontier (caches included), the only Python node is the
+    extract's MapInPandasExec — the seen set, the numbering and the
+    frontier run in the JVM."""
+    from basic_common_crawl_pipeline_spark.plans.catalog import (
+        pages_from_documents,
+    )
+    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
+    from basic_common_crawl_pipeline_spark.plans.wave import (
+        empty_seen,
+        frontier_from_seeds,
+        run_wave,
+    )
+
+    pages, seeds, robots = pages_from_documents(spark, SF)
+    config = CrawlConfig(wave_seconds=16.0)
+    w0 = run_wave(
+        spark, frontier_from_seeds(seeds), empty_seen(spark), pages, robots,
+        wave=0, config=config, seen_is_empty=True,
+    )
+    w1 = run_wave(
+        spark, w0.new_frontier, empty_seen(spark).unionByName(w0.processed),
+        pages, robots, wave=1, config=config,
+        next_seq=1 + w0.metrics["selected"],
+        frontier_count=w0.metrics["frontier_size"],
+    )
+    input_cache = pages._jdf.queryExecution().optimizedPlan()
+    try:
+        assert w1.metrics["extracted"] > 0
+        found = []
+        for df in (w1.results, w1.crawl_order, w1.new_frontier):
+            df.collect()  # settle the adaptive plans
+            found += _python_nodes(
+                df._jdf.queryExecution().executedPlan(), input_cache
+            )
+        assert found == ["MapInPandasExec"], found
+    finally:
+        for df in w0.cached + w1.cached:
+            df.unpersist()
