@@ -583,7 +583,6 @@ def span_dedup(
     text_col: str = "text",
     n: int = 5,
     id_scale: int = 1_000_000,
-    strategy: str = "grouped",
     cache: list | None = None,
 ) -> DataFrame:
     """Exact duplicate-SPAN removal — substring-level dedup in the
@@ -599,30 +598,24 @@ def span_dedup(
 
     Scale shape (10^10 docs): the gram table is built ONCE and keyed by
     a 60-bit BIGINT gram hash (8 B/gram, not a 32-char md5 string).
-    The default ``strategy="grouped"`` is the hot-gram-safe shape:
-    persist the gram table (one materialization — MEMORY_AND_DISK, so
-    at scale it spills exactly like a shuffle file would), mark firsts
-    with a map-side-combined ``groupBy(__h).agg(min, count)`` — partial
-    mins combine BELOW the exchange, so no task ever holds a whole gram
-    group even for a boilerplate gram repeated 10^9 times — then inner-
-    join only the ``count >= 2`` groups (the Zipf head; singletons
-    satisfy ``packed == first`` trivially and never needed marking)
-    back against the cached grams. Measured at sf0.1: 5.0 s vs the
-    window mark's 6.5 s AND skew-proof — the earlier "grouped is 1.8×
-    dearer" number was the UNCACHED variant that rebuilt the
-    (interpreted, higher-order-function) gram construction on both
-    sides of a full join. ``strategy="window"`` (``min(packed) over
-    (partition by hash)`` on the single gram build, no cache
-    materialization) remains the cache-free option for corpora KNOWN
-    gram-uniform; its hot gram is one window task. Only ``(doc,
-    position)`` pairs flow after the mark; the text itself never
-    shuffles until the final reassembly groupBy on the unique document
-    id, and per-document windows are bounded by document length, never
-    corpus skew. Pass ``cache`` to own the grouped path's internal
-    persist (the asof_join/pack_token_stream convention). ``id_scale``
-    packs (id, pos) into one BIGINT for the cross-engine-exact
-    first-occurrence min; ids must be non-negative and documents
-    shorter than ``id_scale`` tokens.
+    The first-occurrence mark is hot-gram-safe: persist the gram table
+    (one materialization — MEMORY_AND_DISK, so at scale it spills
+    exactly like a shuffle file would), mark firsts with a
+    map-side-combined ``groupBy(__h).agg(min, count)`` — partial mins
+    combine BELOW the exchange, so no task ever holds a whole gram group
+    even for a boilerplate gram repeated 10^9 times — then inner-join
+    only the ``count >= 2`` groups (the Zipf head; singletons satisfy
+    ``packed == first`` trivially and never needed marking) back against
+    the cached grams. Measured at sf0.1: 5.0 s vs 6.5 s for a
+    ``min(packed) over (partition by hash)`` window mark, whose hot gram
+    is one window task. Only ``(doc, position)`` pairs flow after the
+    mark; the text itself never shuffles until the final reassembly
+    groupBy on the unique document id, and per-document windows are
+    bounded by document length, never corpus skew. Pass ``cache`` to own
+    the gram table's persist (the asof_join/pack_token_stream
+    convention). ``id_scale`` packs (id, pos) into one BIGINT for the
+    cross-engine-exact first-occurrence min; ids must be non-negative
+    and documents shorter than ``id_scale`` tokens.
     """
     from pyspark.sql import Window
 
@@ -639,23 +632,16 @@ def span_dedup(
         F.posexplode(word_ngrams(text_col, n)).alias("__pos", "__gram"),
     ).select(id_col, "__pos", _hash64_expr(F.col("__gram")).alias("__h"))
     packed = F.col(id_col).cast("long") * id_scale + F.col("__pos")
-    if strategy == "window":
-        marked = grams.withColumn(
-            "__first", F.min(packed).over(Window.partitionBy("__h"))
-        )
-    elif strategy == "grouped":
-        grams = grams.persist()
-        if cache is not None:
-            cache.append(grams)
-        firsts = (
-            grams.groupBy("__h")
-            .agg(F.min(packed).alias("__first"), F.count("*").alias("__c"))
-            .filter(F.col("__c") >= 2)
-            .drop("__c")
-        )
-        marked = grams.join(firsts, "__h")
-    else:
-        raise ValueError(f"unknown span_dedup strategy: {strategy!r}")
+    grams = grams.persist()
+    if cache is not None:
+        cache.append(grams)
+    firsts = (
+        grams.groupBy("__h")
+        .agg(F.min(packed).alias("__first"), F.count("*").alias("__c"))
+        .filter(F.col("__c") >= 2)
+        .drop("__c")
+    )
+    marked = grams.join(firsts, "__h")
     dupw = marked.filter(packed != F.col("__first")).select(id_col, "__pos")
     w = Window.partitionBy(id_col).orderBy("__pos")
     isl = dupw.withColumn(

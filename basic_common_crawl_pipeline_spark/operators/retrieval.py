@@ -116,9 +116,8 @@ def write_inverted_index(
             F.count("*").cast("long").alias("n_docs"),
             F.sum("dl").cast("long").alias("sum_dl"),
         )
-        # bucket geometry rides in the meta row (the snapshot store's
-        # bloom_params discipline): a probe hashing with a different B
-        # would silently open the wrong partitions
+        # bucket geometry rides in the meta row: a probe hashing with a
+        # different B would silently open the wrong partitions
         .withColumn("n_buckets", F.lit(int(num_buckets)))
         .write.mode("overwrite")
         .parquet(path + "/meta")

@@ -4439,9 +4439,8 @@ _RUN_LAST = [
     # pins the Arrow row-expansion contract.
     "multimodal_resize",
     # three more r2+r3-double-greens demoted for the round-4 BPE pair +
-    # BM25: j2's seen anti-join semantics are pinned by the bloom pytest
-    # suite AND the crawl e2e equality tests (j1 keeps the join family
-    # in-gate); b4's salted top-k is pytest-pinned (salted == unsalted)
+    # BM25: j2's seen anti-join semantics are pinned by the crawl e2e
+    # equality tests (j1 keeps the join family in-gate); b4's salted top-k is pytest-pinned (salted == unsalted)
     # and exercised end-to-end by crawl_metrics/crawl_wave_flagship
     # in-gate; stream_stateful_user_totals has its own checkpoint-resume
     # pytest and the stream family keeps four entries in-gate

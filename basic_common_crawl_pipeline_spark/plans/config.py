@@ -3,7 +3,12 @@
 The wave semantics (one frontier expansion) are defined ONCE here so both
 implementations agree by specification:
 
-1. candidates     = frontier ∖ seen
+1. candidates     = frontier. Frontier ∩ seen = ∅ always holds, by
+                    step 9: the seed frontier meets an empty seen set,
+                    and each later frontier is built disjoint from the
+                    seen set it is paired with (new links minus seen',
+                    plus deferred candidates, which were neither seen
+                    nor processed). Seen membership is tested only there.
 2. robots gate    : host policy from the robots table (default crawl_delay
                     DEFAULT_CRAWL_DELAY, empty disallow); a candidate whose
                     URL *path* starts with any disallow prefix is dropped
@@ -52,13 +57,6 @@ class CrawlConfig:
     language: str = LANGUAGE
     max_waves: int = 8
     salt_partitions: int = 8  # politeness top-k salting fan-out (Spark only)
-    # partitioned-Bloom seen-set prefilter (operators/seen.py). The bloom
-    # accelerates the exact anti-join (its probe side shrinks to
-    # bloom-positive candidates); semantics stay byte-exact.
-    use_bloom: bool = False
-    bloom_partitions: int = 16
-    bloom_bits: int = 1 << 20
-    bloom_k: int = 7
     # check (once, at run_crawl start) that pages is unique per url — the
     # wave joins assume one capture per URL (see run_crawl docstring)
     validate_pages_unique: bool = False

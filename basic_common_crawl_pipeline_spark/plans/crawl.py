@@ -27,24 +27,7 @@ class CrawlState:
     next_seq: int
     frontier: DataFrame
     seen: DataFrame
-    seen_bloom: DataFrame | None = None
     metrics: list[dict] = field(default_factory=list)
-
-
-def _bloom_from_store(spark, store, bloom, manifest):
-    """Committed bloom blobs — but ONLY when the committed geometry
-    (partitions, m_bits, k) matches the configured one. A geometry change
-    would reinterpret the blobs with the wrong bit positions → false
-    NEGATIVES → already-seen URLs re-crawled. On mismatch (or when the
-    crawl ran bloom-less before) rebuild from the exact seen table."""
-    committed = (manifest.get("extra") or {}).get("bloom_params")
-    params = {"partitions": bloom.partitions, "m_bits": bloom.m_bits, "k": bloom.k}
-    if committed == params:
-        try:
-            return store.read_table(spark, "seen_bloom")
-        except FileNotFoundError:
-            pass
-    return bloom.add(bloom.empty(spark), store.read_table(spark, "seen"))
 
 
 _METRICS_SCHEMA = (
@@ -302,16 +285,6 @@ def run_crawl(
                 "pages table has duplicate urls; dedupe at ingest "
                 "(e.g. keep max warc_ts per url) before run_crawl"
             )
-    bloom = None
-    if config.use_bloom:
-        from ..operators.seen import BloomSeen
-
-        bloom = BloomSeen(
-            partitions=config.bloom_partitions,
-            m_bits=config.bloom_bits,
-            k=config.bloom_k,
-        )
-
     fresh_start = not (
         resume and store is not None and store.current_snapshot() is not None
     )
@@ -322,11 +295,6 @@ def run_crawl(
             next_seq=manifest["extra"]["next_seq"],
             frontier=store.read_table(spark, "frontier"),
             seen=store.read_table(spark, "seen"),
-            seen_bloom=(
-                _bloom_from_store(spark, store, bloom, manifest)
-                if bloom is not None
-                else None
-            ),
             metrics=manifest["extra"]["metrics"],
         )
     else:
@@ -352,7 +320,6 @@ def run_crawl(
             next_seq=1,
             frontier=initial_frontier.localCheckpoint(eager=False),
             seen=empty_seen(spark),
-            seen_bloom=bloom.empty(spark) if bloom is not None else None,
         )
 
     from concurrent.futures import ThreadPoolExecutor
@@ -393,12 +360,7 @@ def run_crawl(
                 wave=state.wave,
                 config=config,
                 next_seq=state.next_seq,
-                seen_bloom=state.seen_bloom,
-                bloom=bloom,
                 frontier_count=frontier_count,
-                # wave 0 of a fresh run: seen is the empty frame by
-                # construction — run_wave skips the identity anti-join
-                seen_is_empty=fresh_start and state.wave == 0,
             )
             state.metrics.append(out.metrics)
             next_seq = state.next_seq + out.metrics["selected"]
@@ -417,35 +379,18 @@ def run_crawl(
                 cached_df.unpersist()
             retiring = ()
 
-            # bloom update over a bounded-lineage base: once this run has
-            # committed, rebase on the committed blobs (lazy parquet read)
-            # instead of chaining plan-over-plan wave after wave
-            if bloom is not None:
-                base_bloom = (
-                    store.read_table(spark, "seen_bloom")
-                    if store is not None and committed_this_run
-                    else state.seen_bloom
-                )
-                new_bloom = bloom.add(base_bloom, out.processed)
-            else:
-                new_bloom = None
-
             if store is not None:
-                if new_bloom is not None:
-                    new_bloom = new_bloom.persist()
                 tables = {
                     "frontier": out.new_frontier,
                     # S7: metrics as a queryable snapshot table, not only
                     # manifest JSON
                     "metrics": metrics_table(spark, state.metrics),
                 }
-                if new_bloom is not None:
-                    tables["seen_bloom"] = new_bloom
                 # seen/crawl_order/results grow monotonically: commit only
                 # this wave's delta (Iceberg-append semantics) — a
                 # cumulative rewrite would cost O(total²) I/O over a long
                 # crawl. seen's delta is exactly `processed` (wave step 8:
-                # new_seen = seen ∪ processed, disjoint by construction).
+                # seen' = seen ∪ processed, disjoint by construction).
                 append_tables = {
                     "seen": out.processed,
                     "crawl_order": out.crawl_order,
@@ -458,13 +403,6 @@ def run_crawl(
                     # appended by the NEXT wave
                     "metrics": list(state.metrics),
                 }
-                if bloom is not None:
-                    # record the bloom geometry so resume detects mismatch
-                    extra["bloom_params"] = {
-                        "partitions": bloom.partitions,
-                        "m_bits": bloom.m_bits,
-                        "k": bloom.k,
-                    }
                 snap = state.wave + 1
                 compact_now = bool(
                     config.compact_every_n_waves
@@ -504,27 +442,19 @@ def run_crawl(
                     else state.seen
                 )
                 pending = committer.submit(_commit_and_maybe_compact)
-                retiring = out.cached + (
-                    (new_bloom,) if new_bloom is not None else ()
-                )
                 # next-wave state: depth-1 plans over committed parquet +
                 # this wave's checkpoint leaves — never reloaded eagerly
-                state.frontier = out.new_frontier
                 state.seen = base_seen.unionByName(out.processed)
-                state.seen_bloom = new_bloom
             else:
                 # no store → frontier/processed are already lazy
                 # localCheckpoint leaves (run_wave); collapse the seen
                 # union chain periodically so a long crawl's plan stays
-                # O(1) leaves, and cut the bloom chain every wave (cheap —
-                # the blob table is tiny). All lazy: zero extra jobs.
-                state.frontier = out.new_frontier
+                # O(1) leaves. All lazy: zero extra jobs.
                 state.seen = state.seen.unionByName(out.processed)
                 if state.wave % 8 == 7:
                     state.seen = state.seen.localCheckpoint(eager=False)
-                if new_bloom is not None:
-                    state.seen_bloom = new_bloom.localCheckpoint(eager=False)
-                retiring = out.cached
+            state.frontier = out.new_frontier
+            retiring = out.cached
             state.wave += 1
             state.next_seq = next_seq
         # the FINAL wave's checkpoint leaves have no next wave (and, with
@@ -556,11 +486,6 @@ def run_crawl(
         # hand back clean lineage-free handles rooted at the final commit
         state.frontier = store.read_table(spark, "frontier")
         state.seen = store.read_table(spark, "seen")
-        if bloom is not None:
-            try:
-                state.seen_bloom = store.read_table(spark, "seen_bloom")
-            except FileNotFoundError:
-                pass
     return state
 
 

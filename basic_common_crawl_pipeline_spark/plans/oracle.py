@@ -60,6 +60,10 @@ def run_oracle(
     for wave in range(config.max_waves):
         if not frontier:
             break
+        # the invariant the engine's step 1 relies on (plans/config.py)
+        assert frontier.keys().isdisjoint(result.seen), (
+            f"wave {wave}: frontier URLs already seen"
+        )
         candidates = [
             (url, prio) for url, prio in frontier.items() if url not in result.seen
         ]

@@ -191,7 +191,6 @@ class WaveOutput:
     crawl_order: DataFrame   # seq, wave, url, host, priority
     results: DataFrame       # wave, canon_url, host, priority, text
     new_frontier: DataFrame  # canon_url, host, surt, priority
-    new_seen: DataFrame      # canon_url
     processed: DataFrame     # canon_url — urls newly marked seen this wave
     metrics: dict
     # the wave's .persist()ed intermediates — the caller unpersists them
@@ -209,32 +208,20 @@ def run_wave(
     wave: int,
     config: CrawlConfig = CrawlConfig(),
     next_seq: int = 1,
-    seen_bloom: DataFrame | None = None,
-    bloom=None,
     frontier_count: int | None = None,
-    seen_is_empty: bool = False,
 ) -> WaveOutput:
-    # 1. candidates = frontier ∖ seen. With the partitioned bloom
-    #    (operators/seen.py): bloom-negative rows are *definitely* unseen
-    #    and skip the exact anti-join entirely; only bloom-positive rows
-    #    probe the (large) seen table — at 10^10 urls this shrinks the
-    #    anti-join's probe side to ~|actually-seen| + ε false positives
-    #    while keeping byte-exact semantics.
-    if seen_is_empty:
-        # r6: wave 0 of a fresh crawl — the caller KNOWS seen is empty,
-        # and an anti-join (or bloom probe) against the empty set is the
-        # identity; skipping it removes one shuffle/probe stage from the
-        # first wave (the frontier is already unique by construction)
-        cand = frontier
-    elif seen_bloom is not None and bloom is not None:
-        probed = bloom.contains(seen_bloom, frontier, "canon_url")
-        definitely_new = probed.filter(~F.col("bloom_hit")).drop("bloom_hit")
-        maybe_seen = probed.filter(F.col("bloom_hit")).drop("bloom_hit")
-        cand = definitely_new.unionByName(
-            maybe_seen.join(seen, "canon_url", "left_anti")
-        )
-    else:
-        cand = frontier.join(seen, "canon_url", "left_anti")
+    """Expand ``frontier`` by one wave (semantics: plans/config.py).
+
+    PRECONDITION: ``frontier`` and ``seen`` are disjoint. ``run_crawl``
+    guarantees it: wave 0 of a fresh run pairs the seed frontier with
+    ``empty_seen``; every later wave, and a resume (both tables read
+    from one committed snapshot), pairs the previous wave's
+    ``new_frontier`` with its seen set, and step 9 builds that frontier
+    disjoint from ``seen ∪ processed``. Direct callers pass
+    ``empty_seen`` or a previous wave's outputs the same way."""
+    # 1. candidates = frontier: frontier ∩ seen = ∅ by the precondition,
+    #    so the wave tests seen membership only at discovery (step 9)
+    cand = frontier
 
     # 2. robots gate — broadcast join on host (J3)
     policy = F.broadcast(
@@ -362,7 +349,7 @@ def run_wave(
 
     # 8. seen' = seen ∪ processed (everything but deferred)
     # candidates are unique by canon_url (frontier is grouped) and disjoint
-    # from seen (anti-joined in step 1), so the union needs NO distinct —
+    # from seen (the precondition), so the union needs NO distinct —
     # skipping it saves a full-seen-set shuffle every wave.
     # persist() here, localCheckpoint AFTER the wave's action (below):
     # a lazy localCheckpoint leaf materializes as its OWN SQL execution
@@ -491,7 +478,6 @@ def run_wave(
         crawl_order=crawl_order,
         results=results,
         new_frontier=frontier_leaf,
-        new_seen=seen.unionByName(processed_leaf),
         processed=processed_leaf,
         metrics=metrics,
         cached=(cand, ranked, extracted, processed, new_frontier, *seq_cache),

@@ -68,15 +68,22 @@ import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.types import BinaryType, IntegerType, StringType  # noqa: E402
 
-from ..operators.seen import _positions  # noqa: E402
-
 DEDUP_OUTPUT_SCHEMA = StructType([StructField("url", StringType())])
 # state per hash partition: a FIXED-size Kirsch-Mitzenmacher bitset
-# (identical positions scheme to operators/seen.py) + a packed sorted
-# uint64 digest array (8 bytes per inserted url)
+# + a packed sorted uint64 digest array (8 bytes per inserted url)
 DEDUP_STATE_SCHEMA = StructType(
     [StructField("bits", BinaryType()), StructField("digests", BinaryType())]
 )
+
+
+def _positions(h: np.ndarray, m_bits: int, k: int) -> np.ndarray:
+    """Kirsch-Mitzenmacher: k positions from one 64-bit hash (vectorized).
+    Returns array of shape (len(h), k)."""
+    u = h.astype(np.uint64)
+    h1 = (u >> np.uint64(32)).astype(np.int64)
+    h2 = (u & np.uint64(0xFFFFFFFF)).astype(np.int64) | 1  # odd → full cycle
+    i = np.arange(k, dtype=np.int64)
+    return (h1[:, None] + i[None, :] * h2[:, None]) % m_bits
 
 
 def _merge_sorted_digests(
@@ -167,11 +174,11 @@ def stateful_seen_dedup(
     m_bits: int = 1 << 20,
     k: int = 7,
 ) -> DataFrame:
-    """Streaming first-occurrence URL dedup: per-partition state is the
-    crawl's partitioned Bloom seen-set (operators/seen.py — same
-    Kirsch-Mitzenmacher positions, same ``pmod(xxhash64(url), P)``
-    keying), incremental across micro-batches, PLUS a packed sorted
-    uint64 digest array consulted only for bloom-positive urls.
+    """Streaming first-occurrence URL dedup: per-partition state is a
+    Bloom bitset (``_positions``: Kirsch-Mitzenmacher positions of the
+    url's xxhash64, partitions keyed by ``pmod(xxhash64(url), P)``),
+    incremental across micro-batches, PLUS a packed sorted uint64 digest
+    array consulted only for bloom-positive urls.
 
     Why the digest layer exists: an exact membership structure needs
     Ω(n) bits — a bloom alone would false-drop never-seen urls at its FP

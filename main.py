@@ -6,7 +6,7 @@
     spark-submit --py-files dist/pyfiles.zip main.py crawl \\
         --pages /path/pages.parquet --seeds /path/seeds.parquet \\
         --robots /path/robots.parquet --store /path/warehouse \\
-        --waves 8 [--resume] [--bloom]
+        --waves 8 [--resume]
 
     spark-submit --py-files dist/pyfiles.zip main.py demo \\
         --sf-dir /root/testdata/sf0.001 --store /tmp/warehouse
@@ -33,7 +33,6 @@ def main() -> None:
     crawl.add_argument("--waves", type=int, default=8)
     crawl.add_argument("--wave-seconds", type=float, default=60.0)
     crawl.add_argument("--resume", action="store_true")
-    crawl.add_argument("--bloom", action="store_true")
     crawl.add_argument(
         "--metrics-port", type=int, default=None,
         help="serve Prometheus text exposition at :PORT/metrics while the "
@@ -96,7 +95,6 @@ def main() -> None:
         config = CrawlConfig(
             wave_seconds=args.wave_seconds,
             max_waves=args.waves,
-            use_bloom=args.bloom,
         )
         resume = args.resume
     else:

@@ -90,6 +90,36 @@ def test_resume_from_snapshot(spark, corpus, oracle_result, tmp_path):
     assert state.wave == CONFIG.max_waves or not state.frontier.take(1)
 
 
+def test_every_snapshot_frontier_is_disjoint_from_seen(
+    spark, corpus, oracle_result, tmp_path
+):
+    """The invariant the wave's step 1 relies on (plans/config.py), read
+    back from the store: in every committed snapshot of a crawl that
+    compacts every 2 waves and is interrupted and resumed, no frontier
+    URL is in that snapshot's seen table."""
+    import dataclasses
+
+    pages, seeds, robots = corpus_to_spark(spark, corpus)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    cfg = dataclasses.replace(CONFIG, compact_every_n_waves=2)
+    run_crawl(
+        spark, pages, seeds, robots, dataclasses.replace(cfg, max_waves=3),
+        store=store,
+    )
+    run_crawl(spark, pages, seeds, robots, cfg, store=store, resume=True)
+    order, _, _ = collect_outputs(spark, store)
+    assert [(r["seq"], r["url"]) for r in order] == [
+        (r["seq"], r["url"]) for r in oracle_result.crawl_order
+    ]
+    last = store.current_snapshot()
+    assert last == CONFIG.max_waves
+    assert "compact-2" in store.read_manifest(2)["tables"]["seen"]["paths"][0]
+    for k in range(1, last + 1):
+        frontier = store.read_table(spark, "frontier", snapshot=k)
+        seen = store.read_table(spark, "seen", snapshot=k)
+        assert frontier.join(seen, "canon_url", "left_semi").count() == 0, k
+
+
 def test_crawl_over_in_plan_rows_matches_oracle_and_leaves_no_copy(
     spark, corpus, oracle_result, tmp_path
 ):

@@ -1458,15 +1458,16 @@ def test_session_window_streams_and_merges_across_microbatches(
 
 
 def test_span_dedup_grouped_strategy_equals_window(spark):
-    """The DEFAULT strategy is the hot-gram-safe grouped mark
-    (map-side-combined groupBy-min over the cached gram table + dup-only
-    join back — no task ever holds a whole gram group): output-equal to
-    the opt-in window mark on a boilerplate-heavy corpus where ONE
-    5-gram appears in half the docs, and the default physical plan
-    really is the safe shape: partial_min below the exchange, no window
-    over the gram hash (a boilerplate gram must never serialize through
-    a single window task)."""
+    """span_dedup's first-occurrence mark is the hot-gram-safe grouped
+    shape (map-side-combined groupBy-min over the cached gram table +
+    dup-only join back — no task ever holds a whole gram group): equal
+    to the pure-Python reference on a boilerplate-heavy corpus where ONE
+    5-gram appears in half the docs, and the physical plan really is the
+    safe shape: partial_min below the exchange, no window over the gram
+    hash (a boilerplate gram must never serialize through a single
+    window task)."""
     from basic_common_crawl_pipeline_spark.operators.dedup import span_dedup
+    from tests.test_span_dedup_property import _reference
 
     boiler = "all rights reserved contact us"
     rows = [
@@ -1476,11 +1477,9 @@ def test_span_dedup_grouped_strategy_equals_window(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    want = sorted(
-        map(tuple, span_dedup(df, n=5, strategy="window").collect())
-    )
+    want = sorted((i, *r) for i, r in _reference(rows, 5).items())
     cache: list = []
-    got_df = span_dedup(df, n=5, cache=cache)  # default path
+    got_df = span_dedup(df, n=5, cache=cache)
     assert sorted(map(tuple, got_df.collect())) == want
     for f in cache:
         f.unpersist()
@@ -1493,11 +1492,6 @@ def test_span_dedup_grouped_strategy_equals_window(spark):
     assert "partial_min" in plan
     first, _, rest = plan.partition("windowspecdefinition")
     assert "__h" not in rest.split(")")[0]  # no window keyed on the hash
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        span_dedup(df, strategy="bogus")
 
 
 def test_kmeans_int_matches_python_reference(spark):

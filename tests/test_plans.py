@@ -984,12 +984,10 @@ def test_global_seq_assign_is_a_narrow_jvm_projection(spark):
             c.unpersist()
 
 
-def test_wave_runs_python_only_in_the_extract(spark):
-    """A wave-1 run_wave over seen = empty_seen ∪ wave 0's processed
-    leaf: across the executed plans of its results, crawl_order and
-    new_frontier (caches included), the only Python node is the
-    extract's MapInPandasExec — the seen set, the numbering and the
-    frontier run in the JVM."""
+def _wave1(spark):
+    """(pages, w0, w1): wave 0 over ``empty_seen``, then wave 1 over
+    ``empty_seen`` ∪ wave 0's processed leaf — the run_crawl shape of a
+    crawl's second wave. The caller unpersists ``w0.cached + w1.cached``."""
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
@@ -1004,7 +1002,7 @@ def test_wave_runs_python_only_in_the_extract(spark):
     config = CrawlConfig(wave_seconds=16.0)
     w0 = run_wave(
         spark, frontier_from_seeds(seeds), empty_seen(spark), pages, robots,
-        wave=0, config=config, seen_is_empty=True,
+        wave=0, config=config,
     )
     w1 = run_wave(
         spark, w0.new_frontier, empty_seen(spark).unionByName(w0.processed),
@@ -1012,6 +1010,16 @@ def test_wave_runs_python_only_in_the_extract(spark):
         next_seq=1 + w0.metrics["selected"],
         frontier_count=w0.metrics["frontier_size"],
     )
+    return pages, w0, w1
+
+
+def test_wave_runs_python_only_in_the_extract(spark):
+    """A wave-1 run_wave over seen = empty_seen ∪ wave 0's processed
+    leaf: across the executed plans of its results, crawl_order and
+    new_frontier (caches included), the only Python node is the
+    extract's MapInPandasExec — the seen set, the numbering and the
+    frontier run in the JVM."""
+    pages, w0, w1 = _wave1(spark)
     input_cache = pages._jdf.queryExecution().optimizedPlan()
     try:
         assert w1.metrics["extracted"] > 0
@@ -1022,6 +1030,38 @@ def test_wave_runs_python_only_in_the_extract(spark):
                 df._jdf.queryExecution().executedPlan(), input_cache
             )
         assert found == ["MapInPandasExec"], found
+    finally:
+        for df in w0.cached + w1.cached:
+            df.unpersist()
+
+
+def _anti_joins(df, input_cache) -> int:
+    """LeftAnti join nodes in ``df``'s executed plan, caches included."""
+    return sum(
+        1 for n in _nodes_outside(
+            df._jdf.queryExecution().executedPlan(), input_cache
+        )
+        if n.getClass().getSimpleName().endswith("JoinExec")
+        and n.joinType().toString() == "LeftAnti"
+    )
+
+
+def test_wave_tests_seen_membership_only_at_discovery(spark):
+    """Frontier ∩ seen = ∅ (plans/config.py step 1), so a wave-1 run over
+    a non-empty seen set plans no frontier ∖ seen anti-join: the
+    executed plans of results and crawl_order, caches included, hold no
+    LeftAnti join, and the cache behind new_frontier's checkpoint leaf
+    holds exactly one — discovery's links ∖ (seen ∪ processed)."""
+    pages, w0, w1 = _wave1(spark)
+    input_cache = pages._jdf.queryExecution().optimizedPlan()
+    try:
+        assert w0.metrics["selected"] > 0 and w1.metrics["candidates"] > 0
+        assert _anti_joins(w1.results, input_cache) == 0
+        assert _anti_joins(w1.crawl_order, input_cache) == 0
+        (frontier_cache,) = [
+            c for c in w1.cached if c.columns == w1.new_frontier.columns
+        ]
+        assert _anti_joins(frontier_cache, input_cache) == 1
     finally:
         for df in w0.cached + w1.cached:
             df.unpersist()

@@ -1,5 +1,5 @@
-"""Hypothesis property test for operators/dedup.py::span_dedup — both
-strategies against a brute-force pure-Python reference on random small
+"""Hypothesis property test for operators/dedup.py::span_dedup against
+a brute-force pure-Python reference on random small
 corpora over a tiny token alphabet (so duplicate n-grams are dense and
 every branch — overlaps, island merges, full-dup docs, within-doc
 repeats — gets exercised).
@@ -76,20 +76,17 @@ def test_span_dedup_strategies_agree_with_reference(spark, texts):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     caches: list = []
     try:
-        for strategy in ("grouped", "window"):
-            got = {
-                r["doc_id"]: (
-                    r["n_tokens"],
-                    r["n_spans"],
-                    r["n_dup_tokens"],
-                    r["n_kept"],
-                    r["text_deduped"],
-                )
-                for r in span_dedup(
-                    df, n=N, strategy=strategy, cache=caches
-                ).collect()
-            }
-            assert got == want, f"strategy={strategy}"
+        got = {
+            r["doc_id"]: (
+                r["n_tokens"],
+                r["n_spans"],
+                r["n_dup_tokens"],
+                r["n_kept"],
+                r["text_deduped"],
+            )
+            for r in span_dedup(df, n=N, cache=caches).collect()
+        }
+        assert got == want
     finally:
         for c in caches:
             c.unpersist()
