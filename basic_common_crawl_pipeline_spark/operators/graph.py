@@ -52,9 +52,8 @@ def label_propagation_min(
     representative. Near-dup components are clique-like (diameter ≤ 2-3),
     so a small fixed round count is exact there — and a FIXED count is
     what makes the operator deterministic and oracle-checkable
-    (``label_propagation_fixpoint`` is the converge-until-no-change
-    production variant: same round body, driver loop on a Σlabel
-    fixpoint test).
+    (``connected_components_star`` is the converge-until-done
+    production path for graphs of unknown diameter).
 
     One shuffle join + one aggregation per round. Unlike ``pagerank_int``
     (whose plan grows linearly), each round references the label frame
@@ -106,92 +105,6 @@ def _lp_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation_fixpoint(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    nodes: DataFrame | None = None,
-    max_iterations: int = 64,
-    info: dict | None = None,
-    cache: list | None = None,
-) -> DataFrame:
-    """Converge-until-no-change connected components: the production
-    variant of ``label_propagation_min`` for graphs whose diameter is
-    unknown (same per-round body; a driver loop replaces the fixed round
-    count). Labels are node-monotone NON-INCREASING, so the frame is
-    converged exactly when Σ label stops changing — the termination
-    check is therefore ONE tiny aggregate per round (sum in
-    decimal(38,0): a 10^10-node graph with 64-bit ids overflows a
-    BIGINT sum), not a self-join changed-count. Each round: persist →
-    the sum aggregate fills the cache → wrap in a lazy localCheckpoint
-    (a zero-job block copy, per the CLAUDE.md cadence) → retire the
-    previous round's cache. Plan depth stays O(1) across any number of
-    rounds.
-
-    Round count is bounded by the largest component diameter (+1 to
-    observe the fixpoint); for path-shaped graphs at extreme scale the
-    log-round large-star/small-star rewrite is the refinement, but
-    near-dup cluster graphs — this operator's use here — are
-    clique-like with tiny diameters. ``max_iterations`` is a safety
-    bound: hitting it raises rather than silently returning
-    unconverged labels. Pass ``info={}`` to receive
-    ``info['rounds']``. The converged round's frame stays persisted
-    (the returned lazy checkpoint block-copies from it on first use) —
-    pass a list as ``cache`` to own unpersisting it, as with
-    operators/ordering.py; every earlier round's cache is retired
-    inside the loop, including on the non-convergence raise."""
-    endpoints = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-    )
-    if nodes is None:
-        nodes = endpoints.distinct()
-    else:
-        nodes = (
-            nodes.select(F.col(nodes.columns[0]).alias("node"))
-            .unionByName(endpoints)
-            .distinct()
-        )
-    und = edges.select(
-        F.col(src_col).alias("__x"), F.col(dst_col).alias("__y")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("__x"), F.col(src_col).alias("__y"))
-    ).persist()
-    labels = nodes.select("node", F.col("node").alias("label"))
-    prev_sum = None
-    prev_cache = None
-    converged = False
-    try:
-        for rounds in range(1, max_iterations + 1):
-            new_labels = _lp_round(und, labels).persist()
-            row = new_labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]
-            cur_sum = row["s"]
-            labels = new_labels.localCheckpoint(eager=False)
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = new_labels
-            if prev_sum is not None and cur_sum == prev_sum:
-                converged = True
-                if info is not None:
-                    info["rounds"] = rounds
-                if cache is not None:
-                    cache.append(new_labels)
-                return labels
-            prev_sum = cur_sum
-    finally:
-        und.unpersist()
-        if not converged and prev_cache is not None:
-            # non-convergence raise (or caller abort): the labels are
-            # discarded, so retire the last round's cache too
-            prev_cache.unpersist()
-    raise RuntimeError(
-        f"label propagation did not converge in {max_iterations} rounds "
-        "(component diameter exceeds the bound); raise max_iterations"
-    )
-
-
 def connected_components_star(
     edges: DataFrame,
     src_col: str = "src",
@@ -222,8 +135,8 @@ def connected_components_star(
     checksum — one tiny aggregate per round on the shrinking edge set
     (64-bit-collision-probability, i.e. negligibly short of exact);
     lineage truncates every ``checkpoint_every`` rounds from the hot
-    cache. Labels agree exactly with ``label_propagation_fixpoint``
-    (property-tested); ``nodes`` adds isolated vertices. Pass
+    cache. Labels are the component-min node ids (property-tested
+    against a union-find); ``nodes`` adds isolated vertices. Pass
     ``info={}`` for ``info['rounds']``; final round's cache retires via
     the ``cache`` list (else session LRU), like ordering.py."""
     endpoints = (

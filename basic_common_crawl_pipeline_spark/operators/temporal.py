@@ -153,7 +153,6 @@ def asof_join(
     right_order: str | None = None,
     suffix: str = "_asof",
     cache: list | None = None,
-    strategy: str = "two_phase",
 ) -> DataFrame:
     """Left as-of join: every ``left`` row, plus ``value_cols`` from the
     latest ``right`` row of the same ``on`` key with
@@ -162,10 +161,9 @@ def asof_join(
     make the pick total; defaults to the first value column. All carried
     values come from that ONE winning right row (a null in one of its
     value columns stays null — it is never backfilled from an older
-    row): the carry is a single packed struct under either strategy.
+    row): the carry is a single packed struct.
 
-    ``strategy="two_phase"`` (default, the scale-safe shape — module
-    docstring), ALL JVM:
+    The scale-safe two-phase shape (module docstring), ALL JVM:
 
     1. range-partition the tagged union on (key, ts, side, ord) and
        stamp ``__pid`` — a key now spans contiguous partitions, so no
@@ -179,28 +177,16 @@ def asof_join(
        the tiny carry table for rows before their partition's first
        in-partition right row.
 
-    ``strategy="keyed_window"``: the classic union + one shuffle +
-    ``Window.partitionBy(key)`` LOCF — a structurally simpler plan (no
-    summary action, one shuffle), but a single hot key serializes
-    through ONE window task. Measured (scripts/bench_asof_skew.py,
-    90%-one-key corpus, local[32]): the two-phase default is already
-    1.5× faster at 2.2M union rows and 2.5× at 4.4M — the keyed
-    window's wall time tracks the hot KEY's size while the two-phase
-    tracks rows/partitions. Prefer keyed_window only for known
-    low-skew, bounded-cardinality keys (e.g. calendar dates).
-
-    Everything stays in whole-stage codegen either way: no Arrow
-    crossing, so 64-bit integers and NULL-vs-NaN survive exactly.
-    ``two_phase`` runs one small summary action at call time and
-    persists the partitioned union (pass a list as ``cache`` to own
-    unpersisting it, as with operators/ordering.py)."""
+    Everything stays in whole-stage codegen: no Arrow crossing, so
+    64-bit integers and NULL-vs-NaN survive exactly. It runs one small
+    summary action at call time and persists the partitioned union
+    (pass a list as ``cache`` to own unpersisting it, as with
+    operators/ordering.py)."""
     if right_order is None:
         right_order = value_cols[0]
     spark = left.sparkSession
     left_cols = left.columns
     out_vals = [f"{c}{suffix}" for c in value_cols]
-    if strategy not in ("two_phase", "keyed_window"):
-        raise ValueError(f"unknown asof strategy {strategy!r}")
 
     r = right.select(
         F.col(on),
@@ -221,27 +207,6 @@ def asof_join(
         *[F.col(c) for c in left_cols if c != on],
     )
     un = r.unionByName(l)
-
-    if strategy == "keyed_window":
-        w = (
-            Window.partitionBy(on)
-            .orderBy(
-                F.col("__ts").asc(), F.col("__side").asc(),
-                F.col("__ord").asc(),
-            )
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        rpack = F.when(
-            F.col("__side") == 0,
-            F.struct(*[F.col(o).alias(o) for o in out_vals]),
-        )
-        carried = un.withColumn(
-            "__cp", F.last(rpack, ignorenulls=True).over(w)
-        )
-        return carried.filter(F.col("__side") == 1).select(
-            *[F.col(c) for c in left_cols],
-            *[F.col(f"__cp.{o}").alias(o) for o in out_vals],
-        )
 
     # EXPLICIT partition count: a bare repartitionByRange is subject to
     # AQE coalescing, and the coalesced layout can DIFFER between the

@@ -11,6 +11,7 @@ events documents embeddings.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 
 import pandas as pd  # noqa: F401 — needed to resolve pandas_udf type hints
@@ -27,6 +28,7 @@ from ..operators.spread import spread_input
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+BENCH: dict[str, Callable[[DataFrame], object]] = {}
 
 # DuckDB result types that a pandas/Arrow-materializing harness turns
 # into float64/decimal128 and hash-mismatches against Spark's integer
@@ -36,14 +38,47 @@ ORACLES: dict[str, str] = {}
 DRIVER_HOSTILE_ORACLE_TYPES = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 
-def register(name: str, oracle: str | None = None):
+def register(
+    name: str,
+    oracle: str | None = None,
+    bench: Callable[[DataFrame], object] | None = None,
+):
+    """Add a catalog entry. ``bench`` puts it in bench.py's suite: the
+    action that materializes the entry's DataFrame in a timed trial.
+    ``DataFrame.count`` suits plain entries; an entry whose work sits in
+    computed columns aggregates those columns instead, because a bare
+    count lets Catalyst prune the joins, windows and folds that compute
+    them."""
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if bench is not None:
+            BENCH[name] = bench
         return fn
 
     return deco
+
+
+# Persisted intermediates that an entry's lazy result still reads, so the
+# entry cannot retire them itself (the operators' ``cache`` convention,
+# with the entry's caller as owner). bench_trial releases them.
+_CALLER_CACHES: list[DataFrame] = []
+
+
+def bench_trial(spark: SparkSession, sf_dir: str, name: str) -> float:
+    """Seconds for one bench trial of ``name``: building the entry's
+    DataFrame plus its declared ``bench`` action. The caches the entry
+    handed to its caller are released after the clock stops, so no
+    trial leaves a cached copy behind."""
+    t0 = time.time()
+    try:
+        BENCH[name](QUERIES[name](spark, sf_dir))
+        return time.time() - t0
+    finally:
+        while _CALLER_CACHES:
+            _CALLER_CACHES.pop().unpersist()
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -86,6 +121,7 @@ def _r4(expr: str) -> str:
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
+    bench=DataFrame.count,
 )
 def a1_pricing_summary(spark, sf_dir):
     """A1: TPC-H-Q1-style aggregation — partial (map-side) aggregation +
@@ -113,6 +149,7 @@ def a1_pricing_summary(spark, sf_dir):
     JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name, n_name
     """,
+    bench=DataFrame.count,
 )
 def j3_star_join(spark, sf_dir):
     """J3: star join with broadcast dims (robots/host-policy analog)."""
@@ -216,6 +253,12 @@ def w1_latest_event(spark, sf_dir):
       ORDER BY e.ts DESC, e.event_id DESC LIMIT 1
     ) r ON TRUE
     """,
+    # aggregate the CARRIED columns: a bare count() provably prunes the
+    # whole LOCF Window from the plan (the count plan holds zero Window
+    # nodes), timing only the range shuffle
+    bench=lambda df: df.agg(
+        F.sum("policy_value"), F.max("policy_event")
+    ).collect(),
 )
 def j4_asof_join(spark, sf_dir):
     """AS-OF join (a brief-named operator Spark lacks natively): each
@@ -318,6 +361,7 @@ def j4_asof_nulls(spark, sf_dir):
      AND epoch_us(c.ts) >= epoch_us(e.ts)
      AND epoch_us(c.ts) <= epoch_us(e.ts) + 1800000000
     """,
+    bench=DataFrame.count,
 )
 def j5_range_join(spark, sf_dir):
     """RANGE join: clicks falling inside any same-user 30-minute window
@@ -373,6 +417,7 @@ def j5_range_join(spark, sf_dir):
            CAST(sum_units AS BIGINT) AS sum_units, min_units, max_units
     FROM lv
     """,
+    bench=DataFrame.count,
 )
 def rollup_hypertable(spark, sf_dir):
     """Hypertable rollup (the third brief-named custom-operator class):
@@ -440,6 +485,11 @@ def rollup_hypertable(spark, sf_dir):
            CAST(sum(cents) AS BIGINT) AS sum_cents
     FROM s GROUP BY user_id, sid
     """,
+    # sum the session aggregates so the per-session measures survive (the
+    # grouping itself cannot be pruned, but the sums could)
+    bench=lambda df: df.agg(
+        F.sum("n_events"), F.sum("sum_cents"), F.max("span_us")
+    ).collect(),
 )
 def w2_session_window(spark, sf_dir):
     """Sessionization — per-user gap sessions (12 h) via Spark's
@@ -542,6 +592,7 @@ def b2_limit(spark, sf_dir):
            row_number() OVER (ORDER BY lang, doc_id) AS seq
     FROM documents
     """,
+    bench=DataFrame.count,
 )
 def b3_global_order(spark, sf_dir):
     """B3: deterministic global crawl-order sequencing — validates the
@@ -560,6 +611,7 @@ def b3_global_order(spark, sf_dir):
       FROM documents
     ) WHERE rn <= 5
     """,
+    bench=DataFrame.count,
 )
 def b4_topk_per_key(spark, sf_dir):
     """B4: per-host politeness budget as salted two-phase top-k —
@@ -875,6 +927,7 @@ def f1_language_substring(spark, sf_dir):
       AND list_contains(
             list_transform(string_split(languages, ','), t -> trim(t)), 'eng')
     """,
+    bench=DataFrame.count,
 )
 def batcher_slice(spark, sf_dir):
     """The reference batcher's end-to-end pipeline shape
@@ -1005,6 +1058,7 @@ _AVG_TOK_LEN = _r4(
            {_AVG_TOK_LEN} AS avg_tok_len
     FROM t
     """,
+    bench=DataFrame.count,
 )
 def text_quality(spark, sf_dir):
     """Quality scoring: token counts + punctuation/stopword ratios."""
@@ -1136,7 +1190,13 @@ _DECON_ORACLE = f"""
     """
 
 
-@register("text_decontaminate", _DECON_ORACLE)
+@register(
+    "text_decontaminate", _DECON_ORACLE,
+    # a bare count would let Catalyst prune the decontamination left join
+    bench=lambda df: df.agg(
+        F.sum("n_matched"), F.sum(F.col("contaminated").cast("int"))
+    ).collect(),
+)
 def text_decontaminate(spark, sf_dir):
     """Benchmark decontamination (operators/training.py::decontaminate):
     every 17th document plays the held-out eval set; the rest of the
@@ -1180,6 +1240,9 @@ def text_decontaminate(spark, sf_dir):
            AS repetitive
     FROM g LEFT JOIN t USING (doc_id)
     """,
+    bench=lambda df: df.agg(
+        F.sum("top_count"), F.sum("n_distinct")
+    ).collect(),
 )
 def text_repetition(spark, sf_dir):
     """Gopher-style repetition quality gate (functions/textstats.py::
@@ -1219,6 +1282,7 @@ def text_repetition(spark, sf_dir):
     )
     SELECT token, n FROM c ORDER BY n DESC, token LIMIT 100
     """,
+    bench=DataFrame.count,
 )
 def text_vocab_topk(spark, sf_dir):
     """Corpus vocabulary statistics — the tokenizer-training precursor:
@@ -1251,6 +1315,7 @@ def text_vocab_topk(spark, sf_dir):
                       WHEN 'fr' THEN 3500 WHEN 'es' THEN 2000
                       ELSE 1000 END
     """,
+    bench=DataFrame.count,
 )
 def text_sample_rebalance(spark, sf_dir):
     """Language-distribution rebalancing (operators/training.py::
@@ -1284,6 +1349,10 @@ def text_sample_rebalance(spark, sf_dir):
            AS straddles
     FROM s
     """,
+    # a bare count would let Catalyst prune the packing window
+    bench=lambda df: df.agg(
+        F.sum("start_off"), F.max("pack_id")
+    ).collect(),
 )
 def text_sequence_packing(spark, sf_dir):
     """GPT-style sequence packing (operators/training.py::
@@ -1351,6 +1420,12 @@ def text_sequence_packing(spark, sf_dir):
                                chr(10) ORDER BY pos), '') AS text_deduped
     FROM m GROUP BY doc_id
     """,
+    # sum over the REASSEMBLED text length: forces the mark join AND the
+    # per-doc array_sort reassembly (n_kept alone would let the
+    # collect_list aggregate be pruned)
+    bench=lambda df: df.agg(
+        F.sum(F.length("text_deduped")), F.sum("n_kept")
+    ).collect(),
 )
 def text_line_dedup(spark, sf_dir):
     """Cross-document line dedup (operators/dedup.py::line_dedup) — the
@@ -1456,6 +1531,14 @@ def text_line_dedup(spark, sf_dir):
                                ORDER BY idx), '') AS text_deduped
     FROM m GROUP BY doc_id
     """,
+    # sum reassembled length + span stats: forces the window mark, the
+    # island merge, and the per-doc reassembly (a bare count would prune
+    # all three)
+    bench=lambda df: df.agg(
+        F.sum(F.length("text_deduped")),
+        F.sum("n_spans"),
+        F.sum("n_dup_tokens"),
+    ).collect(),
 )
 def text_span_dedup(spark, sf_dir):
     """Exact duplicate-span removal (operators/dedup.py::span_dedup) —
@@ -1497,6 +1580,9 @@ def text_span_dedup(spark, sf_dir):
            {_r4("n_oov / greatest(n_tok, 1)")} AS oov_ratio
     FROM a
     """,
+    bench=lambda df: df.agg(
+        F.sum("sum_freq"), F.sum("n_oov")
+    ).collect(),
 )
 def text_lm_quality(spark, sf_dir):
     """Corpus-statistics LM quality scoring (operators/training.py::
@@ -1547,6 +1633,11 @@ def text_lm_quality(spark, sf_dir):
     FROM toks t LEFT JOIN weights w ON t.tok = w.tok
     GROUP BY t.doc_id
     """,
+    # sum score/hits: forces the train aggregate, the broadcast weight
+    # join, and the per-doc scoring sum
+    bench=lambda df: df.agg(
+        F.sum("score_int"), F.sum("n_hits"), F.sum("predict")
+    ).collect(),
 )
 def text_quality_classifier(spark, sf_dir):
     """Trained quality classifier (operators/training.py::
@@ -1629,7 +1720,12 @@ _PII_ORACLE = """
     """.format(email=_PII_EMAIL, phone=_PII_PHONE, ip=_PII_IPV4)
 
 
-@register("text_pii_redact", _PII_ORACLE)
+@register(
+    "text_pii_redact", _PII_ORACLE,
+    bench=lambda df: df.agg(
+        F.sum(F.length("text_redacted")), F.sum("n_emails")
+    ).collect(),
+)
 def text_pii_redact(spark, sf_dir):
     """PII redaction (functions/textstats.py::redact_pii) — the
     release-hygiene pass of a training-data pipeline. Synthetic PII
@@ -1736,6 +1832,7 @@ def text_rolling_fingerprint(spark, sf_dir):
     SELECT fingerprint, min(id) AS keep_id, count(*) AS dup_count
     FROM k GROUP BY fingerprint
     """,
+    bench=DataFrame.count,
 )
 def dedup_exact(spark, sf_dir):
     """Exact (prefix-key) dedup: hash-groupBy, one shuffle."""
@@ -1796,6 +1893,7 @@ _MINHASH_CTES = f"""sh AS (
     JOIN sizes zb ON zb.id = i.b
     WHERE {_r4("i.n_inter / (za.n + zb.n - i.n_inter)")} >= 0.2
     """,
+    bench=DataFrame.count,
 )
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash → LSH banding → exact-Jaccard verify (shingle n=3,
@@ -1888,6 +1986,12 @@ def _mh_side_sql(src: str, p: str) -> str:
     LEFT JOIN exact e USING (fingerprint)
     LEFT JOIN near nr ON nr.a = f.id
     """,
+    # sum keep/n_near/best_jaccard: forces BOTH legs (exact fingerprint
+    # join and the LSH candidate→Jaccard-verify chain) — keep alone would
+    # let the near-leg aggregates be pruned
+    bench=lambda df: df.agg(
+        F.sum("keep"), F.sum("n_near"), F.sum("best_jaccard")
+    ).collect(),
 )
 def dedup_incremental(spark, sf_dir):
     """Cross-snapshot dedup: a fresh crawl wave (doc_id % 3 = 0) checked
@@ -2170,7 +2274,10 @@ def _simhash_oracle(bits: int = 16) -> str:
     """
 
 
-@register("dedup_simhash", _simhash_oracle(16))
+@register(
+    "dedup_simhash", _simhash_oracle(16),
+    bench=DataFrame.count,
+)
 def dedup_simhash(spark, sf_dir):
     """SimHash (16-bit, bitwise token-hash majority) per document."""
     docs = load(spark, sf_dir, "documents")
@@ -2198,6 +2305,7 @@ def dedup_simhash(spark, sf_dir):
     JOIN sh sb ON sb.id = c.b
     WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 3
     """,
+    bench=DataFrame.count,
 )
 def dedup_simhash_pairs(spark, sf_dir):
     """SimHash Hamming-neighbor pairs (d ≤ 3) via the banded chunk join —
@@ -2235,6 +2343,7 @@ _SQL_DOT = """
     SELECT vec_id, {_r4("dot / (ne * nq)")} AS cos
     FROM d ORDER BY cos DESC, vec_id LIMIT 20
     """,
+    bench=DataFrame.count,
 )
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-20 vs vec_id 0 (JVM-side fold, no UDF)."""
@@ -2299,6 +2408,7 @@ _SQL_SIGS = f"""
     SELECT vec_id, {_r4("dot / (ne * nq)")} AS cos
     FROM d ORDER BY cos DESC, vec_id LIMIT 10
     """,
+    bench=DataFrame.count,
 )
 def ann_cosine_topk_bucketed(spark, sf_dir):
     """Multi-probe LSH top-10: scan only vectors whose random-hyperplane
@@ -2408,6 +2518,7 @@ def ann_cosine_topk_partitioned(spark, sf_dir):
     SELECT a, b, {_r4("dot / (na * nb)")} AS cos
     FROM p WHERE {_r4("dot / (na * nb)")} >= 0.35
     """,
+    bench=DataFrame.count,
 )
 def emb_neardup_pairs(spark, sf_dir):
     """Embedding near-dup via banded random-hyperplane LSH (4 bands × 2
@@ -2503,6 +2614,9 @@ def ann_ivf_assign(spark, sf_dir):
     SELECT v.vec_id, v.list_id, (drops.b IS NULL) AS kept
     FROM v LEFT JOIN drops ON v.vec_id = drops.b
     """,
+    bench=lambda df: df.agg(
+        F.sum(F.col("kept").cast("int"))
+    ).collect(),
 )
 def emb_semantic_dedup(spark, sf_dir):
     """SemDeDup-shape semantic deduplication (operators/similarity.py::
@@ -2585,6 +2699,12 @@ def _kmeans_round_sql(r: int) -> str:
     {_kmeans_assign_sql("afin", f"c{_KMEANS_ROUNDS}")}
     SELECT vec_id, CAST(c AS BIGINT) AS cluster FROM afin
     """,
+    # sum the COMPUTED cluster column: a bare count(*) would let Catalyst
+    # prune the k-fold assignment expression entirely. The entry call runs
+    # the 2 update rounds (one groupBy job + k·64-row collect each)
+    bench=lambda df: df.agg(
+        F.sum("cluster"), F.count("*")
+    ).collect(),
 )
 def emb_kmeans(spark, sf_dir):
     """Distributed Lloyd's k-means over the full embedding table
@@ -2597,8 +2717,9 @@ def emb_kmeans(spark, sf_dir):
     round the Spark side runs ONE map-side-combined groupBy(cluster,
     dim) job and collects exactly k·64 summary rows."""
     emb = load(spark, sf_dir, "embeddings")
+    # the result reads the persisted quantized frame: hand it to the caller
     return similarity.kmeans_int(
-        emb, k=_KMEANS_K, rounds=_KMEANS_ROUNDS
+        emb, k=_KMEANS_K, rounds=_KMEANS_ROUNDS, cache=_CALLER_CACHES
     )
 
 
@@ -2637,6 +2758,7 @@ def emb_kmeans(spark, sf_dir):
     SELECT vec_id, {_r4("dot / (ne * nq)")} AS cos
     FROM d ORDER BY cos DESC, vec_id LIMIT 10
     """,
+    bench=DataFrame.count,
 )
 def ann_cosine_topk_ivf(spark, sf_dir):
     """IVF approximate top-10 vs vec_id 2: probe the nprobe=4 closest of
@@ -2776,6 +2898,7 @@ def ann_pq_encode(spark, sf_dir):
     FROM d JOIN short ON d.vec_id = short.vec_id
     ORDER BY cos DESC, d.vec_id LIMIT 10
     """,
+    bench=DataFrame.count,
 )
 def ann_pq_topk(spark, sf_dir):
     """PQ search end to end (operators/similarity.py::pq_topk): ADC
@@ -2922,7 +3045,10 @@ def _pagerank_oracle(iterations: int) -> str:
     """
 
 
-@register("link_pagerank", _pagerank_oracle(5))
+@register(
+    "link_pagerank", _pagerank_oracle(5),
+    bench=DataFrame.count,
+)
 def link_pagerank(spark, sf_dir):
     """Iterative fixed-point PageRank (5 rounds, damping 85/100, scale
     10^6) over the link graph EXTRACTED from the derived pages corpus —
@@ -2965,6 +3091,7 @@ def link_pagerank(spark, sf_dir):
            """ + _r4("sum(value)") + """ AS sum_value
     FROM events GROUP BY 1, 2
     """,
+    bench=DataFrame.count,
 )
 def stream_windowed_events(spark, sf_dir):
     """S5/G1: Structured-Streaming windowed aggregation with watermark,
@@ -3377,7 +3504,10 @@ _WARC_ORACLE = """
 """
 
 
-@register("warc_ingest", _WARC_ORACLE)
+@register(
+    "warc_ingest", _WARC_ORACLE,
+    bench=DataFrame.count,
+)
 def warc_ingest(spark, sf_dir):
     """P4+F4+P5+P6+T2: write a real multi-member .warc.gz corpus
     (response records interleaved with request/warcinfo records the
@@ -3396,7 +3526,10 @@ def warc_ingest(spark, sf_dir):
     return warc.extract_responses(warc.scan_warc_files(spark, out_dir))
 
 
-@register("warc_range_fetch", _WARC_ORACLE)
+@register(
+    "warc_range_fetch", _WARC_ORACLE,
+    bench=DataFrame.count,
+)
 def warc_range_fetch(spark, sf_dir):
     """S2+S3: the CDX-driven byte-range path — each (filename, offset,
     length) row reads exactly one gzip member and gunzips it standalone
@@ -3931,6 +4064,10 @@ _BPE_ENCODE_CTES = f"""
         f" b AS right_sym, a || b AS merged, cnt AS freq FROM top{r}"
         for r in range(1, _BPE_MERGES + 1)
     ) + "\n    ) ORDER BY rank",
+    # the 6 merge rounds (one tiny collect each) run at DataFrame-
+    # construction time — the entry call itself IS the training job; the
+    # count just materializes the 6 returned rules
+    bench=DataFrame.count,
 )
 def text_bpe_train(spark, sf_dir):
     """Distributed BPE vocabulary induction (operators/tokenizer.py::
@@ -4005,6 +4142,12 @@ def _bpe_model(spark, sf_dir):
     FROM dtok LEFT JOIN pieces USING (word)
     GROUP BY doc_id
     """,
+    # sum n_pieces/max fragmentation: forces the broadcast dictionary
+    # join and the per-doc aggregation (count(*) would prune the join —
+    # doc ids are unique)
+    bench=lambda df: df.agg(
+        F.sum("n_pieces"), F.max("max_word_pieces")
+    ).collect(),
 )
 def text_bpe_tokenize(spark, sf_dir):
     """BPE application at corpus scale (operators/tokenizer.py::
@@ -4120,6 +4263,12 @@ def text_pack_ids(spark, sf_dir):
                                      ELSE 400 END) AS kept
     FROM c
     """,
+    # sum the computed columns: a bare count would let Catalyst prune the
+    # partition-local window and the broadcast base join (the (pid,
+    # source) base key is provably unique)
+    bench=lambda df: df.agg(
+        F.sum("cum_before"), F.sum(F.col("kept").cast("int"))
+    ).collect(),
 )
 def text_token_budget_sample(spark, sf_dir):
     """Token-budget source sampling (operators/training.py::
@@ -4159,6 +4308,10 @@ def text_token_budget_sample(spark, sf_dir):
     SELECT doc_id AS node, doc_id - (doc_id % 50) AS label
     FROM documents
     """,
+    # deliberately no bench action: its cost is ~5 star-contraction
+    # rounds of fixed per-action latency (data-size-independent at these
+    # sfs), which link_pagerank's iterative timing already represents
+    # without double-counting the driver-loop floor
 )
 def graph_cc_chain(spark, sf_dir):
     """Log-round connected components (operators/graph.py::
@@ -4259,7 +4412,10 @@ def _bm25_oracle(matching_only: bool = False) -> str:
     """
 
 
-@register("text_bm25_topk", _bm25_oracle())
+@register(
+    "text_bm25_topk", _bm25_oracle(),
+    bench=DataFrame.collect,
+)
 def text_bm25_topk(spark, sf_dir):
     """BM25 top-k retrieval (k1=1.2, b=0.75) for the fixed query
     {spark, hash, vector} — the inverted-index-shaped search primitive
@@ -4464,11 +4620,9 @@ _RUN_LAST = [
     # that every in-gate float entry exercises.
     "a1_pricing_summary",
     # demoted for text_bm25_indexed (the inverted-index layout's first
-    # driver row): j1 is double-green r2+r3, its broadcast/shuffle_hash
-    # strategy switch is pytest-pinned (test_determinism), and the
-    # fetch-join path runs IN-GATE end-to-end inside crawl_metrics /
-    # crawl_wave_flagship (which execute first, with a full oracle on
-    # the former).
+    # driver row): j1 is double-green r2+r3, and the fetch-join path
+    # runs IN-GATE end-to-end inside crawl_metrics / crawl_wave_flagship
+    # (which execute first, with a full oracle on the former).
     "j1_fetch_join",
     # demoted for ann_ivfpq_topk (the IVF-PQ layout's first driver
     # row): the row-filter IVF probe is the least informative of the

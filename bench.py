@@ -42,16 +42,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     throughput: dict[str, float] = {}
 
-    def timed(name: str, fn, trials: int = 1):
-        best = None
-        for _ in range(trials):
-            t0 = time.time()
-            result = fn()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
-        timings[name] = round(best, 3)
-        return result
-
     # -- flagship: multi-wave frontier expansion over derived pages -------
     replicate = int(os.environ.get("SPARK_GRAFT_CRAWL_REPLICATE", "50"))
     pages, seeds, robots = catalog.pages_from_documents(
@@ -166,197 +156,13 @@ def main() -> None:
         2,
     )
 
-    # -- relational / dedup / similarity / streaming headliners -----------
-    q = catalog.queries()
-    for name in (
-        "a1_pricing_summary",
-        "j3_star_join",
-        "b4_topk_per_key",
-        "b3_global_order",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_simhash",
-        "dedup_simhash_pairs",
-        "ann_cosine_topk",
-        "ann_cosine_topk_bucketed",
-        "ann_cosine_topk_ivf",
-        "ann_pq_topk",
-        "emb_neardup_pairs",
-        "link_pagerank",
-        "j5_range_join",
-        "rollup_hypertable",
-        "text_quality",
-        "stream_windowed_events",
-        "warc_ingest",
-        "warc_range_fetch",
-        "batcher_slice",
-        "text_vocab_topk",
-    ):
-        # best of 2 per query: shared-host noise swings single runs ±3×
-        timed(name, lambda n=name: q[n](spark, sf_dir).count(), trials=2)
-
-    # j4 must aggregate the CARRIED columns — a bare count() provably
-    # prunes the whole LOCF Window from the plan (verified: the count
-    # plan contains zero Window nodes), timing only the range shuffle.
-    timed(
-        "j4_asof_join",
-        lambda: q["j4_asof_join"](spark, sf_dir)
-        .agg(F.sum("policy_value"), F.max("policy_event"))
-        .collect(),
-        trials=2,
-    )
-
-    # -- training-corpus prep (round-4 additions). Aggregate the COMPUTED
-    # columns, not count(*): a bare count lets Catalyst prune the
-    # decontamination left join / the packing window entirely (the same
-    # pruning trap the asof bench hit — CLAUDE.md round-4).
-    timed(
-        "text_decontaminate",
-        lambda: q["text_decontaminate"](spark, sf_dir)
-        .agg(F.sum("n_matched"), F.sum(F.col("contaminated").cast("int")))
-        .collect(),
-        trials=2,
-    )
-    timed(
-        "text_repetition",
-        lambda: q["text_repetition"](spark, sf_dir)
-        .agg(F.sum("top_count"), F.sum("n_distinct"))
-        .collect(),
-        trials=2,
-    )
-    timed(
-        "emb_semantic_dedup",
-        lambda: q["emb_semantic_dedup"](spark, sf_dir)
-        .agg(F.sum(F.col("kept").cast("int")))
-        .collect(),
-        trials=2,
-    )
-    timed(
-        "text_sample_rebalance",
-        lambda: q["text_sample_rebalance"](spark, sf_dir).count(),
-        trials=2,
-    )
-    timed(
-        "text_sequence_packing",
-        lambda: q["text_sequence_packing"](spark, sf_dir)
-        .agg(F.sum("start_off"), F.max("pack_id"))
-        .collect(),
-        trials=2,
-    )
-    # sum over the REASSEMBLED text length: forces the mark join AND the
-    # per-doc array_sort reassembly (n_kept alone would let the collect_
-    # list aggregate be pruned).
-    timed(
-        "text_line_dedup",
-        lambda: q["text_line_dedup"](spark, sf_dir)
-        .agg(F.sum(F.length("text_deduped")), F.sum("n_kept"))
-        .collect(),
-        trials=2,
-    )
-    timed(
-        "text_lm_quality",
-        lambda: q["text_lm_quality"](spark, sf_dir)
-        .agg(F.sum("sum_freq"), F.sum("n_oov"))
-        .collect(),
-        trials=2,
-    )
-    # sum score/hits: forces the train aggregate, the broadcast weight
-    # join, and the per-doc scoring sum.
-    timed(
-        "text_quality_classifier",
-        lambda: q["text_quality_classifier"](spark, sf_dir)
-        .agg(F.sum("score_int"), F.sum("n_hits"), F.sum("predict"))
-        .collect(),
-        trials=2,
-    )
-    # sum reassembled length + span stats: forces the window mark, the
-    # island merge, and the per-doc reassembly (a bare count would
-    # prune all three).
-    timed(
-        "text_span_dedup",
-        lambda: q["text_span_dedup"](spark, sf_dir)
-        .agg(
-            F.sum(F.length("text_deduped")),
-            F.sum("n_spans"),
-            F.sum("n_dup_tokens"),
+    # -- the catalog suite: every entry that declares a bench action -------
+    # (plans/catalog.py::register), best of 2 trials each: shared-host
+    # noise swings single runs ±3×
+    for name in catalog.BENCH:
+        timings[name] = round(
+            min(catalog.bench_trial(spark, sf_dir, name) for _ in range(2)), 3
         )
-        .collect(),
-        trials=2,
-    )
-    # sum keep/n_near/best_jaccard: forces BOTH legs (exact fingerprint
-    # join and the LSH candidate→Jaccard-verify chain) — keep alone
-    # would let the near-leg aggregates be pruned.
-    timed(
-        "dedup_incremental",
-        lambda: q["dedup_incremental"](spark, sf_dir)
-        .agg(F.sum("keep"), F.sum("n_near"), F.sum("best_jaccard"))
-        .collect(),
-        trials=2,
-    )
-    timed(
-        "text_pii_redact",
-        lambda: q["text_pii_redact"](spark, sf_dir)
-        .agg(F.sum(F.length("text_redacted")), F.sum("n_emails"))
-        .collect(),
-        trials=2,
-    )
-    # BPE training runs its 6 merge rounds (one tiny collect each) at
-    # DataFrame-construction time — the callable itself IS the training
-    # job; the count just materializes the 6 returned rules.
-    timed(
-        "text_bpe_train",
-        lambda: q["text_bpe_train"](spark, sf_dir).count(),
-        trials=2,
-    )
-    # sum n_pieces/max fragmentation: forces the broadcast dictionary
-    # join and the per-doc aggregation (count(*) would prune the join —
-    # doc ids are unique).
-    timed(
-        "text_bpe_tokenize",
-        lambda: q["text_bpe_tokenize"](spark, sf_dir)
-        .agg(F.sum("n_pieces"), F.max("max_word_pieces"))
-        .collect(),
-        trials=2,
-    )
-    timed(
-        "text_bm25_topk",
-        lambda: q["text_bm25_topk"](spark, sf_dir).collect(),
-        trials=2,
-    )
-    # sum the computed columns: a bare count would let Catalyst prune
-    # the partition-local window and the broadcast base join (the
-    # (pid, source) base key is provably unique).
-    timed(
-        "text_token_budget_sample",
-        lambda: q["text_token_budget_sample"](spark, sf_dir)
-        .agg(F.sum("cum_before"), F.sum(F.col("kept").cast("int")))
-        .collect(),
-        trials=2,
-    )
-    # sum the session aggregates so the per-session measures survive
-    # (the grouping itself cannot be pruned, but the sums could).
-    timed(
-        "w2_session_window",
-        lambda: q["w2_session_window"](spark, sf_dir)
-        .agg(F.sum("n_events"), F.sum("sum_cents"), F.max("span_us"))
-        .collect(),
-        trials=2,
-    )
-    # sum the COMPUTED cluster column: a bare count(*) would let
-    # Catalyst prune the k-fold assignment expression entirely (the
-    # training-ops bench rule). The callable runs the 2 update rounds
-    # (one groupBy job + k·64-row collect each) at construction time.
-    timed(
-        "emb_kmeans",
-        lambda: q["emb_kmeans"](spark, sf_dir)
-        .agg(F.sum("cluster"), F.count("*"))
-        .collect(),
-        trials=2,
-    )
-    # graph_cc_chain is deliberately NOT in the suite: its cost is ~5
-    # star-contraction rounds of fixed per-action latency (data-size-
-    # independent at these sfs), which link_pagerank's iterative timing
-    # already represents without double-counting the driver-loop floor.
 
     total = round(sum(timings.values()), 3)
     print(

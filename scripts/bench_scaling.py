@@ -119,17 +119,6 @@ def main() -> None:
     )
     print(json.dumps(skew), flush=True)
 
-    print("running hot-key asof bench at local[32] ...", flush=True)
-    asof_out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "bench_asof_skew.py")],
-        env=dict(os.environ, SPARK_GRAFT_CPUS="32"),
-        capture_output=True, text=True, check=True, cwd=REPO, timeout=1800,
-    )
-    asof = json.loads(
-        [l for l in asof_out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    )
-    print(json.dumps(asof), flush=True)
-
     def thr(c, key="frontier_urls_per_sec"):
         return results[c]["throughput"][key]
 
@@ -193,15 +182,6 @@ hardware ceiling probe (pure-Python extraction, docs/sec):
   host size (the unsalted variant sorts the whole mega-host in a single
   task: at 10^8-row hosts it simply does not finish). Output equality
   salted == unsalted is pinned by the politeness tests.
-- **hot-key AS-OF join (scripts/bench_asof_skew.py)**: {asof["left_rows"]}
-  probes × {asof["right_rows"]} snapshots, {int(asof["hot_share"] * 100)}% of
-  both sides on ONE key, local[{asof["cpus"]}], outputs asserted equal,
-  carried columns aggregated in the timed section: keyed-window strategy
-  {asof["window_sec"]} s vs two-phase {asof["two_phase_sec"]} s
-  (**{asof["two_phase_speedup"]}× faster two-phase**) — the keyed
-  window's wall time tracks the hot KEY's size (one serial window task)
-  while the two-phase default tracks rows/partitions, so the gap widens
-  without bound. Both shapes are exposed via `asof_join(strategy=...)`.
 - per-query wall times (local[32]): `{json.dumps(results[32]["queries"])}`
 - **round-4 continuation A/B wins** (each measured in isolation,
   best-of-2, identical outputs): simhash_pairs 2.2× (signature carried

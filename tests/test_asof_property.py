@@ -1,9 +1,9 @@
 """Property test for the as-of join: on random corpora — duplicate
 timestamps, null value columns, single-key and multi-key, empty sides —
-the two-phase shape, the keyed-window shape, and a plain-Python
-reference must agree exactly, at more than one shuffle-partition count
-(partition boundaries are the two-phase shape's only moving part, and
-the round-4 carry bug lived exactly there)."""
+the two-phase shape and a plain-Python reference must agree exactly, at
+more than one shuffle-partition count (partition boundaries are the
+two-phase shape's only moving part, and the round-4 carry bug lived
+exactly there)."""
 
 from __future__ import annotations
 
@@ -90,16 +90,15 @@ def test_asof_strategies_agree_with_reference(spark, lrows, rrows):
     try:
         for n_parts in ("3", "11"):
             spark.conf.set("spark.sql.shuffle.partitions", n_parts)
-            for strategy in ("two_phase", "keyed_window"):
-                got = {
-                    r["lid"]: (r["rid_asof"], r["value_asof"])
-                    for r in asof_join(
-                        left, right, on="host",
-                        value_cols=("rid", "value"), right_order="rid",
-                        strategy=strategy, cache=caches,
-                    ).collect()
-                }
-                assert got == want, (strategy, n_parts, got, want)
+            got = {
+                r["lid"]: (r["rid_asof"], r["value_asof"])
+                for r in asof_join(
+                    left, right, on="host",
+                    value_cols=("rid", "value"), right_order="rid",
+                    cache=caches,
+                ).collect()
+            }
+            assert got == want, (n_parts, got, want)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
         for df in caches:  # retire the per-call persisted unions

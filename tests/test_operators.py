@@ -3,6 +3,8 @@ and the streaming queue analog."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -468,56 +470,24 @@ def test_label_propagation_components(spark):
     assert set(full.values()) == {1}
 
 
-def test_label_propagation_fixpoint_converges(spark):
-    """Fixpoint variant: a deep-diameter chain (where 4 fixed rounds are
-    provably insufficient) converges to one component; on clique-like
-    graphs it equals the fixed-round form; round count is reported and
-    bounded by diameter + 1; max_iterations raises instead of returning
-    unconverged labels."""
-    import pytest as _pytest
+# partition boundaries are the as-of join's only moving part: check each
+# hand-computed case at the property test's two widths
+_ASOF_PARTITION_COUNTS = ("3", "11")
 
-    from basic_common_crawl_pipeline_spark.operators.graph import (
-        label_propagation_fixpoint,
-        label_propagation_min,
-    )
 
-    # chain 0-1-...-20: diameter 20 >> 4 fixed rounds
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], "src long, dst long"
-    )
-    fixed4 = {
-        r["node"]: r["label"]
-        for r in label_propagation_min(chain, iterations=4).collect()
-    }
-    assert set(fixed4.values()) != {0}  # 4 rounds provably insufficient
-    info: dict = {}
-    fp = {
-        r["node"]: r["label"]
-        for r in label_propagation_fixpoint(chain, info=info).collect()
-    }
-    assert fp == {i: 0 for i in range(21)}
-    assert info["rounds"] <= 22
-
-    # clique-like near-dup graph + isolated node: fixpoint == fixed-round
-    cliq = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)],
-        "src long, dst long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 12, 99)], "doc_id long"
-    )
-    fixed = sorted(
-        (r["node"], r["label"])
-        for r in label_propagation_min(cliq, iterations=4, nodes=nodes).collect()
-    )
-    fp2 = sorted(
-        (r["node"], r["label"])
-        for r in label_propagation_fixpoint(cliq, nodes=nodes).collect()
-    )
-    assert fp2 == fixed
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        label_propagation_fixpoint(chain, max_iterations=3)
+@contextmanager
+def _shuffle_partitions(spark, n_parts):
+    """Run the body at ``n_parts`` shuffle partitions and retire the
+    as-of joins' persisted unions collected in the yielded list."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    caches: list = []
+    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
+    try:
+        yield caches
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for df in caches:
+            df.unpersist()
 
 
 def test_asof_join_semantics(spark):
@@ -546,14 +516,15 @@ def test_asof_join_semantics(spark):
         ],
         "host string, ts long, tag string",
     )
-    for strategy in ("two_phase", "keyed_window"):
-        out = {
-            r["tag"]: (r["delay_asof"], r["rid_asof"])
-            for r in asof_join(
-                left, right, on="host", value_cols=("delay", "rid"),
-                right_order="rid", strategy=strategy,
-            ).collect()
-        }
+    for n_parts in _ASOF_PARTITION_COUNTS:
+        with _shuffle_partitions(spark, n_parts) as caches:
+            out = {
+                r["tag"]: (r["delay_asof"], r["rid_asof"])
+                for r in asof_join(
+                    left, right, on="host", value_cols=("delay", "rid"),
+                    right_order="rid", cache=caches,
+                ).collect()
+            }
         assert out == {
             "a": (None, None),
             "b": (100.0, 1),
@@ -561,7 +532,7 @@ def test_asof_join_semantics(spark):
             "d": (250.0, 3),
             "e": (None, None),
             "f": (900.0, 4),
-        }, strategy
+        }, n_parts
 
 
 def test_asof_join_carries_whole_rows_not_columns(spark):
@@ -577,12 +548,13 @@ def test_asof_join_carries_whole_rows_not_columns(spark):
     left = spark.createDataFrame(
         [("h1", 25, "a")], "host string, ts long, tag string"
     )
-    for strategy in ("two_phase", "keyed_window"):
-        row = asof_join(
-            left, right, on="host", value_cols=("delay", "rid"),
-            right_order="rid", strategy=strategy,
-        ).collect()[0]
-        assert (row["delay_asof"], row["rid_asof"]) == (None, 2), strategy
+    for n_parts in _ASOF_PARTITION_COUNTS:
+        with _shuffle_partitions(spark, n_parts) as caches:
+            row = asof_join(
+                left, right, on="host", value_cols=("delay", "rid"),
+                right_order="rid", cache=caches,
+            ).collect()[0]
+        assert (row["delay_asof"], row["rid_asof"]) == (None, 2), n_parts
 
 
 def test_asof_join_exact_for_60bit_ids(spark):
@@ -963,17 +935,40 @@ def test_trained_ivf_centroids_beat_fixed(spark):
     assert mean_trained >= 0.5
 
 
+def _union_find_components(edges, nodes=()):
+    """Reference CC labels: node -> min node id of its component."""
+    parent = {n: n for n in nodes}
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the smaller root wins, so roots are component mins
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def test_connected_components_star_log_rounds(spark):
     """Large-star/small-star CC: a 64-node chain (diameter 63, where
     min-label propagation provably needs ~64 rounds) converges in
-    O(log n) rounds with the correct single component; random graphs
-    agree exactly with label_propagation_fixpoint; isolated nodes from
-    the nodes frame label themselves."""
+    O(log n) rounds with the correct single component; random and
+    clique-like graphs agree exactly with a union-find; isolated nodes
+    from the nodes frame label themselves; max_iterations raises instead
+    of returning unconverged labels."""
     import random
+
+    import pytest as _pytest
 
     from basic_common_crawl_pipeline_spark.operators.graph import (
         connected_components_star,
-        label_propagation_fixpoint,
+        label_propagation_min,
     )
 
     chain = spark.createDataFrame(
@@ -986,6 +981,8 @@ def test_connected_components_star_log_rounds(spark):
     }
     assert got == {i: 0 for i in range(64)}
     assert info["rounds"] <= 12, info  # log-round, not diameter-round
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(chain, max_iterations=2)
 
     rng = random.Random(13)
     edges = list(
@@ -997,16 +994,25 @@ def test_connected_components_star_log_rounds(spark):
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
     nodes = spark.createDataFrame([(i,) for i in range(70)], "doc_id long")
-    star = sorted(
-        (r["node"], r["label"])
+    star = {
+        r["node"]: r["label"]
         for r in connected_components_star(df, nodes=nodes).collect()
-    )
-    fp = sorted(
-        (r["node"], r["label"])
-        for r in label_propagation_fixpoint(df, nodes=nodes).collect()
-    )
-    assert star == fp
-    assert (69, 69) in star or any(n == 69 for n, _ in star)
+    }
+    assert star == _union_find_components(edges, range(70))
+    assert star[69] == 69
+
+    # clique-like near-dup graph + an isolated node: the star path and
+    # the fixed 4-round propagation both give the union-find labels
+    cliq_edges = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
+    cliq = spark.createDataFrame(cliq_edges, "src long, dst long")
+    cliq_nodes = (1, 2, 3, 10, 11, 12, 99)
+    nodes = spark.createDataFrame([(i,) for i in cliq_nodes], "doc_id long")
+    want = _union_find_components(cliq_edges, cliq_nodes)
+    for got in (
+        connected_components_star(cliq, nodes=nodes),
+        label_propagation_min(cliq, iterations=4, nodes=nodes),
+    ):
+        assert {r["node"]: r["label"] for r in got.collect()} == want
 
 
 def test_semantic_dedup_drop_rule_vs_numpy(spark):
@@ -1537,6 +1543,21 @@ def test_kmeans_int_matches_python_reference(spark):
             assert got == want, f"shuffle_partitions={n_parts}"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_emb_kmeans_bench_trial_leaves_no_cached_copy(spark):
+    """The emb_kmeans entry hands its persisted quantized frame to its
+    caller; a bench trial of its declared action (exactly as bench.py
+    runs it) must release that frame, so no trial leaves a cached copy
+    of the embeddings behind."""
+    from basic_common_crawl_pipeline_spark.plans import catalog
+    from tests.conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(2):
+        catalog.bench_trial(spark, SF_SMALL, "emb_kmeans")
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_kmeans_int_empty_cluster_keeps_centroid(spark):

@@ -61,3 +61,22 @@ def test_no_oracle_emits_driver_hostile_types(con):
         f"through the driver's pandas/Arrow path: {offenders} — "
         "CAST(... AS BIGINT) (or DOUBLE) in plans/catalog.py"
     )
+
+
+def test_declared_bench_suite_is_the_r6_suite():
+    """The catalog entries that declare a bench action are queries()
+    entries, and together with bench.py's three crawl/extract leaves
+    they are exactly the suite BENCH_r06.json recorded."""
+    import json
+    import os
+
+    from basic_common_crawl_pipeline_spark.plans.catalog import BENCH
+
+    assert set(BENCH) <= set(entry_mod.queries())
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH_r06.json")) as f:
+        r06 = json.load(f)["parsed"]["queries"]
+    leaves = {"crawl_3waves", "crawl_bigwave", "extract_full_corpus"}
+    assert len(r06) == 43
+    assert set(BENCH) | leaves == set(r06)
+    assert not set(BENCH) & leaves
