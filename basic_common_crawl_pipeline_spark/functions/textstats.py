@@ -75,16 +75,6 @@ def avg_token_len(text: Column | str) -> Column:
     return round4((total / F.greatest(F.size(toks), F.lit(1))))
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: long enough, low punctuation,
-    some stopwords (prose-likeness). Deterministic arithmetic only."""
-    n = token_count(text)
-    length_term = F.least(n / F.lit(100.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(text) * 5, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(text) * 10, F.lit(1.0))
-    return round4(((length_term + punct_term + stop_term) / 3))
-
-
 def langid_scores(text: Column | str) -> dict[str, Column]:
     """Marker-word hit count per language over the token list."""
     toks = word_tokens(text)

@@ -3928,10 +3928,7 @@ def crawl_metrics(spark, sf_dir):
     store = SnapshotStore(tempfile.mkdtemp(prefix="crawl_metrics_"))
     run_crawl(
         spark, pages, seeds, robots,
-        # salt_partitions=2: the gate corpus has ~20 tiny hosts, so the
-        # politeness fan-out only adds scheduling latency here (salted ==
-        # unsalted output is pytest-pinned); smallest config per wave
-        config=CrawlConfig(wave_seconds=16.0, max_waves=1, salt_partitions=2),
+        config=CrawlConfig(wave_seconds=16.0, max_waves=1),
         store=store,
     )
     return store.read_table(spark, "metrics")

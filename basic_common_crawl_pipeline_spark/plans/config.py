@@ -16,6 +16,10 @@ implementations agree by specification:
 3. index lookup   : candidates not present in the pages table are misses —
                     marked seen, never fetched (the reference analog: a URL
                     absent from the CDX index simply doesn't exist).
+                    Each candidate matches at most one pages row and its
+                    host at most one robots row; the Spark wave checks
+                    this every wave (candidate rows == frontier rows) and
+                    raises on a duplicate capture or robots host.
 4. eligibility    : F1+F2 on index metadata *before* any fetch, exactly as
                     the reference batcher filters CDX entries before workers
                     download WARC slices (rust/src/bin/batcher.rs:88-95):
@@ -57,9 +61,6 @@ class CrawlConfig:
     language: str = LANGUAGE
     max_waves: int = 8
     salt_partitions: int = 8  # politeness top-k salting fan-out (Spark only)
-    # check (once, at run_crawl start) that pages is unique per url — the
-    # wave joins assume one capture per URL (see run_crawl docstring)
-    validate_pages_unique: bool = False
     # every N waves, fold the append-tables' delta chains (seen /
     # crawl_order / results) into one base path (Iceberg
     # rewrite-data-files): a 1000-wave crawl otherwise unions 1000 deltas

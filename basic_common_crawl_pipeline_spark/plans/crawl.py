@@ -254,15 +254,17 @@ def run_crawl(
     crawl (a fresh run over an old CURRENT would splice the old run's
     append-table deltas into the new run's tables — refused instead).
 
-    PRECONDITION: ``pages`` must be unique per url (one capture per URL).
-    The wave's shuffle_hash left joins against pages (index lookup and
-    html fetch) emit one row per matching capture, so an extra capture
-    duplicates a candidate, corrupting crawl order and the seen set. Real
-    CDX indexes hold multiple captures per URL — dedupe at ingest (keep
-    the latest warc_ts) rather than per wave: one shuffle once instead of
-    every wave.
-    ``config.validate_pages_unique`` checks this once at crawl start
-    (column-pruned to url — the fat html column is never read).
+    PRECONDITION: every URL a wave reaches has one row in ``pages`` (one
+    capture per URL) and its host at most one in ``robots``. The wave's
+    left joins emit one row per match, so an extra capture or robots row
+    duplicates a candidate, corrupting crawl order and the seen set.
+    Every wave checks this inside its one action (``run_wave``: candidate
+    rows == ``frontier_count``) and raises ``ValueError`` before that
+    wave commits; duplicates of URLs the crawl never reaches are
+    harmless and pass. Real CDX indexes hold multiple captures per URL —
+    dedupe at ingest (``sources.pages.latest_capture``, keep the latest
+    warc_ts) rather than per wave: one shuffle once instead of every
+    wave.
 
     ``pages`` not already hash-partitioned by url (cached or bucketed)
     is partitioned once here and cached for the crawl
@@ -274,17 +276,6 @@ def run_crawl(
     on a 12k-page crawl. The copy and its checkpoint blocks are released
     when the crawl ends (``release_pages_copy``).
     """
-    if config.validate_pages_unique:
-        from pyspark.sql import functions as F
-
-        dup = (
-            pages.groupBy("url").count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup:
-            raise ValueError(
-                "pages table has duplicate urls; dedupe at ingest "
-                "(e.g. keep max warc_ts per url) before run_crawl"
-            )
     fresh_start = not (
         resume and store is not None and store.current_snapshot() is not None
     )

@@ -218,7 +218,14 @@ def run_wave(
     from one committed snapshot), pairs the previous wave's
     ``new_frontier`` with its seen set, and step 9 builds that frontier
     disjoint from ``seen ∪ processed``. Direct callers pass
-    ``empty_seen`` or a previous wave's outputs the same way."""
+    ``empty_seen`` or a previous wave's outputs the same way.
+
+    Given ``frontier_count`` (the frontier's row count, which the
+    caller already holds), the wave checks that it classified each
+    frontier row exactly once, inside its one action: a URL with two
+    pages rows or a host with two robots rows makes the left joins emit
+    extra candidates. It then releases the wave's caches and raises
+    ``ValueError`` before returning anything to commit."""
     # 1. candidates = frontier: frontier ∩ seen = ∅ by the precondition,
     #    so the wave tests seen membership only at discovery (step 9)
     cand = frontier
@@ -348,9 +355,9 @@ def run_wave(
     )
 
     # 8. seen' = seen ∪ processed (everything but deferred)
-    # candidates are unique by canon_url (frontier is grouped) and disjoint
-    # from seen (the precondition), so the union needs NO distinct —
-    # skipping it saves a full-seen-set shuffle every wave.
+    # candidates are unique by canon_url (checked after the action below)
+    # and disjoint from seen (the precondition), so the union needs NO
+    # distinct — skipping it saves a full-seen-set shuffle every wave.
     # persist() here, localCheckpoint AFTER the wave's action (below):
     # a lazy localCheckpoint leaf materializes as its OWN SQL execution
     # the moment a downstream action is planned — with two such leaves
@@ -382,18 +389,16 @@ def run_wave(
     # one groupBy, not two: anti-join the exploded links against seen
     # first (all-or-nothing per canon_url, so min-priority is unchanged),
     # then merge with deferred in a single min-aggregation — saves a full
-    # shuffle+agg stage per wave vs group→anti→union→group.
+    # shuffle+agg stage per wave vs group→anti→union→group. host and surt
+    # are functions of canon_url, so grouping on the triple keeps the
+    # groups and leaves only the int min (a hash aggregate; a string
+    # min() forces a sort aggregate).
     # persist now, checkpoint-from-cache after the action (see step 8).
     new_frontier = (
         discovered.join(new_seen, "canon_url", "left_anti")
         .unionByName(deferred)
-        .groupBy("canon_url")
-        .agg(
-            F.min("host").alias("host"),
-            F.min("surt").alias("surt"),
-            F.min("priority").cast("int").alias("priority"),
-        )
-        .select("canon_url", "host", "surt", "priority")
+        .groupBy("canon_url", "host", "surt")
+        .agg(F.min("priority").cast("int").alias("priority"))
         .persist()
     )
 
@@ -403,7 +408,8 @@ def run_wave(
     #     count (operators/ordering.py phase 2, no dedicated collect);
     #   - the next frontier's size         → the caller's drained check
     #     and next wave's small-wave gate (no fresh count() per wave);
-    #   - the full class/extract/discovery breakdown.
+    #   - the full class/extract/discovery breakdown, whose class counts
+    #     sum to the candidate rows → the one-row-per-frontier-URL check.
     # The union is column-pruned to the constant tag, so the real work is
     # one pass over the wave's caches — and it doubles as the
     # materialization point for sorted_sel / new_frontier / processed.
@@ -438,6 +444,20 @@ def run_wave(
         r["k"]: r["n"]
         for r in tags.groupBy("k").agg(F.sum("w").alias("n")).collect()
     }
+    n_candidates = sum(
+        counts.get(c, 0) for c in ("disallowed", "miss", "ineligible", "eligible")
+    )
+    cached = (cand, ranked, extracted, processed, new_frontier, *seq_cache)
+    if frontier_count is not None and n_candidates != frontier_count:
+        for df in cached:
+            df.unpersist()
+        raise ValueError(
+            f"wave {wave}: {n_candidates} candidate rows for {frontier_count} "
+            "frontier urls — the pages table has duplicate urls or the robots "
+            "table duplicate hosts; keep one capture per url "
+            "(sources.pages.latest_capture) and one robots row per host"
+        )
+
     pid_counts = {
         int(k[4:]): int(n) for k, n in counts.items() if k.startswith("pid:")
     }
@@ -452,10 +472,7 @@ def run_wave(
     n_extracted = counts.get("extracted", 0)
     metrics = {
         "wave": wave,
-        "candidates": sum(
-            counts.get(c, 0)
-            for c in ("disallowed", "miss", "ineligible", "eligible")
-        ),
+        "candidates": n_candidates,
         "disallowed": counts.get("disallowed", 0),
         "misses": counts.get("miss", 0),
         "ineligible": counts.get("ineligible", 0),
@@ -480,5 +497,5 @@ def run_wave(
         new_frontier=frontier_leaf,
         processed=processed_leaf,
         metrics=metrics,
-        cached=(cand, ranked, extracted, processed, new_frontier, *seq_cache),
+        cached=cached,
     )

@@ -76,12 +76,7 @@ class SnapshotStore:
             path = os.path.join(self.root, name, f"snap-{snapshot}")
             writes.append((name, df, path))
             prev_entry = (prev or {"tables": {}})["tables"].get(name, {})
-            # legacy full-table entries ({"path": ...}) hold the complete
-            # cumulative table — carry that path as the base of the list
-            prev_paths = prev_entry.get("paths") or (
-                [prev_entry["path"]] if "path" in prev_entry else []
-            )
-            paths = [p for p in prev_paths if p != path] + [path]
+            paths = [p for p in prev_entry.get("paths", []) if p != path] + [path]
             manifest["tables"][name] = {"paths": paths}
         # the table writes are independent Spark jobs: submit them from
         # threads so the scheduler overlaps them (per-wave commit latency

@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.extract import decode_lossy, extract_text, split_http_response
+from ..functions.extract import extract_text, split_http_response
 
 WARC_DATE = "2024-07-22T12:00:00Z"
 
@@ -483,7 +483,7 @@ def _extract_response_batches(
             out["status"].append(status)
             out["n_bytes"].append(len(body))
             out["payload_md5"].append(hashlib.md5(body).hexdigest())
-            out["text"].append(extract_text(decode_lossy(body)))
+            out["text"].append(extract_text(body))
         yield pd.DataFrame(out)
 
 
@@ -491,7 +491,7 @@ def extract_responses(records: DataFrame) -> DataFrame:
     """WARC records → pages rows. The ``WARC-Type == 'response'`` filter
     (F4, rust/src/bin/worker.rs:48-56) is a DataFrame op between record
     iteration and extraction; the rest is one Arrow crossing applying
-    split_http_response (P5) + decode_lossy (P6) + extract_text (T2)."""
+    split_http_response (P5) + extract_text (its lossy decode is P6, then T2)."""
     responses = records.filter(F.col("warc_type") == "response")
     return responses.select("target_uri", "payload").mapInPandas(
         _extract_response_batches, schema=RESPONSE_SCHEMA

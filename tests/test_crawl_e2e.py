@@ -167,9 +167,8 @@ def test_crawl_over_in_plan_rows_matches_oracle_and_leaves_no_copy(
 def test_crawl_over_deduped_multicapture_pages(spark, corpus, oracle_result, tmp_path):
     """A pages table with 3 captures per url (older duplicates), deduped
     at ingest via latest_capture, crawls identically to the clean table
-    — AND passes the validate_pages_unique gate that rejects the raw
-    multi-capture table."""
-    import pytest as _pytest
+    — AND passes the per-wave one-row-per-frontier-URL check that
+    rejects the raw multi-capture table."""
     from pyspark.sql import functions as F
 
     from basic_common_crawl_pipeline_spark.sources.pages import latest_capture
@@ -182,15 +181,12 @@ def test_crawl_over_deduped_multicapture_pages(spark, corpus, oracle_result, tmp
             "warc_ts", F.col("warc_ts") - F.make_interval(days=F.lit(back))
         ).withColumn("html", F.lit(b"<html><p>stale</p></html>"))
         dup = dup.unionByName(older)
-    import dataclasses
-
-    cfg = dataclasses.replace(CONFIG, validate_pages_unique=True)
-    with _pytest.raises(ValueError, match="duplicate urls"):
-        run_crawl(spark, dup, seeds, robots, cfg, store=SnapshotStore(
+    with pytest.raises(ValueError, match="duplicate urls"):
+        run_crawl(spark, dup, seeds, robots, CONFIG, store=SnapshotStore(
             str(tmp_path / "reject")))
     deduped = latest_capture(dup)
     store = SnapshotStore(str(tmp_path / "ok"))
-    run_crawl(spark, deduped, seeds, robots, cfg, store=store)
+    run_crawl(spark, deduped, seeds, robots, CONFIG, store=store)
     order, results, seen = collect_outputs(spark, store)
     assert [(r["seq"], r["url"]) for r in order] == [
         (r["seq"], r["wave"], r["url"])[0:1] + (r["url"],)
@@ -198,6 +194,91 @@ def test_crawl_over_deduped_multicapture_pages(spark, corpus, oracle_result, tmp
     ]
     assert seen == oracle_result.seen
     assert {r["canon_url"]: r["text"] for r in results} == oracle_result.extracted
+
+
+def test_crawl_rejects_duplicate_robots_hosts(spark, corpus, tmp_path):
+    """A robots table listing every host twice doubles each candidate in
+    the wave's broadcast left join: the first wave raises instead of
+    committing a crawl order with every URL twice."""
+    pages, seeds, robots = corpus_to_spark(spark, corpus)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    with pytest.raises(ValueError, match="robots table duplicate hosts"):
+        run_crawl(
+            spark, pages, seeds, robots.unionByName(robots), CONFIG,
+            store=store,
+        )
+    assert store.current_snapshot() is None
+
+
+def test_rejected_wave_commits_nothing_and_leaks_no_cache(
+    spark, corpus, tmp_path
+):
+    """A crawl resumed over pages holding a second capture of every url
+    raises at its first wave: CURRENT and its manifest are unchanged, no
+    delta of that wave is written, and no persisted RDD outlives the
+    raise (the wave's caches, the robots cache and the pages copy are
+    all released)."""
+    import dataclasses
+    import os
+
+    from pyspark.sql import functions as F
+
+    pages, seeds, robots = corpus_to_spark(spark, corpus)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    run_crawl(
+        spark, pages, seeds, robots, dataclasses.replace(CONFIG, max_waves=2),
+        store=store,
+    )
+    manifest = store.read_manifest()
+    dup = pages.unionByName(
+        pages.withColumn("html", F.lit(b"<html><p>stale</p></html>"))
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match="wave 2: .* duplicate urls"):
+        run_crawl(spark, dup, seeds, robots, CONFIG, store=store, resume=True)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+    assert store.current_snapshot() == 2
+    assert store.read_manifest() == manifest
+    assert not os.path.exists(os.path.join(store.root, "seen", "snap-3"))
+
+
+def test_duplicates_of_unreached_urls_crawl_like_oracle(
+    spark, corpus, oracle_result, tmp_path
+):
+    """Second captures (stale html) of pages no crawl of this corpus
+    ever reaches — not seen once a crawl drains its frontier — are
+    never joined to a candidate, so the crawl passes the per-wave check
+    and equals the oracle."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    drained = run_oracle(
+        corpus.pages, corpus.seeds, corpus.robots,
+        dataclasses.replace(CONFIG, max_waves=100),
+    )
+    assert drained.metrics[-1]["frontier_size"] == 0
+    unreached = [p["url"] for p in corpus.pages if p["url"] not in drained.seen]
+    assert unreached
+    pages, seeds, robots = corpus_to_spark(spark, corpus)
+    dup = pages.unionByName(
+        pages.filter(F.col("url").isin(unreached)).withColumn(
+            "html", F.lit(b"<html><p>stale</p></html>")
+        )
+    )
+    assert dup.count() == len(corpus.pages) + len(unreached)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    state = run_crawl(spark, dup, seeds, robots, CONFIG, store=store)
+    order, results, seen = collect_outputs(spark, store)
+    assert [(r["seq"], r["wave"], r["url"]) for r in order] == [
+        (r["seq"], r["wave"], r["url"]) for r in oracle_result.crawl_order
+    ]
+    assert seen == oracle_result.seen
+    assert {r["canon_url"]: r["text"] for r in results} == oracle_result.extracted
+    assert [m["candidates"] for m in state.metrics] == [
+        m["candidates"] for m in oracle_result.metrics
+    ]
 
 
 def test_go_extractor_crawl_matches_oracle(spark, tmp_path):

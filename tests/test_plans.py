@@ -204,10 +204,19 @@ def _nodes_outside(plan, input_cache=None) -> list:
     """Every node of an executed plan, found by walking node classes
     through py4j: into AQE plans, query stages, reused exchanges and the
     cached plans of InMemoryTableScans — except ``input_cache`` (an
-    InMemoryRelation), whose own build nodes are not the plan's."""
-    found, stack = [], [plan]
+    InMemoryRelation), whose own build nodes are not the plan's. Each
+    JVM node is listed once (by identity), however many paths reach it:
+    a reused exchange or a cache scanned twice is one node."""
+    from pyspark import SparkContext
+
+    identity = SparkContext._jvm.java.lang.System.identityHashCode
+    found, visited, stack = [], set(), [plan]
     while stack:
         node = stack.pop()
+        key = identity(node)
+        if key in visited:
+            continue
+        visited.add(key)
         found.append(node)
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
@@ -1030,6 +1039,29 @@ def test_wave_runs_python_only_in_the_extract(spark):
                 df._jdf.queryExecution().executedPlan(), input_cache
             )
         assert found == ["MapInPandasExec"], found
+    finally:
+        for df in w0.cached + w1.cached:
+            df.unpersist()
+
+
+def test_wave_frontier_merge_has_no_sort_aggregate(spark):
+    """Discovery's min-priority merge groups on (canon_url, host, surt),
+    which host and surt are functions of, so only the int priority is
+    aggregated: no SortAggregateExec (forced by a string min()) in any
+    of a wave-1 run's caches."""
+    pages, w0, w1 = _wave1(spark)
+    input_cache = pages._jdf.queryExecution().optimizedPlan()
+    try:
+        assert w1.metrics["frontier_size"] > 0
+        found = [
+            n.getClass().getSimpleName()
+            for df in w1.cached
+            for n in _nodes_outside(
+                df._jdf.queryExecution().executedPlan(), input_cache
+            )
+        ]
+        assert "HashAggregateExec" in found
+        assert "SortAggregateExec" not in found
     finally:
         for df in w0.cached + w1.cached:
             df.unpersist()

@@ -1,6 +1,6 @@
 """Snapshot store: append-table (Iceberg-append) semantics — grow-only
-tables commit O(delta) per wave, replay is idempotent, legacy full-table
-manifests still read."""
+tables commit O(delta) per wave as a manifest path list, full-replacement
+tables keep one path, and replay is idempotent."""
 
 from __future__ import annotations
 

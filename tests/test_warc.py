@@ -190,10 +190,8 @@ def test_crawl_over_multicapture_warc_matches_direct(spark, tmp_path):
     captures per url (two older ones carrying corrupted html and non-200
     status), reconstructed via warc_pages(ts_col=...) and deduped with
     latest_capture, crawls identically to the clean single-capture
-    table — and the raw multi-capture table is rejected by the
-    uniqueness gate."""
-    import dataclasses
-
+    table — and the raw multi-capture table is rejected by the wave's
+    one-row-per-frontier-URL check."""
     import pytest
 
     from basic_common_crawl_pipeline_spark.plans.catalog import (
@@ -233,10 +231,7 @@ def test_crawl_over_multicapture_warc_matches_direct(spark, tmp_path):
     wpages = warc.warc_pages(cdx, meta_cols=("lang",), ts_col="wts")
     assert wpages.count() == 3 * caps.count()  # all captures fetched back
 
-    cfg = CrawlConfig(
-        wave_seconds=16.0, max_waves=2, salt_partitions=4,
-        validate_pages_unique=True,
-    )
+    cfg = CrawlConfig(wave_seconds=16.0, max_waves=2, salt_partitions=4)
     with pytest.raises(ValueError, match="duplicate urls"):
         run_crawl(spark, wpages, seeds, robots, cfg,
                   store=SnapshotStore(str(tmp_path / "reject")))
@@ -244,11 +239,7 @@ def test_crawl_over_multicapture_warc_matches_direct(spark, tmp_path):
     outs = []
     for name, p in (("direct", pages), ("warc_mc", deduped)):
         store = SnapshotStore(str(tmp_path / f"store_{name}"))
-        run_crawl(
-            spark, p, seeds, robots,
-            dataclasses.replace(cfg, validate_pages_unique=False),
-            store=store,
-        )
+        run_crawl(spark, p, seeds, robots, cfg, store=store)
         outs.append(collect_outputs(spark, store))
     (o_d, r_d, s_d), (o_w, r_w, s_w) = outs
     assert [(r["seq"], r["url"]) for r in o_w] == [
