@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.snapshots import SnapshotStore
@@ -194,7 +195,8 @@ def url_partitioned_pages(pages: DataFrame) -> DataFrame:
     copy is one pass over the rows against dozens of analyses per wave,
     so no size threshold applies.
 
-    The caller releases a returned copy with ``release_pages_copy``."""
+    The caller releases a returned copy with ``release((copy,),
+    (pages,))``."""
     in_plan_rows = any(
         leaf.getClass().getSimpleName() == "LocalRelation"
         for leaf in _leaves(pages)
@@ -208,16 +210,19 @@ def url_partitioned_pages(pages: DataFrame) -> DataFrame:
     return copy
 
 
-def release_pages_copy(copy: DataFrame, pages: DataFrame) -> None:
-    """Unpersist ``copy = url_partitioned_pages(pages)`` and the
-    local-checkpoint blocks of its lineage cut (an RDD leaf the copy has
-    and ``pages`` has not), so no pages-sized copy outlives the crawl
-    until a JVM GC."""
-    copy.unpersist()
-    theirs = _checkpoint_rdds(pages)
-    for rdd_id, rdd in _checkpoint_rdds(copy).items():
-        if rdd_id not in theirs:
-            rdd.unpersist(False)
+def release(frames, inputs) -> None:
+    """Unpersist each of ``frames`` and the local-checkpoint blocks under
+    it that none of ``inputs`` holds: an RDD leaf the frames have and the
+    inputs have not was cut by the caller (a pages copy's lineage cut, a
+    crawl's seed and per-wave frontier/processed leaves), so nothing
+    crawl-sized outlives it until a JVM GC. The inputs' own leaves and
+    caches are left alone."""
+    theirs = {i for df in inputs for i in _checkpoint_rdds(df)}
+    for df in frames:
+        df.unpersist()
+        for rdd_id, rdd in _checkpoint_rdds(df).items():
+            if rdd_id not in theirs:
+                rdd.unpersist(False)
 
 
 def run_crawl(
@@ -226,11 +231,15 @@ def run_crawl(
     seeds: DataFrame,
     robots: DataFrame,
     config: CrawlConfig = CrawlConfig(),
-    store: SnapshotStore | None = None,
+    *,
+    store: SnapshotStore,
     resume: bool = False,
     progress=None,
 ) -> CrawlState:
-    """Run waves until the frontier drains or ``config.max_waves``.
+    """Run waves until the frontier drains or ``config.max_waves``,
+    committing every wave to ``store``; the returned state's frontier
+    and seen are read back from its last snapshot (the seed frontier,
+    recomputed from ``seeds``, when no wave ran).
 
     Per-wave driver latency is ONE blocking Spark action (the wave's
     combined metrics/offsets/frontier-size job inside ``run_wave``):
@@ -243,12 +252,7 @@ def run_crawl(
       state is rebased onto the committed parquet. CURRENT still flips
       atomically after all of a snapshot's writes, so crash/resume
       semantics are unchanged (an interrupted wave replays
-      deterministically from the last committed snapshot);
-    - lineage truncation is free of extra executions: ``run_wave``
-      persists frontier/processed inside its single action, then hands
-      back ``localCheckpoint(eager=False)`` leaves wrapped around the
-      hot caches — materializing them later is a zero-job block copy —
-      and ``seen`` is rebased onto the committed parquet each wave.
+      deterministically from the last committed snapshot).
 
     With ``resume=False`` the store directory must not already contain a
     crawl (a fresh run over an old CURRENT would splice the old run's
@@ -273,13 +277,18 @@ def run_crawl(
     pandas): their copy is cut from that lineage first, because every
     wave re-analyzes its pages dozens of times and each analysis walks
     and hashes all those rows — 41.5% of the driver's planning samples
-    on a 12k-page crawl. The copy and its checkpoint blocks are released
-    when the crawl ends (``release_pages_copy``).
+    on a 12k-page crawl.
+
+    Whether it returns or raises, the crawl leaves the persisted RDDs
+    and the cache manager as it found them (``release``). A wave's
+    caches retire once its commit is done and the next wave's action
+    has run, together with the lazy ``localCheckpoint`` leaves they were
+    computed from (the seed frontier's under wave 0's, the previous
+    wave's frontier and processed under the others); the last wave's,
+    the pages copy and robots go at the end. A robots frame the caller
+    cached stays cached.
     """
-    fresh_start = not (
-        resume and store is not None and store.current_snapshot() is not None
-    )
-    if not fresh_start:
+    if resume and store.current_snapshot() is not None:
         manifest = store.read_manifest()
         state = CrawlState(
             wave=manifest["extra"]["next_wave"],
@@ -288,8 +297,10 @@ def run_crawl(
             seen=store.read_table(spark, "seen"),
             metrics=manifest["extra"]["metrics"],
         )
+        frontier_count = None
+        retiring: tuple = ()  # the previous wave's caches
     else:
-        if store is not None and store.current_snapshot() is not None:
+        if store.current_snapshot() is not None:
             raise ValueError(
                 "snapshot store already contains a crawl (CURRENT="
                 f"{store.current_snapshot()}); pass resume=True to continue "
@@ -303,34 +314,32 @@ def run_crawl(
         # its own SQL execution before the count's, paying two rounds of
         # AQE boundaries for one canonicalization (the wave-loop leaves
         # get the identical treatment in run_wave). The cache retires
-        # after wave 0's barrier, once the leaf's blocks exist.
+        # after wave 0's action, once the leaf's blocks exist; the leaf
+        # with wave 0's caches.
         initial_frontier = frontier_from_seeds(seeds).persist()
-        initial_count = initial_frontier.count()
+        frontier_count = initial_frontier.count()
         state = CrawlState(
             wave=0,
             next_seq=1,
             frontier=initial_frontier.localCheckpoint(eager=False),
             seen=empty_seen(spark),
         )
+        retiring = (initial_frontier,)
 
     from concurrent.futures import ThreadPoolExecutor
 
-    committer = ThreadPoolExecutor(max_workers=1) if store is not None else None
+    committer = ThreadPoolExecutor(max_workers=1)
     pending = None        # in-flight commit of the previous wave
-    retiring: tuple = ()  # its caches — unpersist only after its barrier
     committed_this_run = False
-    frontier_count: int | None = None
-    if fresh_start:
-        # the drained-check count already ran (cache-filling pass above);
-        # retire the initial frontier's cache after wave 0's barrier,
-        # once its checkpoint leaf has block-copied from it
-        frontier_count = initial_count
-        retiring = (initial_frontier,)
     # the robots dim is re-read every wave (broadcast join build) — cache
-    # it once per crawl instead of recomputing its lineage per wave
-    robots = robots.persist()
+    # it once per crawl instead of recomputing its lineage per wave,
+    # unless the caller already did (then the caller keeps it)
+    own_robots = robots.storageLevel == StorageLevel.NONE
+    if own_robots:
+        robots = robots.persist()
     input_pages = pages
     pages = url_partitioned_pages(pages)
+    inputs = (pages, robots, seeds)
     try:
         while state.wave < config.max_waves:
             if frontier_count is None:
@@ -361,120 +370,95 @@ def run_crawl(
                 progress(state.metrics)
 
             # barrier the previous wave's commit (it ran concurrently with
-            # this wave's job), then retire that wave's caches
+            # this wave's job), then retire that wave's caches and the
+            # leaves under them
             if pending is not None:
                 pending.result()
-                pending = None
                 committed_this_run = True
-            for cached_df in retiring:
-                cached_df.unpersist()
-            retiring = ()
+            release(retiring, inputs)
 
-            if store is not None:
-                tables = {
-                    "frontier": out.new_frontier,
-                    # S7: metrics as a queryable snapshot table, not only
-                    # manifest JSON
-                    "metrics": metrics_table(spark, state.metrics),
-                }
-                # seen/crawl_order/results grow monotonically: commit only
-                # this wave's delta (Iceberg-append semantics) — a
-                # cumulative rewrite would cost O(total²) I/O over a long
-                # crawl. seen's delta is exactly `processed` (wave step 8:
-                # seen' = seen ∪ processed, disjoint by construction).
-                append_tables = {
-                    "seen": out.processed,
-                    "crawl_order": out.crawl_order,
-                    "results": out.results,
-                }
-                extra = {
-                    "next_wave": state.wave + 1,
-                    "next_seq": next_seq,
-                    # copy: the background json.dump must not see metrics
-                    # appended by the NEXT wave
-                    "metrics": list(state.metrics),
-                }
-                snap = state.wave + 1
-                compact_now = bool(
-                    config.compact_every_n_waves
-                    and snap % config.compact_every_n_waves == 0
+            tables = {
+                "frontier": out.new_frontier,
+                # S7: metrics as a queryable snapshot table, not only
+                # manifest JSON
+                "metrics": metrics_table(spark, state.metrics),
+            }
+            # seen/crawl_order/results grow monotonically: commit only
+            # this wave's delta (Iceberg-append semantics) — a cumulative
+            # rewrite would cost O(total²) I/O over a long crawl. seen's
+            # delta is exactly `processed` (wave step 8:
+            # seen' = seen ∪ processed, disjoint by construction).
+            append_tables = {
+                "seen": out.processed,
+                "crawl_order": out.crawl_order,
+                "results": out.results,
+            }
+            extra = {
+                "next_wave": state.wave + 1,
+                "next_seq": next_seq,
+                # copy: the background json.dump must not see metrics
+                # appended by the NEXT wave
+                "metrics": list(state.metrics),
+            }
+            snap = state.wave + 1
+            compact_now = bool(
+                config.compact_every_n_waves
+                and snap % config.compact_every_n_waves == 0
+            )
+
+            def _commit_and_maybe_compact(
+                _snap=snap,
+                _tables=tables,
+                _extra=extra,
+                _appends=append_tables,
+                _compact=compact_now,
+            ):
+                store.commit(
+                    snapshot=_snap,
+                    tables=_tables,
+                    extra=_extra,
+                    append_tables=_appends,
                 )
+                if _compact:
+                    # fold the delta chains while the NEXT wave runs;
+                    # superseded delta files stay on disk (Iceberg
+                    # expire-snapshots territory), so in-flight lazy
+                    # readers of the old path list are unaffected
+                    for name in ("seen", "crawl_order", "results"):
+                        store.compact(spark, name)
 
-                def _commit_and_maybe_compact(
-                    _snap=snap,
-                    _tables=tables,
-                    _extra=extra,
-                    _appends=append_tables,
-                    _compact=compact_now,
-                ):
-                    store.commit(
-                        snapshot=_snap,
-                        tables=_tables,
-                        extra=_extra,
-                        append_tables=_appends,
-                    )
-                    if _compact:
-                        # fold the delta chains while the NEXT wave runs;
-                        # superseded delta files stay on disk (Iceberg
-                        # expire-snapshots territory), so in-flight lazy
-                        # readers of the old path list are unaffected
-                        for name in ("seen", "crawl_order", "results"):
-                            store.compact(spark, name)
-
-                # resolve the rebase BEFORE submitting the commit:
-                # read_table resolves the manifest's delta-path list at
-                # CALL time, so reading after the submit races the
-                # background CURRENT flip — if the flip lands first, seen
-                # would already include this wave's processed delta and
-                # the unionByName below would double it
-                base_seen = (
-                    store.read_table(spark, "seen")
-                    if committed_this_run
-                    else state.seen
-                )
-                pending = committer.submit(_commit_and_maybe_compact)
-                # next-wave state: depth-1 plans over committed parquet +
-                # this wave's checkpoint leaves — never reloaded eagerly
-                state.seen = base_seen.unionByName(out.processed)
-            else:
-                # no store → frontier/processed are already lazy
-                # localCheckpoint leaves (run_wave); collapse the seen
-                # union chain periodically so a long crawl's plan stays
-                # O(1) leaves. All lazy: zero extra jobs.
-                state.seen = state.seen.unionByName(out.processed)
-                if state.wave % 8 == 7:
-                    state.seen = state.seen.localCheckpoint(eager=False)
+            # resolve the rebase BEFORE submitting the commit: read_table
+            # resolves the manifest's delta-path list at CALL time, so
+            # reading after the submit races the background CURRENT flip
+            # — if the flip lands first, seen would already include this
+            # wave's processed delta and the unionByName below would
+            # double it
+            base_seen = (
+                store.read_table(spark, "seen")
+                if committed_this_run
+                else state.seen
+            )
+            pending = committer.submit(_commit_and_maybe_compact)
+            # next-wave state: depth-1 plans over committed parquet + this
+            # wave's checkpoint leaves — never reloaded eagerly
+            state.seen = base_seen.unionByName(out.processed)
             state.frontier = out.new_frontier
             retiring = out.cached
             state.wave += 1
             state.next_seq = next_seq
-        # the FINAL wave's checkpoint leaves have no next wave (and, with
-        # no store, no commit) to materialize them — copy their blocks
-        # from the still-hot caches now, before `finally` retires those
-        # caches, or every post-crawl action on the returned state would
-        # re-run the last wave from scratch (mid-crawl waves get this for
-        # free from the next wave's action / the background commit)
-        if store is None and retiring:
-            # ONE job for both leaves: counting the union computes (and
-            # block-copies) both checkpoint RDDs in a single action —
-            # two separate counts pay the job-submission latency twice
-            from pyspark.sql import functions as F
-
-            state.frontier.select(F.lit(1).alias("__one")).unionByName(
-                state.seen.select(F.lit(1).alias("__one"))
-            ).count()
-    finally:
         if pending is not None:
             pending.result()
-        for cached_df in retiring:
-            cached_df.unpersist()
-        robots.unpersist()
+    finally:
+        committer.shutdown()  # waits out an in-flight commit
+        release((*retiring, state.frontier, state.seen), inputs)
+        if own_robots:
+            robots.unpersist()
         if pages is not input_pages:
-            release_pages_copy(pages, input_pages)
-        if committer is not None:
-            committer.shutdown()
-    if store is not None and store.current_snapshot() is not None:
-        # hand back clean lineage-free handles rooted at the final commit
+            release((pages,), (input_pages,))
+    if store.current_snapshot() is None:
+        # no wave ran: the seed frontier, recomputed from seeds on use
+        state.frontier = initial_frontier
+    else:
         state.frontier = store.read_table(spark, "frontier")
         state.seen = store.read_table(spark, "seen")
     return state

@@ -301,26 +301,49 @@ def write_warc_corpus(
 # ---------------------------------------------------------------------------
 
 
+def _read_records(batch: pd.DataFrame) -> Iterator[tuple[int, dict, bytes]]:
+    """(row, WARC headers, block) for each CDX row of ``batch`` (filename,
+    offset, length) whose record parses: exactly the member's byte range,
+    read and gunzipped standalone — the range-GET of
+    rust/src/commoncrawl.rs:34-67, against local/posix paths (S3/HDFS
+    range reads swap in behind the same row shape). Each file is opened
+    once per batch, not once per row; rows come grouped by file, files
+    in first-seen order."""
+    offsets, lengths = batch["offset"].tolist(), batch["length"].tolist()
+    rows_of: dict[str, list[int]] = {}
+    for i, fname in enumerate(batch["filename"].tolist()):
+        rows_of.setdefault(fname, []).append(i)
+    for fname, rows in rows_of.items():
+        with open(fname, "rb") as f:
+            for i in rows:
+                f.seek(offsets[i])
+                rec = parse_warc_record(gzip.decompress(f.read(lengths[i])))
+                if rec is not None:  # malformed-record skip (F6-tolerant)
+                    yield i, *rec
+
+
+def _parse_http_response(block: bytes) -> tuple[int, bytes] | None:
+    """(status, body) of an HTTP response message, or None when its
+    headers never end in a blank line or its status line holds no
+    integer code (the body-split failure skip, F8)."""
+    body = split_http_response(block)
+    if body is None:
+        return None
+    try:
+        return int(block.split(b"\r\n", 1)[0].split(b" ")[1]), body
+    except (IndexError, ValueError):
+        return None
+
+
 def _fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(url, filename, offset, length) → one WARC record per row, read as
-    exactly the member's byte range and gunzipped standalone — the
-    range-GET of rust/src/commoncrawl.rs:34-67, against local/posix paths
-    (S3/HDFS range reads swap in behind the same row shape)."""
+    """(url, filename, offset, length) → one WARC record per row
+    (``_read_records``)."""
     for batch in batches:
         out: dict[str, list] = {"target_uri": [], "warc_type": [], "payload": []}
-        # open each file once per batch, not once per row
-        for fname, group in batch.groupby("filename", sort=False):
-            with open(fname, "rb") as f:
-                for off, length in zip(group["offset"], group["length"]):
-                    f.seek(int(off))
-                    raw = gzip.decompress(f.read(int(length)))
-                    rec = parse_warc_record(raw)
-                    if rec is None:
-                        continue  # malformed-record skip (F6-tolerant)
-                    headers, block = rec
-                    out["target_uri"].append(headers.get("WARC-Target-URI"))
-                    out["warc_type"].append(headers.get("WARC-Type"))
-                    out["payload"].append(block)
+        for _, headers, block in _read_records(batch):
+            out["target_uri"].append(headers.get("WARC-Target-URI"))
+            out["warc_type"].append(headers.get("WARC-Type"))
+            out["payload"].append(block)
         yield pd.DataFrame(out)
 
 
@@ -353,33 +376,19 @@ def _page_batches(through_cols: tuple = ()):
                 "url": [], "status": [], "html": [],
                 **{c: [] for c in through_cols},
             }
-            for fname, group in batch.groupby("filename", sort=False):
-                through_vals = {c: group[c].tolist() for c in through_cols}
-                with open(fname, "rb") as f:
-                    for i, (url, off, length) in enumerate(
-                        zip(group["url"], group["offset"], group["length"])
-                    ):
-                        f.seek(int(off))
-                        raw = gzip.decompress(f.read(int(length)))
-                        rec = parse_warc_record(raw)
-                        if rec is None:
-                            continue
-                        headers, block = rec
-                        if headers.get("WARC-Type") != "response":
-                            continue
-                        body = split_http_response(block)
-                        if body is None:
-                            continue
-                        parts = block.split(b"\r\n", 1)[0].split(b" ")
-                        try:
-                            status = int(parts[1])
-                        except (IndexError, ValueError):
-                            continue
-                        out["url"].append(url)
-                        out["status"].append(status)
-                        out["html"].append(body)
-                        for c in through_cols:
-                            out[c].append(through_vals[c][i])
+            urls = batch["url"].tolist()
+            through_vals = {c: batch[c].tolist() for c in through_cols}
+            for i, headers, block in _read_records(batch):
+                if headers.get("WARC-Type") != "response":
+                    continue
+                parsed = _parse_http_response(block)
+                if parsed is None:
+                    continue
+                out["url"].append(urls[i])
+                out["status"].append(parsed[0])
+                out["html"].append(parsed[1])
+                for c in through_cols:
+                    out[c].append(through_vals[c][i])
             yield pd.DataFrame(out)
 
     return fetch
@@ -470,15 +479,10 @@ def _extract_response_batches(
             "url": [], "status": [], "n_bytes": [], "payload_md5": [], "text": []
         }
         for uri, payload in zip(batch["target_uri"], batch["payload"]):
-            raw = bytes(payload)
-            body = split_http_response(raw)
-            if body is None:
-                continue  # body-split failure skip (F8)
-            status_line = raw.split(b"\r\n", 1)[0].split(b" ")
-            try:
-                status = int(status_line[1])
-            except (IndexError, ValueError):
+            parsed = _parse_http_response(bytes(payload))
+            if parsed is None:
                 continue
+            status, body = parsed
             out["url"].append(uri)
             out["status"].append(status)
             out["n_bytes"].append(len(body))

@@ -16,7 +16,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -30,8 +32,9 @@ def main() -> None:
 
     from basic_common_crawl_pipeline_spark.plans import catalog
     from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
-    from basic_common_crawl_pipeline_spark.plans.crawl import run_crawl
+    from basic_common_crawl_pipeline_spark.plans.crawl import release, run_crawl
     from basic_common_crawl_pipeline_spark.session import get_spark
+    from basic_common_crawl_pipeline_spark.sources.snapshots import SnapshotStore
 
     spark = get_spark(
         app_name="bench", master=f"local[{cpus}]",
@@ -55,17 +58,24 @@ def main() -> None:
     robots = robots.localCheckpoint(eager=True)
     throughput["corpus_pages"] = n_pages
 
-    # best of 2 (shared host: single-run timings swing ±30%)
+    # best of 2 (shared host: single-run timings swing ±30%); each trial
+    # commits every wave to a fresh store, removed after the clock stops
     crawl_sec, urls = None, 0
     for _trial in range(2):
-        t0 = time.time()
-        state = run_crawl(
-            spark, pages, seeds, robots,
-            CrawlConfig(wave_seconds=65536.0, max_waves=3, salt_partitions=8),
-        )
-        trial_sec = time.time() - t0
+        store_dir = tempfile.mkdtemp(prefix="bench_crawl_")
+        try:
+            t0 = time.time()
+            state = run_crawl(
+                spark, pages, seeds, robots,
+                CrawlConfig(wave_seconds=65536.0, max_waves=3, salt_partitions=8),
+                store=SnapshotStore(store_dir),
+            )
+            trial_sec = time.time() - t0
+        finally:
+            shutil.rmtree(store_dir)
         urls = sum(m["selected"] for m in state.metrics)
         crawl_sec = trial_sec if crawl_sec is None else min(crawl_sec, trial_sec)
+    release((seeds, robots), ())
     timings["crawl_3waves"] = round(crawl_sec, 3)
     throughput["frontier_urls_per_sec"] = round(urls / crawl_sec, 2)
     throughput["crawl_urls"] = urls
@@ -101,10 +111,18 @@ def main() -> None:
             spark, bfrontier, empty_seen(spark), bpages, brobots, wave=0,
             config=CrawlConfig(wave_seconds=1 << 20, salt_partitions=8),
         )
-        bout.new_frontier.localCheckpoint(True)
+        eager_leaf = bout.new_frontier.localCheckpoint(True)
         trial_sec = time.time() - t0
         big_urls = bout.metrics["selected"]
         big_sec = trial_sec if big_sec is None else min(big_sec, trial_sec)
+        # after the clock: this trial's wave caches (extracted text
+        # included), its two leaves and the eager checkpoint
+        release(
+            (*bout.cached, bout.processed, bout.new_frontier, eager_leaf),
+            (bfrontier, bpages, brobots),
+        )
+    brobots.unpersist()
+    release((bfrontier,), (bseeds,))
     timings["crawl_bigwave"] = round(big_sec, 3)
     throughput["bigwave_corpus_pages"] = n_bpages
     throughput["bigwave_frontier"] = n_bfrontier

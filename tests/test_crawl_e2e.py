@@ -213,34 +213,81 @@ def test_crawl_rejects_duplicate_robots_hosts(spark, corpus, tmp_path):
 def test_rejected_wave_commits_nothing_and_leaks_no_cache(
     spark, corpus, tmp_path
 ):
-    """A crawl resumed over pages holding a second capture of every url
-    raises at its first wave: CURRENT and its manifest are unchanged, no
-    delta of that wave is written, and no persisted RDD outlives the
-    raise (the wave's caches, the robots cache and the pages copy are
-    all released)."""
+    """However a crawl ends, it leaves the persisted RDDs as it found
+    them (its caches, the lazy checkpoint leaves of the seed frontier and
+    of every wave, and the pages copy are all released) and a robots
+    frame the caller cached stays cached: a completed 5-wave crawl, a
+    fresh crawl over pages holding a second capture of every url
+    (rejected at wave 0), and a crawl resumed over those pages (rejected
+    at wave 2). A rejected wave commits nothing: CURRENT and its
+    manifest are unchanged and no delta of that wave is written."""
     import dataclasses
     import os
 
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     pages, seeds, robots = corpus_to_spark(spark, corpus)
-    store = SnapshotStore(str(tmp_path / "snap"))
-    run_crawl(
-        spark, pages, seeds, robots, dataclasses.replace(CONFIG, max_waves=2),
-        store=store,
-    )
-    manifest = store.read_manifest()
+    robots.persist().count()
     dup = pages.unionByName(
         pages.withColumn("html", F.lit(b"<html><p>stale</p></html>"))
     )
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
-    with pytest.raises(ValueError, match="wave 2: .* duplicate urls"):
-        run_crawl(spark, dup, seeds, robots, CONFIG, store=store, resume=True)
-    assert set(jsc.getPersistentRDDs().keySet()) <= before
-    assert store.current_snapshot() == 2
-    assert store.read_manifest() == manifest
-    assert not os.path.exists(os.path.join(store.root, "seen", "snap-3"))
+
+    def left_as_found():
+        return (
+            set(jsc.getPersistentRDDs().keySet()) <= before
+            and robots.storageLevel != StorageLevel.NONE
+        )
+
+    try:
+        state = run_crawl(
+            spark, pages, seeds, robots, CONFIG,
+            store=SnapshotStore(str(tmp_path / "full")),
+        )
+        assert state.wave == CONFIG.max_waves
+        assert left_as_found()
+
+        fresh = SnapshotStore(str(tmp_path / "fresh"))
+        with pytest.raises(ValueError, match="wave 0: .* duplicate urls"):
+            run_crawl(spark, dup, seeds, robots, CONFIG, store=fresh)
+        assert left_as_found()
+        assert fresh.current_snapshot() is None
+
+        store = SnapshotStore(str(tmp_path / "snap"))
+        run_crawl(
+            spark, pages, seeds, robots,
+            dataclasses.replace(CONFIG, max_waves=2), store=store,
+        )
+        assert left_as_found()
+        manifest = store.read_manifest()
+        with pytest.raises(ValueError, match="wave 2: .* duplicate urls"):
+            run_crawl(spark, dup, seeds, robots, CONFIG, store=store, resume=True)
+        assert left_as_found()
+        assert store.current_snapshot() == 2
+        assert store.read_manifest() == manifest
+        assert not os.path.exists(os.path.join(store.root, "seen", "snap-3"))
+    finally:
+        robots.unpersist()
+
+
+def test_crawl_drained_before_wave_0_commits_nothing(spark, tmp_path):
+    """Seeds that all fail canonicalization drain the crawl before wave
+    0: nothing is committed, and the returned state, whose seed leaf the
+    crawl has released, still reads as an empty frontier and seen set."""
+    corpus = synth_corpus(n_pages=40, n_hosts=2, seed=3, n_seeds=4)
+    pages, _, robots = corpus_to_spark(spark, corpus)
+    seeds = spark.createDataFrame(
+        [("mailto:a@b.c", 1), ("not a url", 1), ("ftp://x.com/a", 1)],
+        "url string, priority int",
+    )
+    store = SnapshotStore(str(tmp_path / "snap"))
+    state = run_crawl(spark, pages, seeds, robots, CONFIG, store=store)
+    assert store.current_snapshot() is None
+    assert (state.wave, state.metrics) == (0, [])
+    assert state.frontier.count() == 0
+    assert state.seen.count() == 0
 
 
 def test_duplicates_of_unreached_urls_crawl_like_oracle(

@@ -348,7 +348,7 @@ def test_url_partitioned_pages_cuts_in_plan_rows(spark):
         pages_from_documents,
     )
     from basic_common_crawl_pipeline_spark.plans.crawl import (
-        release_pages_copy,
+        release,
         url_partitioned,
         url_partitioned_pages,
     )
@@ -367,7 +367,7 @@ def test_url_partitioned_pages_cuts_in_plan_rows(spark):
         assert url_partitioned(prepared)
         assert _wave_html_shuffles(spark, prepared, seeds, robots) == []
     finally:
-        release_pages_copy(prepared, pages)
+        release((prepared,), (pages,))
         pages.unpersist()
 
 
