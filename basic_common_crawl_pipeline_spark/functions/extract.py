@@ -120,7 +120,7 @@ def decode_lossy(html: bytes | str | None) -> str | None:
 # document containing a construct whose html.parser handling it does not
 # replicate exactly:
 #
-# - comments (callers pre-check ``<!--``), declarations/PIs (``<!``/``<?``),
+# - comments, declarations and PIs (any ``<!`` or ``<?``),
 # - any ``<`` that does not start a fully well-formed tag per _FAST_TAG_RE
 #   (html.parser's tolerant recovery on broken markup is NOT reproduced),
 # - script/style whose closing tag is not a plain ``</name␣*>`` (html.parser
@@ -157,21 +157,22 @@ _CDATA_END = {
 
 
 def _fast_first_href(attrs: str) -> str | None:
-    """First ``href`` value of an already-validated attr string, with
-    html.parser's lowercase-name and unescape-value semantics."""
+    """First non-empty ``href`` value of an already-validated attr
+    string, with html.parser's lowercase-name and unescape-value
+    semantics — the value ``_LinkCollector`` keeps (it skips an empty or
+    valueless ``href`` and reads on)."""
     for m in _FAST_ATTR_RE.finditer(attrs):
         if m.group(1).lower() == "href":
             v = m.group(2) or m.group(3) or m.group(4)
             if v:
                 return unescape(v) if "&" in v else v
-            return None  # first href wins even when empty (parity)
     return None
 
 
 def _fast_scan(s: str) -> tuple[list[str], list[str]] | None:
     """One-pass (text blocks, raw hrefs) over the strict subset, or None
-    when the document must take the html.parser path. ``s`` must already
-    be comment-free (callers check ``'<!--' not in s``).
+    when the document must take the html.parser path (any ``<!``,
+    comments included, is refused here).
 
     Driven by ONE ``finditer`` over the tag regex (C-speed scanning
     between tags) instead of a per-'<' find+match loop; the subset

@@ -62,14 +62,12 @@ def extract_links_rich(
     decoded = decode_lossy(html)
     if not decoded:
         return []
-    hrefs = None
-    if "<!--" not in decoded:
-        # comment-free: the strict-subset single-pass scanner sees the
-        # same byte stream html.parser would (functions/extract.py)
-        fast = _fast_scan(decoded)
-        if fast is not None:
-            hrefs = fast[1]
-    if hrefs is None:
+    # the strict-subset single-pass scanner sees the same byte stream
+    # html.parser would, or refuses (functions/extract.py)
+    fast = _fast_scan(decoded)
+    if fast is not None:
+        hrefs = fast[1]
+    else:
         parser = _LinkCollector()
         try:
             parser.feed(decoded)
@@ -131,16 +129,15 @@ def extract_page(
         # extract_text returns None on blank docs; a whitespace-only doc
         # has no <a> tags, so extract_links_rich would return [] too
         return None, []
-    if "<!--" not in decoded:
-        fast = _fast_scan(decoded)
-        if fast is not None:
-            blocks, hrefs = fast
-            seen: set[str] = set()
-            kept: list[str] = []
-            for block in blocks:
-                if block not in seen:
-                    seen.add(block)
-                    kept.append(block)
-            text = "\n".join(kept) or None
-            return text, _resolve_links(hrefs, base_url)
+    fast = _fast_scan(decoded)
+    if fast is not None:
+        blocks, hrefs = fast
+        seen: set[str] = set()
+        kept: list[str] = []
+        for block in blocks:
+            if block not in seen:
+                seen.add(block)
+                kept.append(block)
+        text = "\n".join(kept) or None
+        return text, _resolve_links(hrefs, base_url)
     return extract_text(html), extract_links_rich(html, base_url)

@@ -229,6 +229,9 @@ def test_fast_scanner_matches_htmlparser_reference():
         b"<p>trailing<",
         b"<!DOCTYPE html><p>doc</p>",
         b"<a href=''>e</a><a href=\"/first\" href=\"/second\">two</a>",
+        # an empty or valueless first href: html.parser reads on to /x
+        b'<a href="" href="/x">empty-first</a>',
+        b'<a href href="/x">valueless-first</a>',
         b"<ScRiPt>x</sCrIpT><p>after</p>",
         b"<style>a</STYLE ><p>s</p>",
         b"<p>a</p><script>never closes",

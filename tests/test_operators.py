@@ -1549,8 +1549,11 @@ def test_emb_kmeans_bench_trial_leaves_no_cached_copy(spark):
     """The emb_kmeans entry hands its persisted quantized frame to its
     caller; a bench trial of its declared action (exactly as bench.py
     runs it) must release that frame, so no trial leaves a cached copy
-    of the embeddings behind."""
+    of the embeddings behind. The flagship wave keeps only its returned
+    frame's eager checkpoint: its caches and its wave's two lazy
+    checkpoint leaves are released before it returns."""
     from basic_common_crawl_pipeline_spark.plans import catalog
+    from basic_common_crawl_pipeline_spark.plans.crawl import release
     from tests.conftest import SF_SMALL
 
     jsc = spark.sparkContext._jsc
@@ -1558,6 +1561,73 @@ def test_emb_kmeans_bench_trial_leaves_no_cached_copy(spark):
     for _ in range(2):
         catalog.bench_trial(spark, SF_SMALL, "emb_kmeans")
     assert set(jsc.getPersistentRDDs().keySet()) == before
+
+    fixture = catalog.pages_from_documents(spark, SF_SMALL)  # memoized
+    for _ in range(2):
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = catalog.QUERIES["crawl_wave_flagship"](spark, SF_SMALL)
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+        release((out,), fixture)
+
+
+def test_catalog_bench_trials_leave_no_dir_view_or_cache(
+    spark, tmp_path, monkeypatch
+):
+    """Entries that write files or drain a stream hand the directories
+    and the in-memory view to their caller; bench trials of them (as
+    bench.py runs them) leave the scratch root's listing, the persisted
+    RDDs and the session's tables as they found them, and write nothing
+    into the temp dir outside the scratch root."""
+    import os
+    import tempfile
+
+    from basic_common_crawl_pipeline_spark.plans import catalog
+    from tests.conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    root = catalog._scratch_root()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def state():
+        return (
+            sorted(os.listdir(root)),
+            sorted(os.listdir(tmp_path)),
+            set(jsc.getPersistentRDDs().keySet()),
+            sorted(t.name for t in spark.catalog.listTables()),
+        )
+
+    before = state()
+    for name in ("warc_ingest", "warc_range_fetch", "stream_windowed_events"):
+        for _ in range(2):
+            catalog.bench_trial(spark, SF_SMALL, name)
+        assert state() == before, name
+
+
+def test_scratch_root_is_removed_at_exit(tmp_path):
+    """The catalog's scratch root goes when the process exits: a plain
+    Python process (no Spark session) that writes into a scratch
+    directory leaves its temp dir empty."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from basic_common_crawl_pipeline_spark.plans import catalog\n"
+        "d = catalog._scratch_dir('probe')\n"
+        "open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "print(catalog._scratch_root())\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, check=True,
+    )
+    root = done.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []
 
 
 def test_kmeans_int_empty_cluster_keeps_centroid(spark):

@@ -823,21 +823,25 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
             spark, "bk_cdx"
         )
         joined = l.join(r, "url").select("url", "size", "meta")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
+        assert joined.count() == 2000
+        nodes = _nodes_outside(joined._jdf.queryExecution().executedPlan())
+        names = [n.getClass().getSimpleName() for n in nodes]
         # the surviving Sort nodes are partition-LOCAL (within a bucket,
         # no shuffle behind them) — Spark 3+ ignores bucket sort order
         # unless spark.sql.legacy.bucketedTableScan.outputOrdering is
-        # set; the scale win pinned here is the absent Exchange
-        assert "Bucketed: true" in plan
-        assert joined.count() == 2000
+        # set; the scale win pinned here is the absent exchange
+        assert "ShuffleExchangeExec" not in names, names
+        assert names.count("SortMergeJoinExec") == 1, names
+        assert any(
+            n.getClass().getSimpleName() == "FileSourceScanExec"
+            and n.bucketedScan()
+            for n in nodes
+        ), names
         # same files without catalog metadata: exchange comes back
         raw = spark.read.parquet(str(tmp_path / "bk_pages")).join(
             spark.read.parquet(str(tmp_path / "bk_cdx")), "url"
         )
-        raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in raw_plan
+        assert _shuffles_outside(raw._jdf.queryExecution().executedPlan(), None)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         drop_bucketed_table(spark, "bk_pages")
