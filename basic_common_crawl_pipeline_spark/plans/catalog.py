@@ -3270,19 +3270,20 @@ def stream_decontaminate(spark, sf_dir):
 )
 def sql_revenue_by_segment(spark, sf_dir):
     """The spark.sql surface: same Catalyst plans from SQL text as from
-    the DataFrame API — views registered over the parquet tables."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
+    the DataFrame API — the parquet tables passed as DataFrame arguments,
+    whose views ``spark.sql`` registers and drops within the call."""
     return spark.sql(
         """
         SELECT c_mktsegment,
                count(*) AS n_orders,
                floor(sum(o_totalprice) * 10000 + 0.5) / 10000 AS revenue,
                floor(avg(o_totalprice) * 10000 + 0.5) / 10000 AS avg_price
-        FROM v_orders JOIN v_customer ON o_custkey = c_custkey
+        FROM {orders} JOIN {customer} ON o_custkey = c_custkey
         WHERE o_orderdate >= TIMESTAMP '1998-01-01'
         GROUP BY c_mktsegment
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
     )
 
 

@@ -15,7 +15,7 @@ The reference's byte-level path is:
 Spark-first restatement: the corpus is a directory of .warc.gz files
 (local in the sandbox; S3/HDFS on a cluster — the reads go through
 Python ``open`` for ranges and Spark's ``binaryFile`` source for full
-scans). Two ingestion paths share one extraction stage:
+scans). Two ingestion paths share one extraction batch function:
 
 - **range path** (S2/S3): a CDX DataFrame (url, filename, offset,
   length) → ``fetch_warc_records`` opens each file once per Arrow batch
@@ -23,10 +23,16 @@ scans). Two ingestion paths share one extraction stage:
 - **scan path** (P4): ``scan_warc_files`` reads whole files via the
   ``binaryFile`` source and iterates ALL gzip members/records, including
   the request/warcinfo records the CDX never points at — the F4 filter
-  then drops them as a visible DataFrame op.
+  in the extraction batch function then drops them.
 
-All Python is Arrow-batched ``mapInPandas``; payload bytes move through
-one narrow (shuffle-free) stage chain, never a shuffle.
+All Python is Arrow-batched ``mapInPandas``; payload bytes never cross a
+shuffle. ``extract_responses`` over a producer's direct output runs the
+producer's batch function and the extraction in ONE ``mapInPandas``, so
+each ingest task starts one Python worker and the payload crosses Arrow
+once: every Python task pays a fixed ~0.2 s of worker set-up
+(``importlib.invalidate_caches()`` makes each zipimporter re-read
+pyspark.zip) before it reads a row, and two chained Python stages paid
+it twice per task.
 """
 
 from __future__ import annotations
@@ -308,7 +314,8 @@ def _read_records(batch: pd.DataFrame) -> Iterator[tuple[int, dict, bytes]]:
     rust/src/commoncrawl.rs:34-67, against local/posix paths (S3/HDFS
     range reads swap in behind the same row shape). Each file is opened
     once per batch, not once per row; rows come grouped by file, files
-    in first-seen order."""
+    in first-seen order. A range that does not gunzip (cut short,
+    shifted offset) is skipped like a record that does not parse."""
     offsets, lengths = batch["offset"].tolist(), batch["length"].tolist()
     rows_of: dict[str, list[int]] = {}
     for i, fname in enumerate(batch["filename"].tolist()):
@@ -317,7 +324,11 @@ def _read_records(batch: pd.DataFrame) -> Iterator[tuple[int, dict, bytes]]:
         with open(fname, "rb") as f:
             for i in rows:
                 f.seek(offsets[i])
-                rec = parse_warc_record(gzip.decompress(f.read(lengths[i])))
+                try:
+                    raw = gzip.decompress(f.read(lengths[i]))
+                except (EOFError, gzip.BadGzipFile, zlib.error):
+                    continue  # a range that does not gunzip: the same skip
+                rec = parse_warc_record(raw)
                 if rec is not None:  # malformed-record skip (F6-tolerant)
                     yield i, *rec
 
@@ -347,11 +358,21 @@ def _fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
+def _records_frame(inputs: DataFrame, batches) -> DataFrame:
+    """``inputs`` mapped to RECORD_SCHEMA rows by ``batches``; the frame
+    remembers both so ``extract_responses`` can fuse with it. The pair
+    is a Python attribute of this one object: any DataFrame op returns a
+    new object without it, so only a direct composition fuses."""
+    records = inputs.mapInPandas(batches, schema=RECORD_SCHEMA)
+    records._warc_producer = (inputs, batches)
+    return records
+
+
 def fetch_warc_records(cdx: DataFrame) -> DataFrame:
     """S2/S3: range-fetch the CDX's records → (target_uri, warc_type,
     payload bytes)."""
-    return cdx.select("url", "filename", "offset", "length").mapInPandas(
-        _fetch_batches, schema=RECORD_SCHEMA
+    return _records_frame(
+        cdx.select("url", "filename", "offset", "length"), _fetch_batches
     )
 
 
@@ -463,7 +484,7 @@ def scan_warc_files(spark: SparkSession, warc_dir: str) -> DataFrame:
     files = spark.read.format("binaryFile").load(
         os.path.join(warc_dir, "*.warc.gz")
     )
-    return files.select("content").mapInPandas(_scan_batches, schema=RECORD_SCHEMA)
+    return _records_frame(files.select("content"), _scan_batches)
 
 
 # ---------------------------------------------------------------------------
@@ -478,7 +499,11 @@ def _extract_response_batches(
         out: dict[str, list] = {
             "url": [], "status": [], "n_bytes": [], "payload_md5": [], "text": []
         }
-        for uri, payload in zip(batch["target_uri"], batch["payload"]):
+        for uri, warc_type, payload in zip(
+            batch["target_uri"], batch["warc_type"], batch["payload"]
+        ):
+            if warc_type != "response":  # F4
+                continue
             parsed = _parse_http_response(bytes(payload))
             if parsed is None:
                 continue
@@ -492,11 +517,27 @@ def _extract_response_batches(
 
 
 def extract_responses(records: DataFrame) -> DataFrame:
-    """WARC records → pages rows. The ``WARC-Type == 'response'`` filter
-    (F4, rust/src/bin/worker.rs:48-56) is a DataFrame op between record
-    iteration and extraction; the rest is one Arrow crossing applying
-    split_http_response (P5) + extract_text (its lossy decode is P6, then T2)."""
-    responses = records.filter(F.col("warc_type") == "response")
-    return responses.select("target_uri", "payload").mapInPandas(
-        _extract_response_batches, schema=RESPONSE_SCHEMA
+    """WARC records → pages rows: the ``WARC-Type == 'response'`` filter
+    (F4, rust/src/bin/worker.rs:48-56), split_http_response (P5) and
+    extract_text (its lossy decode is P6, then T2), all in one batch
+    function.
+
+    When ``records`` is the direct, uncached output of
+    ``fetch_warc_records`` or ``scan_warc_files``, the producer's batch
+    function and this one run in ONE ``mapInPandas`` over the producer's
+    input: one Python worker per task instead of two, each of which pays
+    a fixed ~0.2 s of set-up before it reads a row. Any other records
+    frame (filtered, selected, cached, hand-built) goes through its own
+    ``mapInPandas`` with the same batch function and the same rows."""
+    producer = None if records.is_cached else getattr(
+        records, "_warc_producer", None
+    )
+    if producer is None:
+        return records.select("target_uri", "warc_type", "payload").mapInPandas(
+            _extract_response_batches, schema=RESPONSE_SCHEMA
+        )
+    inputs, produce = producer
+    return inputs.mapInPandas(
+        lambda batches: _extract_response_batches(produce(batches)),
+        schema=RESPONSE_SCHEMA,
     )

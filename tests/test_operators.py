@@ -1603,6 +1603,19 @@ def test_catalog_bench_trials_leave_no_dir_view_or_cache(
         assert state() == before, name
 
 
+def test_sql_entry_leaves_session_tables_unchanged(spark):
+    """sql_revenue_by_segment hands its tables to ``spark.sql`` as
+    DataFrame arguments, whose views are dropped within the call:
+    building and collecting the entry leaves the session's tables as
+    they were."""
+    from basic_common_crawl_pipeline_spark.plans import catalog
+    from tests.conftest import SF_SMALL
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    assert catalog.QUERIES["sql_revenue_by_segment"](spark, SF_SMALL).collect()
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
 def test_scratch_root_is_removed_at_exit(tmp_path):
     """The catalog's scratch root goes when the process exits: a plain
     Python process (no Spark session) that writes into a scratch

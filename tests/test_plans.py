@@ -91,18 +91,33 @@ def test_no_rowbased_python_udf_anywhere():
 
 def test_warc_range_path_is_shuffle_free(spark, tmp_path):
     """S2/S3 physical chain (cdx -> range fetch -> response filter ->
-    extract) is a narrow pipeline: no Exchange anywhere in the plan."""
+    extract) is a narrow pipeline: no Exchange anywhere in the plan. On
+    both ingest paths the producer and the extraction fuse into ONE
+    Python map, so each task starts one Python worker; a cached producer
+    output is not fused past."""
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         _warc_fixture_pages,
     )
     from basic_common_crawl_pipeline_spark.sources import warc
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
-    cdx = warc.write_warc_corpus(spark, _warc_fixture_pages(docs),
-                                 str(tmp_path / "wc"))
+    out_dir = str(tmp_path / "wc")
+    cdx = warc.write_warc_corpus(spark, _warc_fixture_pages(docs), out_dir)
     out = warc.extract_responses(warc.fetch_warc_records(cdx))
     assert "Exchange" not in _plan(out)
-    assert out.count() == 50
+    for df in (out, warc.extract_responses(warc.scan_warc_files(spark, out_dir))):
+        assert len(df.collect()) == 50
+        plan = df._jdf.queryExecution().executedPlan()
+        assert _python_nodes(plan) == ["MapInPandasExec"]
+    # a cached producer output is read from its cache, not fused past it
+    records = warc.fetch_warc_records(cdx).cache()
+    try:
+        plan = warc.extract_responses(records)._jdf.queryExecution().executedPlan()
+        assert "InMemoryTableScanExec" in [
+            n.getClass().getSimpleName() for n in _nodes_outside(plan)
+        ]
+    finally:
+        records.unpersist()
 
 
 def test_batcher_slice_uses_take_ordered(spark):

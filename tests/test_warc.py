@@ -110,22 +110,50 @@ def test_scan_path_matches_sequential_loop(spark, corpus):
     assert got == want
 
 
+def _response_rows(records):
+    return {
+        r["url"]: (r["status"], r["n_bytes"], r["payload_md5"], r["text"])
+        for r in warc.extract_responses(records).collect()
+    }
+
+
 def test_range_path_matches_scan_path(spark, corpus):
+    """The fused range and scan paths, and records frames that are no
+    producer's direct output (extracted through a separate Python map),
+    all give the same rows; the scan-path inputs hold the request and
+    warcinfo records F4 drops."""
     out_dir, cdx = corpus
-    scan = {
-        r["url"]: (r["status"], r["n_bytes"], r["payload_md5"], r["text"])
-        for r in warc.extract_responses(
-            warc.scan_warc_files(spark, out_dir)
-        ).collect()
-    }
-    rng = {
-        r["url"]: (r["status"], r["n_bytes"], r["payload_md5"], r["text"])
-        for r in warc.extract_responses(
-            warc.fetch_warc_records(cdx)
-        ).collect()
-    }
+    scan = _response_rows(warc.scan_warc_files(spark, out_dir))
+    rng = _response_rows(warc.fetch_warc_records(cdx))
     assert rng == scan
     assert all(v[0] == 200 for v in rng.values())
+    cols = ("target_uri", "warc_type", "payload")
+    selected = warc.fetch_warc_records(cdx).select(*cols)
+    scanned = warc.scan_warc_files(spark, out_dir).select(*cols)
+    assert scanned.filter(F.col("warc_type") != "response").count() > 0
+    assert _response_rows(selected) == rng
+    assert _response_rows(scanned) == rng
+
+
+def test_range_that_does_not_gunzip_is_skipped(spark, corpus):
+    """A CDX row whose range is cut short (EOFError) or whose offset is
+    shifted (BadGzipFile) is skipped like a record that does not parse;
+    every other row still comes back, on both range readers."""
+    _, cdx = corpus
+    rows = [
+        (r["url"], r["filename"], r["offset"], r["length"])
+        for r in sorted(cdx.collect(), key=lambda r: r["url"])
+    ]
+    url, fname, off, n = rows[0]
+    rows[0] = (url, fname, off, n - 5)
+    url, fname, off, n = rows[1]
+    rows[1] = (url, fname, off + 1, n)
+    bad = spark.createDataFrame(rows, warc.CDX_SCHEMA)
+    want = sorted(r[0] for r in rows[2:])
+    got = [r["url"] for r in warc.extract_responses(
+        warc.fetch_warc_records(bad)).collect()]
+    assert sorted(got) == want
+    assert sorted(r["url"] for r in warc.warc_pages(bad).collect()) == want
 
 
 def test_scan_sees_non_response_records_and_filter_drops_them(spark, corpus):
