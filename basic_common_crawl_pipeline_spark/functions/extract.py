@@ -56,14 +56,17 @@ _VOID_TAGS = frozenset({"br", "hr"})
 
 
 class _TextExtractor(HTMLParser):
-    """Streaming block collector. Comments are ignored because
-    ``handle_comment`` is not overridden (include_comments=False)."""
+    """Streaming block and href collector: the ``html.parser`` route of
+    ``_scan_page``. Comments are stripped before the parse; any that
+    html.parser still finds are ignored because ``handle_comment`` is not
+    overridden (include_comments=False)."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self._drop_depth = 0
         self._buf: list[str] = []
         self.blocks: list[str] = []
+        self.hrefs: list[str] = []
 
     def _flush(self) -> None:
         if not self._buf:
@@ -75,13 +78,26 @@ class _TextExtractor(HTMLParser):
         if text:
             self.blocks.append(text)
 
+    def _href(self, attrs) -> None:  # noqa: ANN001
+        # the first non-empty href; anchors inside dropped subtrees count
+        for name, value in attrs:
+            if name == "href" and value:
+                self.hrefs.append(value)
+                return
+
     def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
+        if tag == "a":
+            self._href(attrs)
         if tag in _DROP_SUBTREES:
             self._drop_depth += 1
         elif tag in _BLOCK_TAGS and self._drop_depth == 0:
             self._flush()
 
     def handle_startendtag(self, tag: str, attrs) -> None:  # noqa: ANN001
+        # overrides the default (which calls handle_starttag), so a
+        # self-closing <a href="/x"/> collects its href here
+        if tag == "a":
+            self._href(attrs)
         if tag in _BLOCK_TAGS and self._drop_depth == 0:
             self._flush()
 
@@ -107,20 +123,22 @@ def decode_lossy(html: bytes | str | None) -> str | None:
 
 
 # ---------------------------------------------------------------------------
-# Fast path: a strict-subset scanner equivalent to html.parser on the
-# documents it accepts (optimization guide §1.2 step 2 — per-task work).
+# One parse per page (``_scan_page``): comments are stripped with
+# ``_COMMENT_RE`` before any parse, then ONE pass collects text blocks AND
+# hrefs from that single stream — a strict-subset scanner when it accepts
+# the stream, else one html.parser pass (optimization guide §1.2 step 2 —
+# per-task work).
 #
 # ``HTMLParser.feed`` costs ~200 µs per 10 KB page (generic tolerant-markup
-# regex machinery per tag + per-attribute parsing we never consume); the
-# crawl hot path additionally parsed every page TWICE (text pass + link
-# pass). The scanner below tokenizes the common well-formed subset with one
-# C-speed regex match per tag and collects text blocks AND hrefs in a
-# single pass. It REFUSES (returns None → callers fall back to the
-# html.parser implementations, which remain the semantic reference) any
-# document containing a construct whose html.parser handling it does not
-# replicate exactly:
+# regex machinery per tag + per-attribute parsing we never consume). The
+# scanner below tokenizes the common well-formed subset with one C-speed
+# regex match per tag. It REFUSES (returns None → ``_scan_page`` runs
+# ``_TextExtractor``, which remains the semantic reference) any stream
+# containing a construct whose html.parser handling it does not replicate
+# exactly:
 #
-# - comments, declarations and PIs (any ``<!`` or ``<?``),
+# - doctypes, declarations and PIs (any ``<!`` or ``<?`` left after the
+#   comment strip),
 # - any ``<`` that does not start a fully well-formed tag per _FAST_TAG_RE
 #   (html.parser's tolerant recovery on broken markup is NOT reproduced),
 # - script/style whose closing tag is not a plain ``</name␣*>`` (html.parser
@@ -131,8 +149,8 @@ def decode_lossy(html: bytes | str | None) -> str | None:
 # exact function convert_charrefs uses) applied outside CDATA content; tag
 # and attribute names lowercase; attribute values unescaped; CDATA content
 # for script/style emitted as data; self-closing tags dispatch like
-# handle_startendtag. Equivalence is property-tested against the
-# html.parser implementations in tests/test_extract.py.
+# handle_startendtag. Equivalence is property-tested against html.parser
+# in tests/test_extract.py.
 # ---------------------------------------------------------------------------
 
 _FAST_TAG_RE = re.compile(
@@ -159,7 +177,7 @@ _CDATA_END = {
 def _fast_first_href(attrs: str) -> str | None:
     """First non-empty ``href`` value of an already-validated attr
     string, with html.parser's lowercase-name and unescape-value
-    semantics — the value ``_LinkCollector`` keeps (it skips an empty or
+    semantics — the value ``_TextExtractor`` keeps (it skips an empty or
     valueless ``href`` and reads on)."""
     for m in _FAST_ATTR_RE.finditer(attrs):
         if m.group(1).lower() == "href":
@@ -171,8 +189,8 @@ def _fast_first_href(attrs: str) -> str | None:
 
 def _fast_scan(s: str) -> tuple[list[str], list[str]] | None:
     """One-pass (text blocks, raw hrefs) over the strict subset, or None
-    when the document must take the html.parser path (any ``<!``,
-    comments included, is refused here).
+    when the stream must take the html.parser path (any ``<!`` or ``<?``
+    is refused here).
 
     Driven by ONE ``finditer`` over the tag regex (C-speed scanning
     between tags) instead of a per-'<' find+match loop; the subset
@@ -264,42 +282,47 @@ def _fast_scan(s: str) -> tuple[list[str], list[str]] | None:
     return blocks, hrefs
 
 
+def _scan_page(html: bytes | str | None) -> tuple[list[str], list[str]]:
+    """The one parse of a page: ``(text blocks, raw hrefs)`` in document
+    order. One decode; comments stripped only when ``<!--`` occurs (the
+    regex cannot match otherwise); ``_fast_scan`` once; on refusal ONE
+    html.parser pass. A blank page or a parser exception gives
+    ``([], [])`` (malformed-document skip F9, rust/src/bin/worker.rs:69-74).
+    ``extract_text``, ``links.extract_links_rich`` and
+    ``links.extract_page`` are views of this result, so text and links
+    always agree on where a comment ends."""
+    decoded = decode_lossy(html)
+    if decoded is None or not decoded.strip():
+        return [], []
+    if "<!--" in decoded:
+        decoded = _COMMENT_RE.sub("", decoded)
+    fast = _fast_scan(decoded)
+    if fast is not None:
+        return fast
+    parser = _TextExtractor()
+    try:
+        parser.feed(decoded)
+        parser.close()
+    except Exception:
+        return [], []
+    parser._flush()
+    return parser.blocks, parser.hrefs
+
+
+def _join_blocks(blocks: list[str]) -> str | None:
+    """deduplicate=True (rust/src/trafilatura.rs:18): drop exact repeats of
+    earlier blocks, keep first occurrences, join with ``\n``; None when no
+    block survives."""
+    return "\n".join(dict.fromkeys(blocks)) or None
+
+
 def extract_text(html: bytes | str | None) -> str | None:
     """HTML bytes → plain text, or None when nothing extractable.
 
     Deterministic and pure; the per-row invariant of the build
     (BASELINE.json input_hint: byte-identical extracted text per url).
     """
-    decoded = decode_lossy(html)
-    if decoded is None or not decoded.strip():
-        return None
-    decoded = _COMMENT_RE.sub("", decoded)
-    fast = _fast_scan(decoded)
-    if fast is not None:
-        blocks = fast[0]
-    else:
-        parser = _TextExtractor()
-        try:
-            parser.feed(decoded)
-            parser.close()
-        except Exception:
-            # Malformed-document skip (extraction-failure skip F9,
-            # rust/src/bin/worker.rs:69-74).
-            return None
-        parser._flush()
-        blocks = parser.blocks
-    if not blocks:
-        return None
-    # deduplicate=True (rust/src/trafilatura.rs:18): drop exact repeats of
-    # earlier blocks within the same document, preserving first occurrence.
-    seen: set[str] = set()
-    kept: list[str] = []
-    for block in blocks:
-        if block not in seen:
-            seen.add(block)
-            kept.append(block)
-    out = "\n".join(kept)
-    return out if out else None
+    return _join_blocks(_scan_page(html)[0])
 
 
 class _GoTextExtractor(HTMLParser):

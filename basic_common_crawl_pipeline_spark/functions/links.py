@@ -10,10 +10,9 @@ first-occurrence order (document order = deterministic discovery order).
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
 from urllib.parse import urljoin
 
-from .extract import _fast_scan, decode_lossy, extract_text
+from .extract import _join_blocks, _scan_page
 from .urls import _simple_triple, canon_host_surt
 
 # Absolute-href tier (r6): for a stripped href on this subset,
@@ -33,19 +32,6 @@ from .urls import _simple_triple, canon_host_surt
 _ABS_HREF_RE = re.compile(r"https?://(?![/?#])[!-:<-~]+\Z")
 
 
-class _LinkCollector(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.hrefs: list[str] = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
-        if tag == "a":
-            for name, value in attrs:
-                if name == "href" and value:
-                    self.hrefs.append(value)
-                    break
-
-
 def extract_links(html: bytes | str | None, base_url: str) -> list[str]:
     """All out-links of a page, canonicalized, first-occurrence order."""
     return [canon for canon, _h, _s in extract_links_rich(html, base_url)]
@@ -58,24 +44,10 @@ def extract_links_rich(
     the crawl hot path's variant: host and surt come from the same single
     parse as the canonical form (functions/urls.py::canon_host_surt)
     instead of three more parses per link. ``extract_links`` is the
-    canon-only view of the same core (oracle parity pinned by tests)."""
-    decoded = decode_lossy(html)
-    if not decoded:
-        return []
-    # the strict-subset single-pass scanner sees the same byte stream
-    # html.parser would, or refuses (functions/extract.py)
-    fast = _fast_scan(decoded)
-    if fast is not None:
-        hrefs = fast[1]
-    else:
-        parser = _LinkCollector()
-        try:
-            parser.feed(decoded)
-            parser.close()
-        except Exception:
-            return []
-        hrefs = parser.hrefs
-    return _resolve_links(hrefs, base_url)
+    canon-only view of the same core (oracle parity pinned by tests).
+    The hrefs come from ``extract._scan_page``: the same comment-stripped
+    stream and the same parse ``extract_text`` reads."""
+    return _resolve_links(_scan_page(html)[1], base_url)
 
 
 def _resolve_links(
@@ -110,34 +82,10 @@ def _resolve_links(
 def extract_page(
     html: bytes | str | None, base_url: str
 ) -> tuple[str | None, list[tuple[str, str, str]]]:
-    """Fused ``(extract_text(html), extract_links_rich(html, base_url))``
-    in ONE decode and — on the comment-free strict subset — ONE parse
-    (the crawl hot loop previously parsed every page twice). Equivalence:
-
-    - comment-free documents: ``_COMMENT_RE.sub`` is the identity, so the
-      text pass and the link pass see the same byte stream; the fused
-      scanner collects blocks and hrefs from that single stream with
-      html.parser-identical events (see ``_fast_scan``), so both outputs
-      equal their two-pass counterparts by construction;
-    - any other document (comments present, or any construct the strict
-      scanner refuses) falls back to the exact two-pass functions.
-
-    Property-tested against the two-pass pair in tests/test_extract.py.
+    """``(extract_text(html), extract_links_rich(html, base_url))`` from
+    ONE ``extract._scan_page`` — one decode, one comment strip and one
+    parse for both outputs, so each equals its single-output view by
+    construction. Pinned against html.parser in tests/test_extract.py.
     """
-    decoded = decode_lossy(html)
-    if decoded is None or not decoded.strip():
-        # extract_text returns None on blank docs; a whitespace-only doc
-        # has no <a> tags, so extract_links_rich would return [] too
-        return None, []
-    fast = _fast_scan(decoded)
-    if fast is not None:
-        blocks, hrefs = fast
-        seen: set[str] = set()
-        kept: list[str] = []
-        for block in blocks:
-            if block not in seen:
-                seen.add(block)
-                kept.append(block)
-        text = "\n".join(kept) or None
-        return text, _resolve_links(hrefs, base_url)
-    return extract_text(html), extract_links_rich(html, base_url)
+    blocks, hrefs = _scan_page(html)
+    return _join_blocks(blocks), _resolve_links(hrefs, base_url)

@@ -71,7 +71,7 @@ def register(
 
 
 # What an entry's lazy result still reads, so the entry cannot retire it
-# itself; the entry's caller owns it and bench_trial releases it:
+# itself; the entry's caller owns it and releases it (release_caller):
 # persisted intermediates (the operators' ``cache`` convention), the
 # directories the entry wrote (_scratch_dir) and the in-memory views its
 # drained streams registered (_drain).
@@ -90,12 +90,19 @@ def bench_trial(spark: SparkSession, sf_dir: str, name: str) -> float:
         BENCH[name](QUERIES[name](spark, sf_dir))
         return time.time() - t0
     finally:
-        while _CALLER_CACHES:
-            _CALLER_CACHES.pop().unpersist()
-        while _CALLER_VIEWS:
-            spark.catalog.dropTempView(_CALLER_VIEWS.pop())
-        while _CALLER_DIRS:
-            shutil.rmtree(_CALLER_DIRS.pop(), ignore_errors=True)
+        release_caller(spark)
+
+
+def release_caller(spark: SparkSession) -> None:
+    """Release everything the entries called so far handed their caller:
+    the persisted intermediates, the drained streams' in-memory views and
+    the per-call directories. Call it once the entry's rows are read."""
+    while _CALLER_CACHES:
+        _CALLER_CACHES.pop().unpersist()
+    while _CALLER_VIEWS:
+        spark.catalog.dropTempView(_CALLER_VIEWS.pop())
+    while _CALLER_DIRS:
+        shutil.rmtree(_CALLER_DIRS.pop(), ignore_errors=True)
 
 
 # The process's one scratch root: every directory the catalog writes sits

@@ -84,7 +84,10 @@ def _extract_batches(
     from ..functions.links import extract_page
 
     extract_fn = EXTRACTORS[extractor]
-    fused = extractor == "rust"  # extract_page fuses THIS extractor's pass
+    # extract_page gives THIS extractor's text and the links from one
+    # parse; "go" text comes from its own parse, its links from the same
+    # one-parse view (functions/extract.py::_scan_page)
+    fused = extractor == "rust"
     for batch in batches:
         texts, links, nbytes = [], [], []
         # .tolist() first: iterating a pandas object Series pays per-item
@@ -93,8 +96,6 @@ def _extract_batches(
             batch["canon_url"].tolist(), batch["html"].tolist()
         ):
             if fused:
-                # one decode + (strict subset) one parse for text AND
-                # links — the page was previously parsed twice
                 text, rich = extract_page(html, url)
             else:
                 text, rich = extract_fn(html), extract_links_rich(html, url)

@@ -39,30 +39,23 @@ def write_bucketed_table(
     bucket_cols: list[str],
     n_buckets: int = 16,
     path: str | None = None,
-    sort: bool = True,
-    align_tasks: bool = True,
 ) -> None:
-    """Write ``df`` as a parquet table hash-bucketed (and by default
-    in-bucket sorted) on ``bucket_cols``. Overwrites an existing table
-    of the same name. ``path`` makes the table external (data under
-    ``path``, metadata in the session catalog).
+    """Write ``df`` as a parquet table hash-bucketed and in-bucket sorted
+    on ``bucket_cols``. Overwrites an existing table of the same name.
+    ``path`` makes the table external (data under ``path``, metadata in
+    the session catalog).
 
-    ``align_tasks`` repartitions to exactly ``n_buckets`` on the bucket
-    key first (Spark's repartition and bucketing share the Murmur3 hash,
-    so tasks map 1:1 onto buckets): ONE file per bucket, which is the
+    ``df`` is first repartitioned to exactly ``n_buckets`` on the bucket
+    key (Spark's repartition and bucketing share the Murmur3 hash, so
+    tasks map 1:1 onto buckets): ONE file per bucket, which is the
     precondition for the reader to report the in-bucket sort order and
     elide the join's Sort — with many files per bucket only the Exchange
-    is saved. Disable it when per-bucket data exceeds a healthy task
-    output (the usual parallel-files tradeoff at 100 TB)."""
-    if align_tasks:
-        df = df.repartition(n_buckets, *[df[c] for c in bucket_cols])
+    is saved."""
+    df = df.repartition(n_buckets, *[df[c] for c in bucket_cols])
     writer = df.write.format("parquet").mode("overwrite")
     if path is not None:
         writer = writer.option("path", path)
-    writer = writer.bucketBy(n_buckets, *bucket_cols)
-    if sort:
-        writer = writer.sortBy(*bucket_cols)
-    writer.saveAsTable(name)
+    writer.bucketBy(n_buckets, *bucket_cols).sortBy(*bucket_cols).saveAsTable(name)
 
 
 def read_bucketed_table(spark: SparkSession, name: str) -> DataFrame:

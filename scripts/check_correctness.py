@@ -59,6 +59,7 @@ def main() -> int:
     only = set(args[1:])
 
     import __spark_entry__ as entry_mod
+    from basic_common_crawl_pipeline_spark.plans.catalog import release_caller
     from basic_common_crawl_pipeline_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
@@ -88,6 +89,10 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
+        finally:
+            # the rows are collected: drop the caches, views and
+            # directories the entry handed its caller
+            release_caller(spark)
         if name not in oracles:
             print(f"rows  {name}: {len(s_rows)} rows (no oracle) "
                   f"[{time.time()-t0:.1f}s]")

@@ -352,3 +352,50 @@ def test_go_extractor_crawl_matches_oracle(spark, tmp_path):
     assert want_rust.extracted != want.extracted
     # crawl order/seen are extraction-independent (links logic is shared)
     assert want_rust.seen == want.seen
+
+
+@pytest.mark.parametrize("extractor", ["rust", "go"])
+def test_anchor_in_a_dash_space_comment_is_not_followed(spark, tmp_path, extractor):
+    """Text and links read one comment-stripped stream: an anchor inside
+    ``<!-- … -- > … -->`` (html.parser alone would end the comment at
+    ``-- >``) is comment text, so its target is never discovered, while
+    a plain anchor on the same page is crawled. Spark equals the oracle
+    under both extractors."""
+    import datetime
+    import hashlib
+
+    from basic_common_crawl_pipeline_spark.functions.extract import extract_text
+    from basic_common_crawl_pipeline_spark.sources.pages import SynthCorpus
+
+    ts = datetime.datetime(2024, 1, 1)
+    corpus = SynthCorpus(
+        seeds=[{"url": "http://c.test/", "priority": 0, "seed_rank": 0}],
+        robots=[{"host": "c.test", "crawl_delay": 1.0, "disallow": []}],
+    )
+    for path, html in [
+        ("/", b'<html><body><p>start</p><!-- a -- > <a href="/hidden">h</a>'
+              b' --><a href="/shown">s</a></body></html>'),
+        ("/hidden", b"<html><body><p>hidden page</p></body></html>"),
+        ("/shown", b"<html><body><p>shown page</p></body></html>"),
+    ]:
+        corpus.pages.append({
+            "url": "http://c.test" + path, "warc_ts": ts, "html": html,
+            "text": extract_text(html), "lang": "eng", "status": 200,
+            "mime": "text/html", "digest": hashlib.sha1(html).hexdigest(),
+        })
+    cfg = CrawlConfig(
+        wave_seconds=8.0, max_waves=2, salt_partitions=2, extractor=extractor
+    )
+    want = run_oracle(corpus.pages, corpus.seeds, corpus.robots, cfg)
+    pages, seeds, robots = corpus_to_spark(spark, corpus)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    run_crawl(spark, pages, seeds, robots, cfg, store=store)
+    order, results, seen = collect_outputs(spark, store)
+    assert [(r["seq"], r["wave"], r["url"]) for r in order] == [
+        (r["seq"], r["wave"], r["url"]) for r in want.crawl_order
+    ]
+    assert seen == want.seen
+    assert {r["canon_url"]: r["text"] for r in results} == want.extracted
+    assert "http://c.test/shown" in seen
+    assert "http://c.test/hidden" not in seen
+    assert [r["url"] for r in order] == ["http://c.test/", "http://c.test/shown"]

@@ -1,5 +1,7 @@
 """Unit tests for the pure extraction core (SURVEY.md §7 Step 1)."""
 
+from html.parser import HTMLParser
+
 from basic_common_crawl_pipeline_spark.functions.extract import (
     extract_text,
     split_http_response,
@@ -156,13 +158,31 @@ def test_extract_text_go_variant_semantics():
     assert extract_text_go(None) is None
 
 
+class _LinkCollector(HTMLParser):
+    """Independent href reference: the first non-empty ``href`` of each
+    ``<a>``. It keeps html.parser's default ``handle_startendtag`` (which
+    calls ``handle_starttag``), so ``<a href="/x"/>`` counts."""
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.hrefs: list[str] = []
+
+    def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
+        if tag == "a":
+            for name, value in attrs:
+                if name == "href" and value:
+                    self.hrefs.append(value)
+                    break
+
+
 def test_fast_scanner_matches_htmlparser_reference():
-    """r6 optimization pin: the strict-subset fast scanner used by
-    extract_text / extract_links_rich / extract_page must be event-
-    equivalent to the html.parser implementations on every document it
-    accepts, and must refuse (-> html.parser fallback) everything else.
-    Checked by running the public functions (which auto-select the fast
-    path) against reference implementations forced onto html.parser."""
+    """One parse per page: extract_text / extract_links_rich /
+    extract_page read one comment-stripped stream, through the strict-
+    subset fast scanner or, where it refuses, one html.parser pass that
+    collects text and hrefs together. Checked against references forced
+    onto html.parser over the ``_COMMENT_RE``-stripped stream: text via
+    ``_TextExtractor``'s blocks, links via the independent
+    ``_LinkCollector`` above."""
     import random
 
     from basic_common_crawl_pipeline_spark.functions.extract import (
@@ -171,17 +191,21 @@ def test_fast_scanner_matches_htmlparser_reference():
         decode_lossy,
     )
     from basic_common_crawl_pipeline_spark.functions.links import (
-        _LinkCollector,
         _resolve_links,
         extract_links_rich,
         extract_page,
     )
 
-    def ref_text(html):
+    def stripped(html):
         decoded = decode_lossy(html)
         if decoded is None or not decoded.strip():
             return None
-        decoded = _COMMENT_RE.sub("", decoded)
+        return _COMMENT_RE.sub("", decoded)
+
+    def ref_text(html):
+        decoded = stripped(html)
+        if decoded is None:
+            return None
         p = _TextExtractor()
         try:
             p.feed(decoded)
@@ -199,8 +223,8 @@ def test_fast_scanner_matches_htmlparser_reference():
         return "\n".join(kept) or None
 
     def ref_links(html, base):
-        decoded = decode_lossy(html)
-        if not decoded:
+        decoded = stripped(html)
+        if decoded is None:
             return []
         p = _LinkCollector()
         try:
@@ -209,6 +233,13 @@ def test_fast_scanner_matches_htmlparser_reference():
         except Exception:
             return []
         return _resolve_links(p.hrefs, base)
+
+    # html.parser also ends a comment at "-- >"; _COMMENT_RE runs to the
+    # first "-->". Text and links both follow _COMMENT_RE.
+    dash_space = b'<!-- a -- > <a href="/x">x</a> --><p>t</p>'
+    assert extract_text(dash_space) == "t"
+    assert extract_links_rich(dash_space, "http://b.test/") == []
+    assert extract_page(dash_space, "http://b.test/") == ("t", [])
 
     cases = [
         b'<html><head><title>d</title></head><body><h1>D</h1><p>s '
@@ -222,6 +253,9 @@ def test_fast_scanner_matches_htmlparser_reference():
         b"<p>bad \xff byte</p>",
         b'<P CLASS="x">up</P><A HREF="/UP">U</A>',
         b"<br/><hr/><p/>text<a href=\"/sc\"/>after",
+        # the html.parser route (doctype refused by the fast scanner)
+        # must collect a self-closing anchor's href too
+        b'<!DOCTYPE html><p>x</p><a href="/sc"/><A HREF=/up>u</A>',
         b"<script><!-- </script><a href=/evil> --></script>",
         b"<p>x<table><p>in</p></table>y</p>",
         b"<p>broken < not a tag</p>",
@@ -246,6 +280,8 @@ def test_fast_scanner_matches_htmlparser_reference():
         "<p>", "</p>", "<a href='/r%d'>", "</a>", "text%d ", "<script>",
         "</script>", "&amp;", "<table>", "</table>", "<!--", "-->",
         "<br/>", "<div>", "</div>", "< ", ">", "&#66;",
+        "<!DOCTYPE html>", "-- >", "--!>", "<!-->", "<?pi?>",
+        "<![CDATA[x]]>", "<a href='/s%d'/>", "<A HREF=/u%d>", "naïve ",
     ]
     for i in range(800):
         parts = []

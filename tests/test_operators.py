@@ -1603,6 +1603,33 @@ def test_catalog_bench_trials_leave_no_dir_view_or_cache(
         assert state() == before, name
 
 
+def test_release_caller_after_collect_leaves_session_as_found(spark):
+    """The correctness-gate path (scripts/check_correctness.py): build an
+    entry, collect its rows, then ``release_caller``. The drained
+    stream's in-memory view, its directories and any caches it handed
+    over are gone, as after a bench trial."""
+    import os
+
+    from basic_common_crawl_pipeline_spark.plans import catalog
+    from tests.conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    root = catalog._scratch_root()
+
+    def state():
+        return (
+            sorted(os.listdir(root)),
+            set(jsc.getPersistentRDDs().keySet()),
+            sorted(t.name for t in spark.catalog.listTables()),
+        )
+
+    before = state()
+    assert catalog.QUERIES["stream_windowed_events"](spark, SF_SMALL).collect()
+    assert state() != before
+    catalog.release_caller(spark)
+    assert state() == before
+
+
 def test_sql_entry_leaves_session_tables_unchanged(spark):
     """sql_revenue_by_segment hands its tables to ``spark.sql`` as
     DataFrame arguments, whose views are dropped within the call:
