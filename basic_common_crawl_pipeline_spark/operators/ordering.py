@@ -20,7 +20,8 @@ The two phases are exposed separately (``global_seq_sorted`` +
 can fold the per-partition counts into it instead of paying a dedicated
 offsets action — plans/wave.py collects them inside its single
 metrics/frontier job. ``with_global_seq`` remains the standalone one-call
-API.
+API; each of its two jobs samples its own range bounds, so it is exact
+only where the exchange keeps one partition (else the guard raises).
 """
 
 from __future__ import annotations
@@ -167,19 +168,12 @@ def with_global_seq(
     order_cols: list[str],
     seq_col: str = "seq",
     start: int = 1,
-    return_total: bool = False,
-    cache_sorted: list | None = None,
-):
+) -> DataFrame:
     """Add ``seq_col`` = global rank (start, start+1, …) in the total order
-    of ``order_cols``. The key must be total (no ties) for determinism.
-    ``return_total=True`` → (df, row_count): the count is a free byproduct
-    of the offsets pass, saving callers a separate count() job."""
-    sorted_df = global_seq_sorted(df, order_cols, cache=cache_sorted)
+    of ``order_cols``. The key must be total (no ties) for determinism."""
+    sorted_df = global_seq_sorted(df, order_cols)
     pid_counts = {
         row["__pid"]: row["count"]
         for row in sorted_df.groupBy("__pid").count().collect()
     }
-    out = global_seq_assign(sorted_df, pid_counts, seq_col=seq_col, start=start)
-    if return_total:
-        return out, sum(pid_counts.values())
-    return out
+    return global_seq_assign(sorted_df, pid_counts, seq_col=seq_col, start=start)

@@ -3590,7 +3590,7 @@ def warc_multicapture_latest(spark, sf_dir):
         url.alias("url"), html.alias("html"), wts.alias("wts")
     ).repartition(8)
     out_dir = _scratch_dir("warc_multicap")
-    cdx = warc.write_warc_corpus(spark, pages, out_dir, through_cols=("wts",))
+    cdx = warc.write_warc_corpus(spark, pages, out_dir, carry_cols=("wts",))
     latest = latest_capture(warc.warc_pages(cdx, ts_col="wts"))
     return latest.select(
         "url",

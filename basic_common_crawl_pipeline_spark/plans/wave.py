@@ -140,7 +140,7 @@ def _canonize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         )
 
 
-def frontier_from_seeds(seeds: DataFrame, parallelism: int | None = None) -> DataFrame:
+def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
     """Seed URLs → canonical frontier rows (canon_url, host, surt, priority).
 
     The repartition before the canonize stage matters: seed lists often
@@ -154,11 +154,9 @@ def frontier_from_seeds(seeds: DataFrame, parallelism: int | None = None) -> Dat
     task costs ~5 s, ~25% of a 3-wave crawl's wall. An explicit
     numPartitions is exempt from AQE coalescing, so the stage stays as
     wide as the cluster."""
-    if parallelism is None:
-        parallelism = seeds.sparkSession.sparkContext.defaultParallelism
     return (
         seeds.select("url", F.col("priority").cast("int").alias("priority"))
-        .repartition(parallelism, F.col("url"))
+        .repartition(seeds.sparkSession.sparkContext.defaultParallelism, F.col("url"))
         .mapInPandas(_canonize_batches, schema=_FRONTIER_SCHEMA)
         .groupBy("canon_url")
         .agg(

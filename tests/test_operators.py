@@ -17,7 +17,11 @@ from basic_common_crawl_pipeline_spark.operators.multimodal import (
     extract_media_features,
     synth_media,
 )
-from basic_common_crawl_pipeline_spark.operators.ordering import with_global_seq
+from basic_common_crawl_pipeline_spark.operators.ordering import (
+    global_seq_assign,
+    global_seq_sorted,
+    with_global_seq,
+)
 from basic_common_crawl_pipeline_spark.operators.politeness import (
     select_per_host_topk,
 )
@@ -25,9 +29,11 @@ from basic_common_crawl_pipeline_spark.operators.similarity import cosine_topk
 
 
 def test_global_seq_equals_window_rank(spark):
-    """with_global_seq equals the window rank: on AQE's coalesced layout,
-    over several range partitions (coalescing off), from a start other
-    than 1, and on an empty input."""
+    """with_global_seq equals the window rank on AQE's coalesced layout,
+    from a start other than 1, and on an empty input; its two phases over
+    the sorted cache equal it over several range partitions (coalescing
+    off). The one-call API is not run there: each of its two jobs
+    samples its own range bounds, and the numbering guard raises."""
     df = spark.range(0, 4000).select(
         (F.col("id") % 11).alias("k"), (F.col("id") * 7919 % 4000).alias("v")
     )
@@ -39,36 +45,34 @@ def test_global_seq_equals_window_rank(spark):
     )
     got = with_global_seq(df, ["k", "v"]).collect()
     assert sorted((r.k, r.v, r.seq) for r in got) == want
+    rows = with_global_seq(df, ["k", "v"], start=100).collect()
+    assert len(rows) == 4000
+    assert sorted((r.k, r.v, r.seq - 99) for r in rows) == want
 
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     cache: list = []
     try:
-        got, total = with_global_seq(
-            df, ["k", "v"], start=100, return_total=True, cache_sorted=cache
-        )
-        rows = got.collect()
-        n_parts = cache[0].select("__pid").distinct().count()
-        empty, empty_total = with_global_seq(
-            df.filter(F.col("k") < 0), ["k", "v"], return_total=True
-        )
-        assert empty.collect() == [] and empty_total == 0
+        sorted_df = global_seq_sorted(df, ["k", "v"], cache=cache)
+        counts = {
+            r["__pid"]: r["count"]
+            for r in sorted_df.groupBy("__pid").count().collect()
+        }
+        rows = global_seq_assign(sorted_df, counts, start=100).collect()
+        empty = with_global_seq(df.filter(F.col("k") < 0), ["k", "v"])
+        assert empty.collect() == []
     finally:
         spark.conf.set(key, old)
         for c in cache:
             c.unpersist()
-    assert n_parts > 1 and total == 4000
+    assert len(counts) > 1 and len(rows) == 4000
     assert sorted((r.k, r.v, r.seq - 99) for r in rows) == want
 
 
 def test_global_seq_assign_skips_a_partition_with_zero_rows(spark):
     """A sorted layout whose middle partition holds no rows: the counts
     omit it, and the numbering runs on across it without a gap."""
-    from basic_common_crawl_pipeline_spark.operators.ordering import (
-        global_seq_assign,
-    )
-
     # four ascending range splits of 25 ids; the third is filtered empty
     parted = (
         spark.range(0, 100, numPartitions=4)

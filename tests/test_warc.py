@@ -156,6 +156,46 @@ def test_range_that_does_not_gunzip_is_skipped(spark, corpus):
     assert sorted(r["url"] for r in warc.warc_pages(bad).collect()) == want
 
 
+def test_request_and_unsplittable_response_rows_are_dropped(spark, corpus, tmp_path):
+    """CDX rows that point at a request record (dropped by the WARC-Type
+    filter, F4) and at a response whose HTTP block has no blank line
+    (dropped by the header/body split, F8) come back from neither
+    ``warc_pages`` nor ``extract_responses`` — fused or not; every other
+    row does."""
+    _, cdx = corpus
+    members = [
+        warc._gzip_member(warc.build_warc_record(
+            "request", "http://bad.test/request",
+            b"GET / HTTP/1.1\r\nHost: bad.test\r\n\r\n",
+        )),
+        warc._gzip_member(warc.build_warc_record(
+            "response", "http://bad.test/no-blank-line",
+            b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n<p>x</p>",
+        )),
+    ]
+    fname = str(tmp_path / "bad.warc.gz")
+    with open(fname, "wb") as f:
+        f.write(b"".join(members))
+    rows = [
+        (r["url"], r["filename"], r["offset"], r["length"])
+        for r in cdx.collect()
+    ]
+    want = sorted(r[0] for r in rows)
+    rows += [
+        ("http://bad.test/request", fname, 0, len(members[0])),
+        ("http://bad.test/no-blank-line", fname, len(members[0]), len(members[1])),
+    ]
+    bad = spark.createDataFrame(rows, warc.CDX_SCHEMA)
+    fetched = warc.fetch_warc_records(bad)
+    assert fetched.count() == len(rows)  # both records parse
+    for got in (
+        warc.warc_pages(bad),
+        warc.extract_responses(fetched),
+        warc.extract_responses(fetched.select("target_uri", "warc_type", "payload")),
+    ):
+        assert sorted(r["url"] for r in got.collect()) == want
+
+
 def test_scan_sees_non_response_records_and_filter_drops_them(spark, corpus):
     out_dir, cdx = corpus
     records = warc.scan_warc_files(spark, out_dir)
@@ -192,8 +232,13 @@ def test_crawl_over_warc_reconstructed_pages_matches_direct(spark, tmp_path):
     pages, seeds, robots = pages_from_documents(spark, SF_SMALL)
     out_dir = str(tmp_path / "warc")
     cdx = warc.write_warc_corpus(
-        spark, pages.repartition(4), out_dir, carry_cols=("lang",),
+        spark, pages.repartition(4), out_dir, carry_cols=("lang", "status"),
         status_col="status",
+    )
+    assert cdx.columns == ["url", "filename", "offset", "length", "lang", "status"]
+    assert cdx.schema["status"].dataType == pages.schema["status"].dataType
+    assert sorted(cdx.select("url", "lang", "status").collect()) == sorted(
+        pages.select("url", "lang", "status").collect()
     )
     wpages = warc.warc_pages(cdx, meta_cols=("lang",))
     cfg = CrawlConfig(wave_seconds=16.0, max_waves=2, salt_partitions=4)
@@ -254,8 +299,9 @@ def test_crawl_over_multicapture_warc_matches_direct(spark, tmp_path):
     out_dir = str(tmp_path / "warc_mc")
     cdx = warc.write_warc_corpus(
         spark, multicap.repartition(4), out_dir,
-        status_col="status", through_cols=("wts", "lang"),
+        status_col="status", carry_cols=("wts", "lang"),
     )
+    assert cdx.count() == 3 * caps.count()  # one CDX row per capture
     wpages = warc.warc_pages(cdx, meta_cols=("lang",), ts_col="wts")
     assert wpages.count() == 3 * caps.count()  # all captures fetched back
 
