@@ -19,9 +19,9 @@ The two phases are exposed separately (``global_seq_sorted`` +
 ``global_seq_assign``) so a caller that already runs a per-wave count job
 can fold the per-partition counts into it instead of paying a dedicated
 offsets action — plans/wave.py collects them inside its single
-metrics/frontier job. ``with_global_seq`` remains the standalone one-call
-API; each of its two jobs samples its own range bounds, so it is exact
-only where the exchange keeps one partition (else the guard raises).
+metrics/frontier job. ``with_global_seq`` is the standalone one-call API
+over the same shape: it counts and numbers one persisted sort, since two
+executions of a range exchange each sample their own bounds.
 """
 
 from __future__ import annotations
@@ -168,10 +168,18 @@ def with_global_seq(
     order_cols: list[str],
     seq_col: str = "seq",
     start: int = 1,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Add ``seq_col`` = global rank (start, start+1, …) in the total order
-    of ``order_cols``. The key must be total (no ties) for determinism."""
-    sorted_df = global_seq_sorted(df, order_cols)
+    of ``order_cols``. The key must be total (no ties) for determinism.
+
+    The offsets count and the numbering read ONE persisted sort
+    (``global_seq_sorted(cache=cache)``): run twice, the range exchange
+    would sample its bounds twice and cut different ranges, and the
+    numbering guard would raise. The cache is appended to ``cache``; the
+    caller unpersists it once the result has been read."""
+    sorted_df = global_seq_sorted(df, order_cols, cache=cache)
     pid_counts = {
         row["__pid"]: row["count"]
         for row in sorted_df.groupBy("__pid").count().collect()

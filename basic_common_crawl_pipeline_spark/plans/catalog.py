@@ -642,7 +642,7 @@ def b1_batching(spark, sf_dir):
     """B1: fixed-size batch assignment over a deterministic total order
     (queue-batch analog, rust/src/rabbitmq.rs:13)."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    seq = with_global_seq(docs, ["doc_id"], seq_col="seq")
+    seq = with_global_seq(docs, ["doc_id"], seq_col="seq", cache=_CALLER_CACHES)
     return seq.select(
         "doc_id", F.floor((F.col("seq") - 1) / 50).cast("long").alias("batch_id")
     )
@@ -678,7 +678,9 @@ def b3_global_order(spark, sf_dir):
     """B3: deterministic global crawl-order sequencing — validates the
     scale-safe two-phase sequencer against the SQL window oracle."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    return with_global_seq(docs, ["lang", "doc_id"], seq_col="seq")
+    return with_global_seq(
+        docs, ["lang", "doc_id"], seq_col="seq", cache=_CALLER_CACHES
+    )
 
 
 @register(

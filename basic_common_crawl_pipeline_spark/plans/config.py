@@ -61,12 +61,6 @@ class CrawlConfig:
     language: str = LANGUAGE
     max_waves: int = 8
     salt_partitions: int = 8  # politeness top-k salting fan-out (Spark only)
-    # every N waves, fold the append-tables' delta chains (seen /
-    # crawl_order / results) into one base path (Iceberg
-    # rewrite-data-files): a 1000-wave crawl otherwise unions 1000 deltas
-    # per read. Runs on the commit thread, overlapped with the next
-    # wave's computation. None → never compact.
-    compact_every_n_waves: int | None = None
     # UD2 swappable extractor: key into functions/extract.py::EXTRACTORS.
     # "rust" = trafilatura-semantics canonical (T2 byte-identity pin);
     # "go" = the goquery walk (golang/worker/worker.go:36-51). The wave

@@ -225,6 +225,16 @@ def release(frames, inputs) -> None:
                 rdd.unpersist(False)
 
 
+def _seen_chain(store: SnapshotStore) -> int:
+    """How many parquet paths the CURRENT snapshot's seen table reads (0
+    before the first commit)."""
+    manifest = store.read_manifest()
+    if manifest is None:
+        return 0
+    entry = manifest["tables"]["seen"]
+    return len(entry["paths"]) if "paths" in entry else 1
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -252,7 +262,11 @@ def run_crawl(
       state is rebased onto the committed parquet. CURRENT still flips
       atomically after all of a snapshot's writes, so crash/resume
       semantics are unchanged (an interrupted wave replays
-      deterministically from the last committed snapshot).
+      deterministically from the last committed snapshot);
+    - seen commits as a delta chain until the chain holds
+      ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
+      (read once per crawl); the next wave then writes seen whole in its
+      own commit, so no rebase ever pays a Spark listing job.
 
     With ``resume=False`` the store directory must not already contain a
     crawl (a fresh run over an old CURRENT would splice the old run's
@@ -329,6 +343,12 @@ def run_crawl(
     from concurrent.futures import ThreadPoolExecutor
 
     committer = ThreadPoolExecutor(max_workers=1)
+    # past this many paths, every read of a parquet path list runs a
+    # Spark listing job (InMemoryFileIndex); the seen fold keeps the
+    # per-wave rebase under it
+    listing_threshold = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    )
     pending = None        # in-flight commit of the previous wave
     committed_this_run = False
     # the robots dim is re-read every wave (broadcast join build) — cache
@@ -377,56 +397,6 @@ def run_crawl(
                 committed_this_run = True
             release(retiring, inputs)
 
-            tables = {
-                "frontier": out.new_frontier,
-                # S7: metrics as a queryable snapshot table, not only
-                # manifest JSON
-                "metrics": metrics_table(spark, state.metrics),
-            }
-            # seen/crawl_order/results grow monotonically: commit only
-            # this wave's delta (Iceberg-append semantics) — a cumulative
-            # rewrite would cost O(total²) I/O over a long crawl. seen's
-            # delta is exactly `processed` (wave step 8:
-            # seen' = seen ∪ processed, disjoint by construction).
-            append_tables = {
-                "seen": out.processed,
-                "crawl_order": out.crawl_order,
-                "results": out.results,
-            }
-            extra = {
-                "next_wave": state.wave + 1,
-                "next_seq": next_seq,
-                # copy: the background json.dump must not see metrics
-                # appended by the NEXT wave
-                "metrics": list(state.metrics),
-            }
-            snap = state.wave + 1
-            compact_now = bool(
-                config.compact_every_n_waves
-                and snap % config.compact_every_n_waves == 0
-            )
-
-            def _commit_and_maybe_compact(
-                _snap=snap,
-                _tables=tables,
-                _extra=extra,
-                _appends=append_tables,
-                _compact=compact_now,
-            ):
-                store.commit(
-                    snapshot=_snap,
-                    tables=_tables,
-                    extra=_extra,
-                    append_tables=_appends,
-                )
-                if _compact:
-                    # fold the delta chains while the NEXT wave runs;
-                    # superseded delta files stay on disk (Iceberg
-                    # expire-snapshots territory), so in-flight lazy
-                    # readers of the old path list are unaffected
-                    for name in ("seen", "crawl_order", "results"):
-                        store.compact(spark, name)
-
             # resolve the rebase BEFORE submitting the commit: read_table
             # resolves the manifest's delta-path list at CALL time, so
             # reading after the submit races the background CURRENT flip
@@ -438,10 +408,44 @@ def run_crawl(
                 if committed_this_run
                 else state.seen
             )
-            pending = committer.submit(_commit_and_maybe_compact)
             # next-wave state: depth-1 plans over committed parquet + this
-            # wave's checkpoint leaves — never reloaded eagerly
+            # wave's checkpoint leaves — never reloaded eagerly. seen' =
+            # seen ∪ processed (wave step 8, disjoint by construction).
             state.seen = base_seen.unionByName(out.processed)
+            tables = {
+                "frontier": out.new_frontier,
+                # S7: metrics as a queryable snapshot table, not only
+                # manifest JSON
+                "metrics": metrics_table(spark, state.metrics),
+            }
+            # seen/crawl_order/results grow monotonically: commit only
+            # this wave's delta (Iceberg-append semantics) — a cumulative
+            # rewrite would cost O(total²) I/O over a long crawl. Once the
+            # committed seen chain holds the listing threshold's number of
+            # paths, this commit folds it (the rewrite-data-files analog):
+            # seen' is written whole and the next delta chains from it.
+            append_tables = {
+                "crawl_order": out.crawl_order,
+                "results": out.results,
+            }
+            if _seen_chain(store) >= listing_threshold:
+                tables["seen"] = state.seen
+            else:
+                append_tables["seen"] = out.processed
+            extra = {
+                "next_wave": state.wave + 1,
+                "next_seq": next_seq,
+                # copy: the background json.dump must not see metrics
+                # appended by the NEXT wave
+                "metrics": list(state.metrics),
+            }
+            pending = committer.submit(
+                store.commit,
+                snapshot=state.wave + 1,
+                tables=tables,
+                extra=extra,
+                append_tables=append_tables,
+            )
             state.frontier = out.new_frontier
             retiring = out.cached
             state.wave += 1

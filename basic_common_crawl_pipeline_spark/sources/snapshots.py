@@ -8,14 +8,23 @@ Iceberg-semantics-compatible layout that swaps cleanly for
     <root>/manifest-<N>.json                 tables + row counts + extras
     <root>/CURRENT                           atomically-renamed pointer
 
-Commit protocol: write all tables' parquet, write ``manifest-<N>.json``,
-then ``os.replace`` a temp file onto ``CURRENT`` — the pointer flip is the
-single atomic commit point, exactly Iceberg's snapshot-pointer semantics.
-Resume = read ``CURRENT`` → manifest → tables; a crash mid-write leaves
-``CURRENT`` at snapshot N-1 and the job re-runs wave N deterministically
-(the at-least-once redelivery story of the reference queue —
-rust/src/rabbitmq.rs:74-81 — replaced by deterministic recompute +
-atomic commit, SURVEY.md §3.3).
+Commit protocol (``commit``, the only writer of a manifest): write all
+tables' parquet, write ``manifest-<N>.json``, then ``os.replace`` a temp
+file onto ``CURRENT`` — the pointer flip is the single atomic commit
+point, exactly Iceberg's snapshot-pointer semantics. Each manifest is
+written before the CURRENT flip that names it, and no write touches a
+manifest that CURRENT already names. Resume = read ``CURRENT`` → manifest → tables; a crash
+mid-write leaves ``CURRENT`` at snapshot N-1 and the job re-runs wave N
+deterministically (the at-least-once redelivery story of the reference
+queue — rust/src/rabbitmq.rs:74-81 — replaced by deterministic recompute
++ atomic commit, SURVEY.md §3.3).
+
+A table is either a full replacement (one ``path``) or an append table
+(a ``paths`` chain of per-snapshot deltas). Committing an append table
+whole, as a full replacement, is the rewrite-data-files analog: the
+crawl folds seen that way inside a wave's own commit once its chain
+reaches Spark's serial-listing limit (``plans/crawl.py``), and the next
+append starts its chain from that one path.
 """
 
 from __future__ import annotations
@@ -51,17 +60,19 @@ class SnapshotStore:
     ) -> dict:
         """Write all tables for ``snapshot`` and atomically flip CURRENT.
 
-        ``tables`` are full replacements (frontier/seen change shape every
+        ``tables`` are full replacements (the frontier changes shape every
         wave). ``append_tables`` are Iceberg-append semantics: only THIS
         snapshot's delta is written; the manifest records the accumulated
-        path list, so grow-only tables (crawl_order, results) cost
+        path list, so grow-only tables (seen, crawl_order, results) cost
         O(delta) I/O per commit instead of a cumulative rewrite —
         O(total²) over a long crawl otherwise. Re-running a crashed wave
         overwrites the same snap-N delta path and rebuilds the path list
         from the PREDECESSOR manifest (snapshot-1) — not from CURRENT —
         so replay stays idempotent AND a snapshot numbering that restarts
         at 1 over a directory holding older manifests starts from empty
-        append chains instead of splicing a previous run's deltas in."""
+        append chains instead of splicing a previous run's deltas in.
+        An append after a whole write of the same table (it was in the
+        predecessor's ``tables``) starts its chain from that one path."""
         manifest: dict = {"snapshot": snapshot, "tables": {}, "extra": extra or {}}
         try:
             prev = self.read_manifest(snapshot - 1)
@@ -76,6 +87,8 @@ class SnapshotStore:
             path = os.path.join(self.root, name, f"snap-{snapshot}")
             writes.append((name, df, path))
             prev_entry = (prev or {"tables": {}})["tables"].get(name, {})
+            if "path" in prev_entry:  # a whole write starts the chain
+                prev_entry = {"paths": [prev_entry["path"]]}
             paths = [p for p in prev_entry.get("paths", []) if p != path] + [path]
             manifest["tables"][name] = {"paths": paths}
         # the table writes are independent Spark jobs: submit them from
@@ -116,25 +129,3 @@ class SnapshotStore:
         if "paths" in entry:  # append-table: union of all committed deltas
             return spark.read.parquet(*entry["paths"])
         return spark.read.parquet(entry["path"])
-
-    def compact(self, spark: SparkSession, name: str) -> None:
-        """Rewrite an append-table's delta chain as one base path (the
-        Iceberg rewrite-data-files maintenance action). Long crawls call
-        this every ~100 waves so read_table doesn't union thousands of
-        small deltas. The rewrite lands next to the deltas and the
-        manifest/CURRENT flip stays the single atomic commit point; a
-        crash mid-compaction leaves the old manifest (and old paths)
-        fully intact."""
-        snap = self.current_snapshot()
-        manifest = self.read_manifest(snap)
-        entry = manifest["tables"].get(name, {})
-        if "paths" not in entry or len(entry["paths"]) <= 1:
-            return
-        base = os.path.join(self.root, name, f"compact-{snap}")
-        spark.read.parquet(*entry["paths"]).write.mode("overwrite").parquet(base)
-        manifest["tables"][name] = {"paths": [base]}
-        manifest_path = os.path.join(self.root, f"manifest-{snap}.json")
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2)
-        os.replace(tmp, manifest_path)

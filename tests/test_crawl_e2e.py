@@ -94,30 +94,57 @@ def test_every_snapshot_frontier_is_disjoint_from_seen(
     spark, corpus, oracle_result, tmp_path
 ):
     """The invariant the wave's step 1 relies on (plans/config.py), read
-    back from the store: in every committed snapshot of a crawl that
-    compacts every 2 waves and is interrupted and resumed, no frontier
-    URL is in that snapshot's seen table."""
+    back from the store: in every committed snapshot of a crawl whose
+    seen folds every other wave (listing threshold 2), interrupted just
+    before a fold and resumed, no frontier URL is in that snapshot's seen
+    table. No manifest names more than 2 seen paths, and every table read
+    at the fold snapshot and at the one after it equals a fresh crawl of
+    that many waves."""
     import dataclasses
+    from collections import Counter
 
     pages, seeds, robots = corpus_to_spark(spark, corpus)
     store = SnapshotStore(str(tmp_path / "snap"))
-    cfg = dataclasses.replace(CONFIG, compact_every_n_waves=2)
-    run_crawl(
-        spark, pages, seeds, robots, dataclasses.replace(cfg, max_waves=3),
-        store=store,
-    )
-    run_crawl(spark, pages, seeds, robots, cfg, store=store, resume=True)
-    order, _, _ = collect_outputs(spark, store)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        run_crawl(
+            spark, pages, seeds, robots, dataclasses.replace(CONFIG, max_waves=2),
+            store=store,
+        )
+        run_crawl(spark, pages, seeds, robots, CONFIG, store=store, resume=True)
+    finally:
+        spark.conf.set(key, old)
+    order, results, seen = collect_outputs(spark, store)
     assert [(r["seq"], r["url"]) for r in order] == [
         (r["seq"], r["url"]) for r in oracle_result.crawl_order
     ]
+    assert seen == oracle_result.seen
+    assert {r["canon_url"]: r["text"] for r in results} == oracle_result.extracted
     last = store.current_snapshot()
     assert last == CONFIG.max_waves
-    assert "compact-2" in store.read_manifest(2)["tables"]["seen"]["paths"][0]
+    entries = [store.read_manifest(k)["tables"]["seen"] for k in range(1, last + 1)]
+    assert ["path" in e for e in entries] == [False, False, True, False, True]
+    assert all(len(e.get("paths", [e.get("path")])) <= 2 for e in entries)
     for k in range(1, last + 1):
         frontier = store.read_table(spark, "frontier", snapshot=k)
         seen = store.read_table(spark, "seen", snapshot=k)
         assert frontier.join(seen, "canon_url", "left_semi").count() == 0, k
+
+    def rows(df):
+        return Counter(df.select(*sorted(df.columns)).collect())
+
+    for k in (3, 4):
+        fresh = SnapshotStore(str(tmp_path / f"fresh{k}"))
+        run_crawl(
+            spark, pages, seeds, robots, dataclasses.replace(CONFIG, max_waves=k),
+            store=fresh,
+        )
+        for name in ("frontier", "seen", "crawl_order", "results"):
+            assert rows(store.read_table(spark, name, snapshot=k)) == rows(
+                fresh.read_table(spark, name)
+            ), (k, name)
 
 
 def test_crawl_over_in_plan_rows_matches_oracle_and_leaves_no_copy(

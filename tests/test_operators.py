@@ -19,7 +19,6 @@ from basic_common_crawl_pipeline_spark.operators.multimodal import (
 )
 from basic_common_crawl_pipeline_spark.operators.ordering import (
     global_seq_assign,
-    global_seq_sorted,
     with_global_seq,
 )
 from basic_common_crawl_pipeline_spark.operators.politeness import (
@@ -28,46 +27,74 @@ from basic_common_crawl_pipeline_spark.operators.politeness import (
 from basic_common_crawl_pipeline_spark.operators.similarity import cosine_topk
 
 
-def test_global_seq_equals_window_rank(spark):
-    """with_global_seq equals the window rank on AQE's coalesced layout,
-    from a start other than 1, and on an empty input; its two phases over
-    the sorted cache equal it over several range partitions (coalescing
-    off). The one-call API is not run there: each of its two jobs
-    samples its own range bounds, and the numbering guard raises."""
-    df = spark.range(0, 4000).select(
-        (F.col("id") % 11).alias("k"), (F.col("id") * 7919 % 4000).alias("v")
-    )
-    want = sorted(
+def _window_rank(df):
+    return sorted(
         (r.k, r.v, r.seq)
         for r in df.withColumn(
             "seq", F.row_number().over(Window.orderBy("k", "v"))
         ).collect()
     )
-    got = with_global_seq(df, ["k", "v"]).collect()
+
+
+# 4 range partitions that AQE does not coalesce, for a few thousand rows
+_SEVERAL_RANGE_PARTITIONS = {
+    "spark.sql.shuffle.partitions": "4",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+}
+
+
+@contextmanager
+def _seq_session(spark, conf):
+    """Run the body under the session ``conf`` and retire the sorted
+    caches collected in the yielded list; the old settings come back."""
+    old = {k: spark.conf.get(k) for k in conf}
+    caches: list = []
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield caches
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+        for df in caches:
+            df.unpersist()
+
+
+def test_global_seq_equals_window_rank(spark):
+    """with_global_seq equals the window rank on AQE's coalesced layout,
+    over several range partitions (coalescing off), from a start other
+    than 1, and on an empty input. The sorted cache it hands back is the
+    caller's to release."""
+    df = spark.range(0, 4000).select(
+        (F.col("id") % 11).alias("k"), (F.col("id") * 7919 % 4000).alias("v")
+    )
+    want = _window_rank(df)
+    with _seq_session(spark, {}) as cache:
+        got = with_global_seq(df, ["k", "v"], cache=cache).collect()
     assert sorted((r.k, r.v, r.seq) for r in got) == want
-    rows = with_global_seq(df, ["k", "v"], start=100).collect()
-    assert len(rows) == 4000
+    with _seq_session(spark, _SEVERAL_RANGE_PARTITIONS) as cache:
+        rows = with_global_seq(df, ["k", "v"], start=100, cache=cache).collect()
+        parts = cache[0].select("__pid").distinct().count()
+        empty = with_global_seq(df.filter(F.col("k") < 0), ["k", "v"], cache=cache)
+        assert empty.collect() == []
+        assert len(cache) == 2
+    assert parts > 1 and len(rows) == 4000
     assert sorted((r.k, r.v, r.seq - 99) for r in rows) == want
 
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    cache: list = []
-    try:
-        sorted_df = global_seq_sorted(df, ["k", "v"], cache=cache)
-        counts = {
-            r["__pid"]: r["count"]
-            for r in sorted_df.groupBy("__pid").count().collect()
-        }
-        rows = global_seq_assign(sorted_df, counts, start=100).collect()
-        empty = with_global_seq(df.filter(F.col("k") < 0), ["k", "v"])
-        assert empty.collect() == []
-    finally:
-        spark.conf.set(key, old)
-        for c in cache:
-            c.unpersist()
-    assert len(counts) > 1 and len(rows) == 4000
-    assert sorted((r.k, r.v, r.seq - 99) for r in rows) == want
+
+def test_with_global_seq_numbers_several_range_partitions(spark):
+    """Five calls over 4000 rows in 4 range partitions (coalescing off)
+    each number like the window rank. Counting and numbering two
+    separate sorts raised here: each sort sampled its own range bounds,
+    and the numbering guard saw rows move between partitions."""
+    df = spark.range(0, 4000).select(
+        (F.col("id") % 11).alias("k"), (F.col("id") * 7919 % 4000).alias("v")
+    )
+    want = _window_rank(df)
+    for _ in range(5):
+        with _seq_session(spark, _SEVERAL_RANGE_PARTITIONS) as cache:
+            got = with_global_seq(df, ["k", "v"], cache=cache).collect()
+        assert sorted((r.k, r.v, r.seq) for r in got) == want
 
 
 def test_global_seq_assign_skips_a_partition_with_zero_rows(spark):

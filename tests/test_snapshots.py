@@ -61,34 +61,26 @@ def test_replayed_wave_does_not_duplicate_append_paths(spark, tmp_path):
     assert seqs == list(range(1, len(seqs) + 1))  # no duplicate slots
 
 
-def test_compaction_rewrites_delta_chain(spark, tmp_path):
-    corpus = synth_corpus(n_pages=150, n_hosts=4, seed=3, n_seeds=6)
-    pages, seeds, robots = corpus_to_spark(spark, corpus)
+def test_append_after_whole_write_starts_its_chain(spark, tmp_path):
+    """A table committed whole (in ``tables``) and then appended to: the
+    append's chain starts from the whole write's one path, reads at
+    every snapshot see exactly that snapshot's rows, and replaying the
+    append keeps one copy of its path."""
     store = SnapshotStore(str(tmp_path / "snap"))
-    run_crawl(
-        spark, pages, seeds, robots,
-        CrawlConfig(wave_seconds=8.0, max_waves=3, salt_partitions=3),
-        store=store,
-    )
-    before = {
-        r["seq"]: r["url"]
-        for r in store.read_table(spark, "crawl_order").collect()
+    store.commit(1, {}, append_tables={"t": spark.range(0, 3)})
+    store.commit(2, {}, append_tables={"t": spark.range(3, 5)})
+    store.commit(3, {"t": spark.range(0, 6)})
+    store.commit(4, {}, append_tables={"t": spark.range(6, 8)})
+    store.commit(4, {}, append_tables={"t": spark.range(6, 8)})  # replay
+    assert store.current_snapshot() == 4
+    whole = store.read_manifest(3)["tables"]["t"]
+    assert whole == {"path": str(tmp_path / "snap" / "t" / "snap-3")}
+    assert store.read_manifest(4)["tables"]["t"] == {
+        "paths": [whole["path"], str(tmp_path / "snap" / "t" / "snap-4")]
     }
-    store.compact(spark, "crawl_order")
-    manifest = store.read_manifest()
-    assert len(manifest["tables"]["crawl_order"]["paths"]) == 1
-    after = {
-        r["seq"]: r["url"]
-        for r in store.read_table(spark, "crawl_order").collect()
-    }
-    assert after == before
-    # resuming after compaction still works (frontier drained -> no-op run)
-    state = run_crawl(
-        spark, pages, seeds, robots,
-        CrawlConfig(wave_seconds=8.0, max_waves=3, salt_partitions=3),
-        store=store, resume=True,
-    )
-    assert state.wave == 3
+    for k, n in ((1, 3), (2, 5), (3, 6), (4, 8)):
+        ids = sorted(r.id for r in store.read_table(spark, "t", snapshot=k).collect())
+        assert ids == list(range(n)), k
 
 
 def test_metrics_table_handles_sparse_dicts(spark):
@@ -103,60 +95,69 @@ def test_metrics_table_handles_sparse_dicts(spark):
     assert row["candidates"] is None and row["fetched_bytes"] is None
 
 
-def test_auto_compaction_long_crawl(spark, tmp_path):
-    """A 20-wave crawl with compact_every_n_waves=5 keeps every
-    append-table's manifest path list bounded by the compaction interval
-    (not the wave count), matches the single-node oracle exactly, and
-    resumes across a compaction boundary byte-identically."""
+def test_seen_fold_long_crawl(spark, tmp_path):
+    """A 20-wave crawl at a listing threshold of 3: seen folds whole
+    inside the commit of every wave whose predecessor's chain already
+    holds 3 paths, so no manifest names more than 3 seen paths, while
+    crawl_order and results keep their whole delta chains. The crawl
+    matches the single-node oracle exactly, and a run stopped at a fold
+    snapshot and resumed commits the same chain shapes and the same
+    crawl."""
     import dataclasses
 
     from basic_common_crawl_pipeline_spark.plans.crawl import collect_outputs
     from basic_common_crawl_pipeline_spark.plans.oracle import run_oracle
 
     corpus = synth_corpus(n_pages=400, n_hosts=5, seed=11, n_seeds=8)
-    cfg = CrawlConfig(
-        wave_seconds=1.0, max_waves=20, salt_partitions=2,
-        compact_every_n_waves=5,
-    )
+    cfg = CrawlConfig(wave_seconds=1.0, max_waves=20, salt_partitions=2)
     want = run_oracle(corpus.pages, corpus.seeds, corpus.robots, cfg)
     pages, seeds, robots = corpus_to_spark(spark, corpus)
     # 20 tiny waves: shrink per-stage task count for the duration (the
     # determinism suite already pins output equality across partition
-    # counts); restored below
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-
-    store = SnapshotStore(str(tmp_path / "compacted"))
-    state = run_crawl(spark, pages, seeds, robots, cfg, store=store)
-    assert state.wave == 20  # genuinely a long crawl
-    manifest = store.read_manifest()
-    for name in ("seen", "crawl_order", "results"):
-        paths = manifest["tables"][name]["paths"]
-        # last compaction at snapshot 20 folds the chain to one base
-        # path; the bound stays ≤ interval in case a final partial
-        # window ever exists
-        assert len(paths) == 1, (name, paths)
-    order, results, seen = collect_outputs(spark, store)
-    assert [(r["seq"], r["wave"], r["url"]) for r in order] == [
-        (r["seq"], r["wave"], r["url"]) for r in want.crawl_order
-    ]
-    assert seen == want.seen
-    assert {r["canon_url"]: r["text"] for r in results} == want.extracted
-
-    # resume across a compaction boundary (snapshot 5 compacted in the
-    # first half) reproduces the uninterrupted run exactly
-    store2 = SnapshotStore(str(tmp_path / "split"))
-    half = dataclasses.replace(cfg, max_waves=7)
+    # counts); both settings restored below
+    conf = {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "3",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    store = SnapshotStore(str(tmp_path / "folded"))
+    split = SnapshotStore(str(tmp_path / "split"))
     try:
-        run_crawl(spark, pages, seeds, robots, half, store=store2)
-        run_crawl(spark, pages, seeds, robots, cfg, store=store2, resume=True)
+        state = run_crawl(spark, pages, seeds, robots, cfg, store=store)
+        half = dataclasses.replace(cfg, max_waves=7)
+        run_crawl(spark, pages, seeds, robots, half, store=split)
+        run_crawl(spark, pages, seeds, robots, cfg, store=split, resume=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    order2, results2, seen2 = collect_outputs(spark, store2)
-    assert [(r["seq"], r["wave"], r["url"]) for r in order2] == [
-        (r["seq"], r["wave"], r["url"]) for r in want.crawl_order
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert state.wave == 20  # genuinely a long crawl
+
+    def chains(st):
+        """Per snapshot: seen's path count, and whether it was whole."""
+        out = []
+        for k in range(1, 21):
+            entry = st.read_manifest(k)["tables"]["seen"]
+            out.append((len(entry.get("paths", [entry.get("path")])),
+                        "path" in entry))
+        return out
+
+    got = chains(store)
+    assert [k for k, (_, whole) in enumerate(got, 1) if whole] == [
+        4, 7, 10, 13, 16, 19
     ]
-    assert seen2 == want.seen
+    assert max(n for n, _ in got) == 3
+    for name in ("crawl_order", "results"):
+        assert len(store.read_manifest()["tables"][name]["paths"]) == 20
+    assert chains(split) == got
+    for st in (store, split):
+        order, results, seen = collect_outputs(spark, st)
+        assert [(r["seq"], r["wave"], r["url"]) for r in order] == [
+            (r["seq"], r["wave"], r["url"]) for r in want.crawl_order
+        ]
+        assert seen == want.seen
+        assert {r["canon_url"]: r["text"] for r in results} == want.extracted
 
 
 def test_time_travel_reads_reproduce_run_prefixes(spark, tmp_path):
