@@ -102,6 +102,20 @@ def languages_array(languages: Column | str) -> Column:
     return F.transform(F.split(col, ","), lambda t: F.trim(t))
 
 
+def eligible(status: str, languages: str, language: str = "eng") -> Column:
+    """F1-F3 as one predicate: ``languages`` holds ``language`` as an
+    exact comma-separated token and ``status`` is 200. A null
+    ``languages`` is false; a null ``status`` is null, which a filter
+    and a ``when`` both treat as false. ``eligible_filter`` and the
+    crawl wave's classification (plans/wave.py step 4) both use it."""
+    langs = F.col(languages)
+    return (
+        langs.isNotNull()
+        & F.array_contains(languages_array(langs), language)
+        & (F.col(status).cast("int") == 200)
+    )
+
+
 def eligible_filter(
     df: DataFrame,
     status_col: str = "metadata.status",
@@ -121,15 +135,11 @@ def eligible_filter(
     (rust/src/bin/batcher.rs:90; Python/Go compare the string "200" —
     identical outcome for well-formed values).
     """
+    if not substring_semantics:
+        return df.filter(eligible(status_col, languages_col, language))
     langs = F.col(languages_col)
-    if substring_semantics:
-        lang_pred = langs.isNotNull() & langs.contains(language)
-    else:
-        lang_pred = langs.isNotNull() & F.array_contains(
-            languages_array(langs), language
-        )
     status_pred = F.col(status_col).cast("int") == 200
-    return df.filter(lang_pred & status_pred)
+    return df.filter(langs.isNotNull() & langs.contains(language) & status_pred)
 
 
 def with_numeric_casts(df: DataFrame) -> DataFrame:

@@ -3792,10 +3792,11 @@ def latest_capture_dedup(spark, sf_dir):
     """,
 )
 def crawl_wave_flagship(spark, sf_dir):
-    """The flagship: one frontier-expansion wave over pages derived from
-    the documents table. Full semantics verified against the single-node
-    oracle in tests/test_crawl_e2e.py (crawl order, seen set,
-    byte-identical text).
+    """The flagship: a one-wave crawl (``run_crawl``, committed to a
+    snapshot store) over pages derived from the documents table; its
+    rows are the store's ``results`` table with text as ``text_len``.
+    Full semantics verified against the single-node oracle in
+    tests/test_crawl_e2e.py (crawl order, seen set, byte-identical text).
 
     The SQL oracle replays wave 0 row-level from the generator
     arithmetic, the same CTE chain crawl_metrics replays at counter
@@ -3806,28 +3807,21 @@ def crawl_wave_flagship(spark, sf_dir):
     extraction is: 'doc\\nDoc {id}\\n' + 8×'section {j} {text}\\n' +
     'n1 n2 n3' → 105 + len(str(doc_id)) + 8*len(text) bytes (documents
     text is pure ASCII at every sf, so DuckDB length == bytes)."""
+    from ..sources.snapshots import SnapshotStore
     from .config import CrawlConfig
-    from .crawl import release
-    from .wave import empty_seen, frontier_from_seeds, run_wave
+    from .crawl import run_crawl
 
     pages, seeds, robots = pages_from_documents(spark, sf_dir)
-    frontier = frontier_from_seeds(seeds)
-    out = run_wave(
-        spark, frontier, empty_seen(spark), pages, robots,
-        wave=0, config=CrawlConfig(wave_seconds=16.0),
+    store = SnapshotStore(_scratch_dir("crawl_flagship"))
+    run_crawl(
+        spark, pages, seeds, robots,
+        config=CrawlConfig(wave_seconds=16.0, max_waves=1),
+        store=store,
     )
-    result = out.results.select(
+    return store.read_table(spark, "results").select(
         "wave", "canon_url", "host", "priority",
         F.length("text").cast("long").alias("text_len"),
-    ).localCheckpoint(eager=True)
-    # retire the wave's persisted intermediates and its two lazy
-    # checkpoint leaves (WaveOutput contract: the caller releases them)
-    # — the eager checkpoint above makes the returned frame
-    # self-contained first
-    release(
-        (*out.cached, out.processed, out.new_frontier), (pages, seeds, robots)
     )
-    return result
 
 
 @register(

@@ -311,7 +311,7 @@ def run_crawl(
             seen=store.read_table(spark, "seen"),
             metrics=manifest["extra"]["metrics"],
         )
-        frontier_count = None
+        frontier_count = state.frontier.count()
         retiring: tuple = ()  # the previous wave's caches
     else:
         if store.current_snapshot() is not None:
@@ -350,7 +350,6 @@ def run_crawl(
         spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
     )
     pending = None        # in-flight commit of the previous wave
-    committed_this_run = False
     # the robots dim is re-read every wave (broadcast join build) — cache
     # it once per crawl instead of recomputing its lineage per wave,
     # unless the caller already did (then the caller keeps it)
@@ -362,11 +361,6 @@ def run_crawl(
     inputs = (pages, robots, seeds)
     try:
         while state.wave < config.max_waves:
-            if frontier_count is None:
-                # first wave of this run only; every later wave reuses the
-                # previous wave's frontier_size metric (drained check AND
-                # run_wave's SMALL_WAVE_ROWS gate, zero extra actions)
-                frontier_count = state.frontier.count()
             if frontier_count == 0:
                 break
             # ONE blocking action (inside run_wave) — it overlaps the
@@ -394,7 +388,6 @@ def run_crawl(
             # leaves under them
             if pending is not None:
                 pending.result()
-                committed_this_run = True
             release(retiring, inputs)
 
             # resolve the rebase BEFORE submitting the commit: read_table
@@ -402,10 +395,11 @@ def run_crawl(
             # reading after the submit races the background CURRENT flip
             # — if the flip lands first, seen would already include this
             # wave's processed delta and the unionByName below would
-            # double it
+            # double it. CURRENT is the previous wave's finished commit or
+            # a resume's start manifest; none yet at wave 0 of a fresh run.
             base_seen = (
                 store.read_table(spark, "seen")
-                if committed_this_run
+                if store.current_snapshot() is not None
                 else state.seen
             )
             # next-wave state: depth-1 plans over committed parquet + this

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.cdx import eligible
 from ..functions.links import extract_links_rich
 from ..functions.urls import canon_host_surt
 from ..operators.ordering import global_seq_assign, global_seq_sorted
@@ -207,7 +208,8 @@ def run_wave(
     wave: int,
     config: CrawlConfig = CrawlConfig(),
     next_seq: int = 1,
-    frontier_count: int | None = None,
+    *,
+    frontier_count: int,
 ) -> WaveOutput:
     """Expand ``frontier`` by one wave (semantics: plans/config.py).
 
@@ -219,12 +221,14 @@ def run_wave(
     disjoint from ``seen ∪ processed``. Direct callers pass
     ``empty_seen`` or a previous wave's outputs the same way.
 
-    Given ``frontier_count`` (the frontier's row count, which the
-    caller already holds), the wave checks that it classified each
-    frontier row exactly once, inside its one action: a URL with two
-    pages rows or a host with two robots rows makes the left joins emit
-    extra candidates. It then releases the wave's caches and raises
-    ``ValueError`` before returning anything to commit."""
+    ``frontier_count`` is the frontier's row count, which the caller
+    already holds; it alone picks the plan (at most ``SMALL_WAVE_ROWS``
+    rows: no politeness salt, a one-task crawl-order sort). Inside its
+    one action the wave checks that it classified each frontier row
+    exactly once (a URL with two pages rows or a host with two robots
+    rows makes the left joins emit extra candidates); if not, it
+    releases its caches and raises ``ValueError`` before returning
+    anything to commit."""
     # 1. candidates = frontier: frontier ∩ seen = ∅ by the precondition,
     #    so the wave tests seen membership only at discovery (step 9)
     cand = frontier
@@ -263,21 +267,17 @@ def run_wave(
     cand = cand.hint("shuffle_hash").join(index, "canon_url", "left")
 
     # 4. classify: disallowed / miss / ineligible / eligible (F1-F3)
-    lang_ok = F.array_contains(
-        F.transform(F.split("__lang", ","), lambda t: F.trim(t)),
-        config.language,
-    )
     cand = cand.withColumn(
         "__class",
         F.when(F.col("__disallowed"), F.lit("disallowed"))
         .when(F.col("__status").isNull(), F.lit("miss"))
-        .when((F.col("__status") == 200) & F.coalesce(lang_ok, F.lit(False)),
+        .when(eligible("__status", "__lang", config.language),
               F.lit("eligible"))
         .otherwise(F.lit("ineligible")),
     ).persist()
 
     # 5. politeness: budget = max(1, floor(wave_seconds / crawl_delay))
-    eligible = cand.filter(F.col("__class") == "eligible").withColumn(
+    eligible_rows = cand.filter(F.col("__class") == "eligible").withColumn(
         "budget",
         F.greatest(F.lit(1), F.floor(F.lit(config.wave_seconds) / F.col("__delay"))),
     )
@@ -287,10 +287,10 @@ def run_wave(
     # either way (top-k is distributive; asserted by the politeness tests).
     # One ranking pass yields selected AND deferred — no anti-join
     # (select-then-subtract would shuffle eligible+selected again).
-    small_wave = frontier_count is not None and frontier_count <= SMALL_WAVE_ROWS
+    small_wave = frontier_count <= SMALL_WAVE_ROWS
     salt = 1 if small_wave else config.salt_partitions
     ranked = rank_per_host_topk(
-        eligible,
+        eligible_rows,
         salt_partitions=salt,
     ).select("canon_url", "host", "surt", "priority", "__selected").persist()
     selected = ranked.filter(F.col("__selected")).drop("__selected")
@@ -447,7 +447,7 @@ def run_wave(
         counts.get(c, 0) for c in ("disallowed", "miss", "ineligible", "eligible")
     )
     cached = (cand, ranked, extracted, processed, new_frontier, *seq_cache)
-    if frontier_count is not None and n_candidates != frontier_count:
+    if n_candidates != frontier_count:
         for df in cached:
             df.unpersist()
         raise ValueError(

@@ -110,6 +110,7 @@ def main() -> None:
         bout = run_wave(
             spark, bfrontier, empty_seen(spark), bpages, brobots, wave=0,
             config=CrawlConfig(wave_seconds=1 << 20, salt_partitions=8),
+            frontier_count=n_bfrontier,
         )
         eager_leaf = bout.new_frontier.localCheckpoint(True)
         trial_sec = time.time() - t0
@@ -158,14 +159,13 @@ def main() -> None:
 
     # -- single-node sequential baseline (the reference's execution model:
     # one worker, one record at a time) on a 5k-page sample ---------------
-    from basic_common_crawl_pipeline_spark.functions.extract import extract_text
-    from basic_common_crawl_pipeline_spark.functions.links import extract_links
+    # one parse per page (text and links), as the engine's extract does
+    from basic_common_crawl_pipeline_spark.functions.links import extract_page
 
     sample = pages.select("url", "html").limit(5000).collect()
     t0 = time.time()
     for row in sample:
-        extract_text(row.html)
-        extract_links(row.html, row.url)
+        extract_page(row.html, row.url)
     seq_sec = time.time() - t0
     throughput["sequential_pages_per_sec"] = round(len(sample) / seq_sec, 2)
     throughput["spark_vs_sequential_speedup"] = round(

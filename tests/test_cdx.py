@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 from basic_common_crawl_pipeline_spark.functions.cdx import (
+    eligible,
     eligible_filter,
     parse_cdx_lines,
     parse_cluster_idx,
@@ -114,6 +115,42 @@ def test_substring_vs_token_semantics(spark):
     df = parse_cdx_lines(spark.createDataFrame([(l,) for l in lines], ["line"]))
     assert eligible_filter(df).count() == 0
     assert eligible_filter(df, substring_semantics=True).count() == 1
+
+
+def test_eligible_filters_and_classifies_alike(spark):
+    """``eligible`` is one rule for both of its users: the rows
+    ``eligible_filter`` keeps are exactly the rows a ``when(eligible)``
+    classifies eligible (a null predicate falls through like false),
+    and both equal the oracle's token rule (plans/oracle.py)."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (i, status, lang)
+        for i, (status, lang) in enumerate(
+            (s, l)
+            for s in (200, 404, None)
+            for l in ("eng", "ind, eng", "eng-Latn", "", None)
+        )
+    ]
+    df = spark.createDataFrame(rows, "id int, status int, lang string")
+    kept = {r.id for r in eligible_filter(df, "status", "lang").collect()}
+    classified = {
+        r.id
+        for r in df.select(
+            "id",
+            F.when(eligible("status", "lang"), F.lit("eligible"))
+            .otherwise(F.lit("ineligible"))
+            .alias("c"),
+        ).collect()
+        if r.c == "eligible"
+    }
+    want = {
+        i for i, status, lang in rows
+        if status == 200
+        and lang is not None
+        and "eng" in {t.strip() for t in lang.split(",")}
+    }
+    assert kept == classified == want == {0, 1}
 
 
 def test_numeric_casts(spark):

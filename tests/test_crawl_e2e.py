@@ -426,3 +426,35 @@ def test_anchor_in_a_dash_space_comment_is_not_followed(spark, tmp_path, extract
     assert "http://c.test/shown" in seen
     assert "http://c.test/hidden" not in seen
     assert [r["url"] for r in order] == ["http://c.test/", "http://c.test/shown"]
+
+
+def test_flagship_equals_oracle_wave_0(spark):
+    """``entry()``'s flagship (a committed one-wave ``run_crawl`` over
+    ``pages_from_documents``) returns wave 0 of ``run_oracle`` over
+    the same fixture: per extracted page its canon_url, host, priority
+    and text length."""
+    from basic_common_crawl_pipeline_spark.plans import catalog
+    from tests.conftest import SF_SMALL
+
+    pages, seeds, robots = catalog.pages_from_documents(spark, SF_SMALL)
+    want = run_oracle(
+        [r.asDict() for r in pages.collect()],
+        [r.asDict() for r in seeds.collect()],
+        [r.asDict() for r in robots.collect()],
+        CrawlConfig(wave_seconds=16.0, max_waves=1),
+    )
+    try:
+        got = sorted(
+            tuple(r)
+            for r in catalog.QUERIES["crawl_wave_flagship"](spark, SF_SMALL)
+            .select("wave", "canon_url", "host", "priority", "text_len")
+            .collect()
+        )
+    finally:
+        catalog.release_caller(spark)
+    order = {r["url"]: r for r in want.crawl_order}
+    assert got == sorted(
+        (0, url, order[url]["host"], order[url]["priority"], len(text))
+        for url, text in want.extracted.items()
+    )
+    assert got

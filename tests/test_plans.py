@@ -165,13 +165,10 @@ def test_prometheus_exposition_format():
     assert text.endswith("\n")
 
 
-def test_wave_index_scan_prunes_html(spark, tmp_path):
-    """The wave's index join (S2/P7) must scan only (url, status, lang):
-    the fat html column appears in NO scan except the post-politeness
-    fetch join's."""
-    from basic_common_crawl_pipeline_spark.plans.catalog import (
-        pages_from_documents,
-    )
+def _wave0(spark, pages, seeds, robots):
+    """Wave 0 over ``empty_seen`` from the seed frontier, given its
+    ``count()`` as run_crawl gives it. The caller unpersists
+    ``out.cached``."""
     from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
     from basic_common_crawl_pipeline_spark.plans.wave import (
         empty_seen,
@@ -179,15 +176,27 @@ def test_wave_index_scan_prunes_html(spark, tmp_path):
         run_wave,
     )
 
+    frontier = frontier_from_seeds(seeds)
+    return run_wave(
+        spark, frontier, empty_seen(spark), pages, robots, wave=0,
+        config=CrawlConfig(wave_seconds=16.0),
+        frontier_count=frontier.count(),
+    )
+
+
+def test_wave_index_scan_prunes_html(spark, tmp_path):
+    """The wave's index join (S2/P7) must scan only (url, status, lang):
+    the fat html column appears in NO scan except the post-politeness
+    fetch join's."""
+    from basic_common_crawl_pipeline_spark.plans.catalog import (
+        pages_from_documents,
+    )
+
     pages, seeds, robots = pages_from_documents(spark, SF)
     path = str(tmp_path / "pages")
     pages.write.parquet(path)
     pages_pq = spark.read.parquet(path)
-    out = run_wave(
-        spark, frontier_from_seeds(seeds), empty_seen(spark),
-        pages_pq, robots, wave=0,
-        config=CrawlConfig(wave_seconds=16.0),
-    )
+    out = _wave0(spark, pages_pq, seeds, robots)
     plan = _plan(out.results)
     # every parquet scan's ReadSchema over the pages table either
     # omits html (index side) or is the url+html fetch side
@@ -291,17 +300,7 @@ def _python_nodes(plan, input_cache=None) -> list[str]:
 
 def _wave_html_shuffles(spark, pages, seeds, robots) -> list:
     """The html-carrying shuffles of a wave-0 run over cached ``pages``."""
-    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
-    from basic_common_crawl_pipeline_spark.plans.wave import (
-        empty_seen,
-        frontier_from_seeds,
-        run_wave,
-    )
-
-    out = run_wave(
-        spark, frontier_from_seeds(seeds), empty_seen(spark), pages, robots,
-        wave=0, config=CrawlConfig(wave_seconds=16.0),
-    )
+    out = _wave0(spark, pages, seeds, robots)
     assert out.metrics["extracted"] > 0
     input_cache = pages._jdf.queryExecution().optimizedPlan()  # InMemoryRelation
     shuffles = _shuffles_outside(
@@ -316,14 +315,19 @@ def _wave_html_shuffles(spark, pages, seeds, robots) -> list:
     ]
 
 
-def test_wave_never_shuffles_html_over_url_partitioned_pages(spark, tmp_path):
+def test_wave_never_shuffles_html_over_url_partitioned_pages(
+    spark, tmp_path, monkeypatch
+):
     """Over pages cached hash-partitioned by url (as pages_from_documents
     and the benchmark's generator build them, and as run_crawl partitions
     a plain parquet read once per crawl), the wave's shuffle_hash joins
     exchange only the frontier side: no shuffle in the wave's executed
     plans, caches included, carries the html column. A round-robin copy
     of the same pages is the negative control — there the fetch join
-    must shuffle html, so the walk provably sees it."""
+    must shuffle html, so the walk provably sees it. The large-wave plan
+    (salted top-k, range-partitioned sort) is pinned too, by lowering
+    ``SMALL_WAVE_ROWS`` to 0: at this size every wave is small."""
+    from basic_common_crawl_pipeline_spark.plans import wave
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
@@ -347,6 +351,8 @@ def test_wave_never_shuffles_html_over_url_partitioned_pages(spark, tmp_path):
         assert _wave_html_shuffles(spark, pages, seeds, robots) == []
         assert _wave_html_shuffles(spark, prepared, seeds, robots) == []
         assert _wave_html_shuffles(spark, scattered, seeds, robots)
+        monkeypatch.setattr(wave, "SMALL_WAVE_ROWS", 0)
+        assert _wave_html_shuffles(spark, pages, seeds, robots) == []
     finally:
         scattered.unpersist()
         prepared.unpersist()
@@ -513,19 +519,9 @@ def test_wave_leaves_materialize_without_rerunning_the_wave(spark):
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
-    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
-    from basic_common_crawl_pipeline_spark.plans.wave import (
-        empty_seen,
-        frontier_from_seeds,
-        run_wave,
-    )
 
     pages, seeds, robots = pages_from_documents(spark, SF)
-    out = run_wave(
-        spark, frontier_from_seeds(seeds), empty_seen(spark),
-        pages, robots, wave=0,
-        config=CrawlConfig(wave_seconds=16.0),
-    )
+    out = _wave0(spark, pages, seeds, robots)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     try:
@@ -873,13 +869,7 @@ def test_wave_fetch_join_over_bucketed_pages_drops_exchanges(spark, tmp_path):
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
-    from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
     from basic_common_crawl_pipeline_spark.plans.crawl import url_partitioned
-    from basic_common_crawl_pipeline_spark.plans.wave import (
-        empty_seen,
-        frontier_from_seeds,
-        run_wave,
-    )
     from basic_common_crawl_pipeline_spark.sources.bucketed import (
         drop_bucketed_table,
         read_bucketed_table,
@@ -898,11 +888,7 @@ def test_wave_fetch_join_over_bucketed_pages_drops_exchanges(spark, tmp_path):
         assert url_partitioned(bk) and not url_partitioned(plain)
 
         def run(p):
-            out = run_wave(
-                spark, frontier_from_seeds(seeds), empty_seen(spark), p,
-                robots, wave=0,
-                config=CrawlConfig(wave_seconds=16.0),
-            )
+            out = _wave0(spark, p, seeds, robots)
             plan = out.results._jdf.queryExecution().executedPlan().toString()
             rows = sorted(
                 (r["canon_url"], r["text"])
@@ -1015,26 +1001,19 @@ def test_global_seq_assign_is_a_narrow_jvm_projection(spark):
 def _wave1(spark):
     """(pages, w0, w1): wave 0 over ``empty_seen``, then wave 1 over
     ``empty_seen`` ∪ wave 0's processed leaf — the run_crawl shape of a
-    crawl's second wave. The caller unpersists ``w0.cached + w1.cached``."""
+    crawl's second wave, each given its frontier count the way
+    run_crawl gives it. The caller unpersists ``w0.cached + w1.cached``."""
     from basic_common_crawl_pipeline_spark.plans.catalog import (
         pages_from_documents,
     )
     from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
-    from basic_common_crawl_pipeline_spark.plans.wave import (
-        empty_seen,
-        frontier_from_seeds,
-        run_wave,
-    )
+    from basic_common_crawl_pipeline_spark.plans.wave import empty_seen, run_wave
 
     pages, seeds, robots = pages_from_documents(spark, SF)
-    config = CrawlConfig(wave_seconds=16.0)
-    w0 = run_wave(
-        spark, frontier_from_seeds(seeds), empty_seen(spark), pages, robots,
-        wave=0, config=config,
-    )
+    w0 = _wave0(spark, pages, seeds, robots)
     w1 = run_wave(
         spark, w0.new_frontier, empty_seen(spark).unionByName(w0.processed),
-        pages, robots, wave=1, config=config,
+        pages, robots, wave=1, config=CrawlConfig(wave_seconds=16.0),
         next_seq=1 + w0.metrics["selected"],
         frontier_count=w0.metrics["frontier_size"],
     )
