@@ -216,7 +216,8 @@ def minhash_lsh_dedup(
     rows_per_band: int = 2,
     threshold: float = 0.5,
     cell_cap: int | None = 100_000,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Full MinHash→LSH→verify near-dup pipeline → (a, b, jaccard ≥ t).
 
@@ -228,11 +229,11 @@ def minhash_lsh_dedup(
     measured 17% on the whole pipeline at sf0.1 (interleaved best-of-3,
     5.5 vs 6.7 s at local[32]), and the ``cell_cap`` guard's count job
     reads cached blocks instead of re-deriving the signature lineage.
-    Pass ``cache`` to own the unpersists (asof_join convention)."""
+    Both persists go in ``cache``; the caller unpersists them once the
+    result is read."""
     shingles = shingle_table(df, id_col, text_col, shingle_n).persist()
     sigs = minhash_signatures(shingles, bands * rows_per_band).persist()
-    if cache is not None:
-        cache += [shingles, sigs]
+    cache += [shingles, sigs]
     cands = lsh_candidate_pairs(sigs, bands, rows_per_band, cell_cap)
     return jaccard_for_pairs(shingles, cands).filter(
         F.col("jaccard") >= threshold
@@ -430,7 +431,8 @@ def simhash_pairs(
     chunks: int = 4,
     max_hamming: int = 3,
     cell_cap: int | None = 100_000,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Near-dup pairs within Hamming distance ``max_hamming`` of each
     other's SimHash — the actual dedup use of the signatures.
@@ -439,7 +441,8 @@ def simhash_pairs(
     count and both self-join sides, and the SimHash aggregation
     (per-word hash explode + groupBy) is the pipeline's dominant cost —
     2.7× end-to-end at sf0.1 (4.3 → 1.6 s, interleaved best-of-3).
-    Pass ``cache`` to own the unpersist (asof_join convention).
+    It goes in ``cache``; the caller unpersists it once the result is
+    read.
 
     Banded Hamming-neighbor join: split the signature into ``chunks``
     equal bit-slices and equi-join on (chunk_id, chunk_key). By
@@ -455,8 +458,7 @@ def simhash_pairs(
     if max_hamming >= chunks:
         raise ValueError("exactness needs max_hamming < chunks (pigeonhole)")
     sh = simhash(df, id_col, text_col, bits).persist()
-    if cache is not None:
-        cache.append(sh)
+    cache.append(sh)
     chunk_bits = bits // chunks
     mask = (1 << chunk_bits) - 1
     structs = F.array(
@@ -583,7 +585,8 @@ def span_dedup(
     text_col: str = "text",
     n: int = 5,
     id_scale: int = 1_000_000,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Exact duplicate-SPAN removal — substring-level dedup in the
     Lee-et-al. "Deduplicating Training Data" discipline, one level below
@@ -611,9 +614,9 @@ def span_dedup(
     is one window task. Only ``(doc, position)`` pairs flow after the
     mark; the text itself never shuffles until the final reassembly
     groupBy on the unique document id, and per-document windows are
-    bounded by document length, never corpus skew. Pass ``cache`` to own
-    the gram table's persist (the asof_join/pack_token_stream
-    convention). ``id_scale`` packs (id, pos) into one BIGINT for the
+    bounded by document length, never corpus skew. The gram table's
+    persist goes in ``cache``; the caller unpersists it once the result
+    is read. ``id_scale`` packs (id, pos) into one BIGINT for the
     cross-engine-exact first-occurrence min; ids must be non-negative
     and documents shorter than ``id_scale`` tokens.
     """
@@ -633,8 +636,7 @@ def span_dedup(
     ).select(id_col, "__pos", _hash64_expr(F.col("__gram")).alias("__h"))
     packed = F.col(id_col).cast("long") * id_scale + F.col("__pos")
     grams = grams.persist()
-    if cache is not None:
-        cache.append(grams)
+    cache.append(grams)
     firsts = (
         grams.groupBy("__h")
         .agg(F.min(packed).alias("__first"), F.count("*").alias("__c"))

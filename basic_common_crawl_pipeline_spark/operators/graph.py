@@ -113,7 +113,8 @@ def connected_components_star(
     max_iterations: int = 50,
     checkpoint_every: int = 3,
     info: dict | None = None,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """(node, label) connected components via alternating large-star /
     small-star contraction — the O(log n)-round production path for
@@ -137,8 +138,8 @@ def connected_components_star(
     lineage truncates every ``checkpoint_every`` rounds from the hot
     cache. Labels are the component-min node ids (property-tested
     against a union-find); ``nodes`` adds isolated vertices. Pass
-    ``info={}`` for ``info['rounds']``; final round's cache retires via
-    the ``cache`` list (else session LRU), like ordering.py."""
+    ``info={}`` for ``info['rounds']``. The final round's persist goes
+    in ``cache``; the caller unpersists it once the result is read."""
     endpoints = (
         edges.select(F.col(src_col).alias("node"))
         .unionByName(edges.select(F.col(dst_col).alias("node")))
@@ -195,7 +196,7 @@ def connected_components_star(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    prev_sig, prev_cache = None, None
+    prev_sig, last_round = None, None
     converged = False
     try:
         for rounds in range(1, max_iterations + 1):
@@ -204,9 +205,9 @@ def connected_components_star(
             e = e_new
             if checkpoint_every and rounds % checkpoint_every == 0:
                 e = e.localCheckpoint(eager=False)
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = e_new
+            if last_round is not None:
+                last_round.unpersist()
+            last_round = e_new
             if sig == prev_sig:
                 converged = True
                 if info is not None:
@@ -218,8 +219,7 @@ def connected_components_star(
                 f"star contraction did not converge in {max_iterations} "
                 "rounds; raise max_iterations"
             )
-        if cache is not None and prev_cache is not None:
-            cache.append(prev_cache)
+        cache.append(last_round)
         # fixed point = (child, root) star edges; roots and isolated
         # nodes label themselves
         labels = e.select(F.col("u").alias("node"), F.col("v").alias("label"))
@@ -230,8 +230,8 @@ def connected_components_star(
             )
         )
     finally:
-        if not converged and prev_cache is not None:
-            prev_cache.unpersist()
+        if not converged and last_round is not None:
+            last_round.unpersist()
 
 
 def pagerank_int(

@@ -77,15 +77,15 @@ def check_pid_layout(parted: DataFrame, n_parts: int, seen_pids) -> None:
 def global_seq_sorted(
     df: DataFrame,
     order_cols: list[str],
-    cache: list | None = None,
     single_partition: bool = False,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Phase 1: range-repartition + sort on the total ``order_cols`` key,
     with a ``__pid`` physical-partition column for the offsets count.
-    Pass a list as ``cache`` to persist the sorted intermediate (so the
-    counting job materializes it and the assignment pass does NOT re-run
-    the global sort); the handle is appended and the caller owns
-    unpersisting it.
+    The sorted intermediate is persisted, so the counting job
+    materializes it and the assignment pass does NOT re-run the global
+    sort; it goes in ``cache``, and the caller unpersists what is there.
 
     ``single_partition=True`` sorts in ONE task instead: the right
     physical choice when the caller knows the input is broadcast-sized
@@ -98,10 +98,8 @@ def global_seq_sorted(
         else df.repartitionByRange(*order_cols)
     )
     sorted_df = base.sortWithinPartitions(*order_cols)
-    sorted_df = sorted_df.withColumn("__pid", F.spark_partition_id())
-    if cache is not None:
-        sorted_df = sorted_df.persist()
-        cache.append(sorted_df)
+    sorted_df = sorted_df.withColumn("__pid", F.spark_partition_id()).persist()
+    cache.append(sorted_df)
     return sorted_df
 
 

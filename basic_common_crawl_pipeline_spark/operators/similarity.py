@@ -273,8 +273,9 @@ def neardup_pairs(
     bands: int = 4,
     rows_per_band: int = 2,
     cell_cap: int = 100_000,
-    cache: list | None = None,
     broadcast_max_bytes: int = BROADCAST_VECTOR_BYTES,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Embedding near-duplicates via banded random-hyperplane LSH:
     signature → band equi-join (cells over ``cell_cap`` rows dropped —
@@ -285,8 +286,8 @@ def neardup_pairs(
     (sigs feed the cap count + both band-join sides; vn feeds both
     verify sides) — a ~10% end-to-end win at sf0.1 (3.1 → 2.8 s,
     interleaved best-of-3; smaller than minhash's 17% because the
-    hyperplane folds are cheaper than shingle aggregation). Pass
-    ``cache`` to own the unpersists (asof_join convention)."""
+    hyperplane folds are cheaper than shingle aggregation). Both go in
+    ``cache``; the caller unpersists them once the result is read."""
     if planes is None:
         planes = random_hyperplanes(bands * rows_per_band)
     from .dedup import _cap_cells
@@ -299,8 +300,7 @@ def neardup_pairs(
     sigs = (
         rh_signature(vecs, planes, vec_col="v").select("id", "sig").persist()
     )
-    if cache is not None:
-        cache.append(sigs)
+    cache.append(sigs)
     banded = _banded(sigs, bands, rows_per_band)
     in_cells = _cap_cells(banded, cell_cap)
     left = in_cells.alias("l")
@@ -322,8 +322,7 @@ def neardup_pairs(
     # cosine projection would re-fold per PAIR (measured 2.6× slower
     # end-to-end at sf0.1). Same IEEE ops, same round4 — bit-identical.
     vn = vecs.withColumn("n", _norm(F.col("v"))).persist()
-    if cache is not None:
-        cache.append(vn)
+    cache.append(vn)
     va = vn.select(
         F.col("id").alias("a"), F.col("v").alias("va"), F.col("n").alias("na")
     )
@@ -738,9 +737,10 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_cap: int = 100_000,
-    cache: list | None = None,
     broadcast_max_bytes: int = BROADCAST_VECTOR_BYTES,
     kernel_min_vectors: int = 10_000,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Cluster-then-prune semantic deduplication (the SemDeDup shape,
     Abbas et al. 2023, arXiv:2303.09540): coarse-quantize every vector
@@ -765,8 +765,8 @@ def semantic_dedup(
     The assigned frame is persisted internally: it feeds the cap's
     count, both pair-join sides and the final output join, so without
     the cache the k-centroid assignment folds re-run ~4× — measured 35%
-    end-to-end at sf0.1 (3.3 → 2.2 s, interleaved best-of-3). Pass
-    ``cache`` to own the unpersist (asof_join convention)."""
+    end-to-end at sf0.1 (3.3 → 2.2 s, interleaved best-of-3). It goes in
+    ``cache``; the caller unpersists it once the result is read."""
     from .dedup import _cap_cells
 
     assigned = ivf_assign(
@@ -774,8 +774,7 @@ def semantic_dedup(
     ).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "list_id"
     ).persist()
-    if cache is not None:
-        cache.append(assigned)
+    cache.append(assigned)
     # In-cluster verify (r6, same strategy as neardup_pairs): in the
     # bounded regime, the pair join carries ONLY (id, list_id) and the
     # round4 cosine comes from the Arrow-vectorized broadcast-matrix
@@ -1133,7 +1132,8 @@ def kmeans_int(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 10_000,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Distributed Lloyd's k-means over an embedding column in EXACT
     fixed-point arithmetic → ``(id_col, cluster)`` after ``rounds``
@@ -1162,9 +1162,9 @@ def kmeans_int(
     partial aggregation (k·64 rows per partition reach the shuffle,
     never the data), and the driver collects exactly k·64 summary rows
     (bounded by constants, not the corpus). The quantized frame is
-    persisted once and scanned per round; pass ``cache`` to own the
-    unpersist (asof_join convention). No per-key window, no driver-side
-    data loop, nothing crosses Arrow.
+    persisted once and scanned per round, and goes in ``cache``; the
+    caller unpersists it once the result is read. No per-key window, no
+    driver-side data loop, nothing crosses Arrow.
     """
     spark = df.sparkSession
     # Adaptive spread (operators/spread.py): the persisted quantized
@@ -1180,8 +1180,7 @@ def kmeans_int(
             ).cast("long"),
         ).alias("__q"),
     ).persist()
-    if cache is not None:
-        cache.append(q)
+    cache.append(q)
 
     init_rows = q.orderBy(F.col(id_col)).limit(k).collect()
     if len(init_rows) < k:

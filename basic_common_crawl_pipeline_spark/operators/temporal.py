@@ -152,7 +152,8 @@ def asof_join(
     value_cols: tuple[str, ...] = ("value",),
     right_order: str | None = None,
     suffix: str = "_asof",
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Left as-of join: every ``left`` row, plus ``value_cols`` from the
     latest ``right`` row of the same ``on`` key with
@@ -179,9 +180,8 @@ def asof_join(
 
     Everything stays in whole-stage codegen: no Arrow crossing, so
     64-bit integers and NULL-vs-NaN survive exactly. It runs one small
-    summary action at call time and persists the partitioned union
-    (pass a list as ``cache`` to own unpersisting it, as with
-    operators/ordering.py)."""
+    summary action at call time and persists the partitioned union into
+    ``cache``; the caller unpersists it once the result is read."""
     if right_order is None:
         right_order = value_cols[0]
     spark = left.sparkSession
@@ -228,8 +228,7 @@ def asof_join(
         .withColumn("__pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
-    if cache is not None:
-        cache.append(parted)
+    cache.append(parted)
 
     key_t = un.schema[on].dataType
     # phase A: boundary summaries as ONE single-scan aggregation (a

@@ -166,8 +166,9 @@ def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     num_merges: int = 6,
-    cache: list | None = None,
     driver_train_max_words: int = 100_000,
+    *,
+    cache: list,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Train ``num_merges`` BPE merge rules on the corpus. Returns
     ``(merges, words)`` where ``merges`` is the learned rule list
@@ -185,21 +186,14 @@ def bpe_train(
     interpreted expression (the CLAUDE.md iterative-lineage rule; total
     work would be O(k²) folds). At most two round frames are live at
     once — grandparents retire as soon as their child is materialized.
-    Pass ``cache`` to own ALL the unpersists, same convention as
-    operators/training.py::pack_token_stream. With ``cache=None`` the
-    function self-cleans instead: the final frame is materialized with
-    one cheap count (the word table is the Zipf-collapsed DISTINCT-word
-    set, not the corpus) so its persisted parent can be released without
-    re-running every prior fold — only the RETURNED words frame stays
-    persisted, and ownership of that one unpersist passes to the
-    caller."""
+    Every persisted frame goes in ``cache``; the caller unpersists them
+    once the result is read."""
     wf = (
         word_frequency_table(df, text_col)
         .withColumn("syms", _chars(F.col("word")))
         .persist()
     )
-    if cache is not None:
-        cache.append(wf)
+    cache.append(wf)
 
     # r6 (guide §1.2 step 1 — use problem knowledge the planner lacks):
     # the Zipf collapse makes the word table orders of magnitude smaller
@@ -220,12 +214,7 @@ def bpe_train(
         words = spark.createDataFrame(
             table, "word string, freq bigint, syms array<string>"
         ).persist()
-        if cache is not None:
-            cache.append(words)
-        else:
-            # hand the single cached-frame unpersist to the caller, like
-            # the distributed path's returned frame
-            wf.unpersist()
+        cache.append(words)
         return merges, words
 
     merges: list[tuple[int, str, str, int]] = []
@@ -270,17 +259,8 @@ def bpe_train(
         new_wf = wf.withColumn(
             "syms", _merge_fold(F.col("syms"), a, b)
         ).persist()
-        if cache is not None:
-            cache.append(new_wf)
+        cache.append(new_wf)
         retire, wf = wf, new_wf
-
-    if cache is None and retire is not None:
-        # self-clean (no cache list to hand ownership to): the final
-        # round's frame was persisted but never materialized — count it
-        # (tiny: distinct words) so dropping its parent can't trigger an
-        # O(k²) fold replay, then release the parent.
-        wf.count()
-        retire.unpersist()
     return merges, wf.select("word", "freq", "syms")
 
 

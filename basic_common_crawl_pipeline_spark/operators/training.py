@@ -131,7 +131,8 @@ def pack_token_stream(
     order_cols: list[str],
     token_col: str = "n_tok",
     budget: int = 512,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Sequence packing: lay every document end-to-end in the total order
     of ``order_cols`` and cut the stream into ``budget``-token training
@@ -144,7 +145,9 @@ def pack_token_stream(
 
     The exact prefix sum is ``keyed_prefix_sum`` with an EMPTY key list
     (one global stream) — see its docstring for the two-phase shape and
-    its hazards; this function only adds the pack/straddle projection."""
+    its hazards; this function only adds the pack/straddle projection.
+    The prefix sum's persist goes in ``cache``; the caller unpersists it
+    once the result is read."""
     summed = keyed_prefix_sum(
         df, [], order_cols, token_col, out_col="start_off", cache=cache
     )
@@ -167,7 +170,8 @@ def keyed_prefix_sum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "cum_before",
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Exact per-key running sum (Σ value over all earlier rows of the
     SAME key in the total order of ``order_cols``) for FEW, FAT keys —
@@ -192,7 +196,8 @@ def keyed_prefix_sum(
     null-safe, so NULL-key rows form their own partition exactly like
     the per-key-window alternative would treat them). The partitioned
     frame is persisted internally (two consumers: the summary and the
-    output); pass ``cache`` to own the unpersist. For high-cardinality
+    output) into ``cache``; the caller unpersists it once the result is
+    read. For high-cardinality
     keys use a plain keyed window instead — no single key is hot
     there."""
     spark = df.sparkSession
@@ -209,8 +214,7 @@ def keyed_prefix_sum(
         .withColumn("__pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
-    if cache is not None:
-        cache.append(parted)
+    cache.append(parted)
 
     stats = parted.groupBy("__pid", *key_cols).agg(
         F.sum(F.col(value_col).cast("long")).alias("__v")
@@ -267,7 +271,8 @@ def token_budget_sample(
     source_col: str = "source",
     id_col: str = "doc_id",
     token_col: str = "n_tok",
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Token-budget source sampling — the Dolma/Pile mixing step that
     ``source_mix_stats`` computes weights FOR: from each source, take
@@ -281,7 +286,8 @@ def token_budget_sample(
     Returns every input row with ``__coin``-ordered ``cum_before`` and
     the ``kept`` flag (filter on ``kept`` to materialize the sample).
     The per-source running sum is ``keyed_prefix_sum`` — no per-source
-    window, so 20 sources × 10^10 docs never serializes."""
+    window, so 20 sources × 10^10 docs never serializes. Its persist goes
+    in ``cache``; the caller unpersists it once the result is read."""
     with_coin = df.withColumn("__coin", _coin(id_col))
     summed = keyed_prefix_sum(
         with_coin,
@@ -508,7 +514,8 @@ def pack_token_ids(
     order_cols: list[str],
     ids_col: str = "ids_csv",
     budget: int = 512,
-    cache: list | None = None,
+    *,
+    cache: list,
 ) -> DataFrame:
     """Materialize the ACTUAL training sequences: given encoded
     documents (``tokenizer.bpe_encode``'s output — token ids as a
@@ -526,8 +533,9 @@ def pack_token_ids(
     per-sequence groupBy — which is unavoidable and linear: every token
     must reach its sequence exactly once, the same volume the shard
     writer ships anyway. In-sequence order reassembles with the
-    array_sort-of-structs idiom (no window). ``cache`` owns the prefix
-    sum's internal persist (asof convention)."""
+    array_sort-of-structs idiom (no window). The prefix sum's persist
+    goes in ``cache``; the caller unpersists it once the result is
+    read."""
     # an EMPTY ids string is zero tokens, not one: F.split('', ' ')
     # yields [''] (size 1), which would shift every later document's
     # global offset and leak a bogus '' id into some sequence

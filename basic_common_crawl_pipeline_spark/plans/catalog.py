@@ -72,9 +72,10 @@ def register(
 
 # What an entry's lazy result still reads, so the entry cannot retire it
 # itself; the entry's caller owns it and releases it (release_caller):
-# persisted intermediates (the operators' ``cache`` convention), the
-# directories the entry wrote (_scratch_dir) and the in-memory views its
-# drained streams registered (_drain).
+# persisted intermediates (every persisting operator's required
+# ``cache=``; a lazy entry passes this list), the directories the entry
+# wrote (_scratch_dir) and the in-memory views its drained streams
+# registered (_drain).
 _CALLER_CACHES: list[DataFrame] = []
 _CALLER_DIRS: list[str] = []
 _CALLER_VIEWS: list[str] = []
@@ -83,8 +84,10 @@ _CALLER_VIEWS: list[str] = []
 def bench_trial(spark: SparkSession, sf_dir: str, name: str) -> float:
     """Seconds for one bench trial of ``name``: building the entry's
     DataFrame plus its declared ``bench`` action. What the entry handed
-    to its caller is released after the clock stops, so no trial leaves
-    a cached copy, a view or a directory behind."""
+    to its caller (every intermediate its operators persisted, its
+    views and its directories) is released after the clock stops, so
+    no trial leaves a cached copy, a view or a directory behind, and
+    the next trial cannot read the last one's cache."""
     t0 = time.time()
     try:
         BENCH[name](QUERIES[name](spark, sf_dir))
@@ -95,8 +98,10 @@ def bench_trial(spark: SparkSession, sf_dir: str, name: str) -> float:
 
 def release_caller(spark: SparkSession) -> None:
     """Release everything the entries called so far handed their caller:
-    the persisted intermediates, the drained streams' in-memory views and
-    the per-call directories. Call it once the entry's rows are read."""
+    the intermediates their operators persisted into ``_CALLER_CACHES``,
+    the drained streams' in-memory views and the per-call directories.
+    Call it once the entry's rows are read; afterwards only the memoized
+    inputs (``_memo``) stay persisted."""
     while _CALLER_CACHES:
         _CALLER_CACHES.pop().unpersist()
     while _CALLER_VIEWS:
@@ -361,6 +366,7 @@ def j4_asof_join(spark, sf_dir):
     joined = asof_join(
         clicks, errs, on="user_id",
         value_cols=("value", "event_id"), right_order="event_id",
+        cache=_CALLER_CACHES,
     )
     return joined.select(
         "event_id",
@@ -417,6 +423,7 @@ def j4_asof_nulls(spark, sf_dir):
     joined = asof_join(
         clicks, errs, on="user_id",
         value_cols=("value", "event_id"), right_order="event_id",
+        cache=_CALLER_CACHES,
     )
     return joined.select(
         "event_id",
@@ -1452,7 +1459,9 @@ def text_sequence_packing(spark, sf_dir):
     toks = docs.select(
         "doc_id", ts.token_count("text").cast("long").alias("n_tok")
     )
-    return pack_token_stream(toks, ["doc_id"], "n_tok", budget=512).select(
+    return pack_token_stream(
+        toks, ["doc_id"], "n_tok", budget=512, cache=_CALLER_CACHES
+    ).select(
         "doc_id", "n_tok", "start_off", "pack_id", "straddles"
     )
 
@@ -1635,7 +1644,9 @@ def text_span_dedup(spark, sf_dir):
     default hot-gram-safe grouped mark (cached gram table, map-side
     combine — no per-gram window task; plan-pinned)."""
     docs = load(spark, sf_dir, "documents")
-    return dedup.span_dedup(docs, "doc_id", "text", n=5)
+    return dedup.span_dedup(
+        docs, "doc_id", "text", n=5, cache=_CALLER_CACHES
+    )
 
 
 @register(
@@ -1983,7 +1994,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     return dedup.minhash_lsh_dedup(
         docs, "doc_id", "text", shingle_n=3, bands=4, rows_per_band=2,
-        threshold=0.2,
+        threshold=0.2, cache=_CALLER_CACHES,
     )
 
 
@@ -2171,6 +2182,25 @@ def _lp_rounds_sql(rounds: int) -> str:
     return "".join(out)
 
 
+def _neardup_edges(docs: DataFrame) -> DataFrame:
+    """dedup_minhash_lsh's pairs as ``(src, dst)`` edges, materialized
+    ONCE: the label rounds embed the edge frame every round (and
+    reference it twice per round via the undirected union), so without a
+    leaf here the full MinHash/LSH/Jaccard lineage is copied ~30x into
+    one plan (same rule as link_pagerank's edges). The checkpoint is
+    eager, so the MinHash caches retire before it returns."""
+    mh_cache: list = []
+    edges = dedup.minhash_lsh_dedup(
+        docs, "doc_id", "text", shingle_n=3, bands=4, rows_per_band=2,
+        threshold=0.2, cache=mh_cache,
+    ).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).localCheckpoint(eager=True)
+    for f in mh_cache:
+        f.unpersist()
+    return edges
+
+
 @register(
     "dedup_neardup_clusters",
     f"""
@@ -2204,21 +2234,8 @@ def dedup_neardup_clusters(spark, sf_dir):
     from ..operators.graph import label_propagation_min
 
     docs = load(spark, sf_dir, "documents")
-    # materialize ONCE: the label rounds embed the edge frame every
-    # round (and reference it twice per round via the undirected union),
-    # so without a leaf here the full MinHash/LSH/Jaccard lineage is
-    # copied ~30x into one plan (same rule as link_pagerank's edges)
-    mh_cache: list = []
-    pairs = dedup.minhash_lsh_dedup(
-        docs, "doc_id", "text", shingle_n=3, bands=4, rows_per_band=2,
-        threshold=0.2, cache=mh_cache,
-    ).select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).localCheckpoint(eager=True)
-    for f in mh_cache:  # checkpoint is eager: internal caches retire now
-        f.unpersist()
     return label_propagation_min(
-        pairs, iterations=4, nodes=docs.select("doc_id")
+        _neardup_edges(docs), iterations=4, nodes=docs.select("doc_id")
     ).select(F.col("node").alias("doc_id"), F.col("label").alias("cluster"))
 
 
@@ -2253,21 +2270,10 @@ def dedup_neardup_apply(spark, sf_dir):
     from ..operators.graph import label_propagation_min
 
     docs = load(spark, sf_dir, "documents")
-    # materialize ONCE: the label rounds embed the edge frame every
-    # round (and reference it twice per round via the undirected union),
-    # so without a leaf here the full MinHash/LSH/Jaccard lineage is
-    # copied ~30x into one plan (same rule as link_pagerank's edges)
-    mh_cache: list = []
-    pairs = dedup.minhash_lsh_dedup(
-        docs, "doc_id", "text", shingle_n=3, bands=4, rows_per_band=2,
-        threshold=0.2, cache=mh_cache,
-    ).select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).localCheckpoint(eager=True)
-    for f in mh_cache:  # checkpoint is eager: internal caches retire now
-        f.unpersist()
     keep = (
-        label_propagation_min(pairs, iterations=4, nodes=docs.select("doc_id"))
+        label_propagation_min(
+            _neardup_edges(docs), iterations=4, nodes=docs.select("doc_id")
+        )
         .filter(F.col("node") == F.col("label"))
         .select(F.col("node").alias("doc_id"))
     )
@@ -2384,7 +2390,8 @@ def dedup_simhash_pairs(spark, sf_dir):
     (256-way per chunk)."""
     docs = load(spark, sf_dir, "documents")
     return dedup.simhash_pairs(
-        docs, "doc_id", "text", bits=32, chunks=4, max_hamming=3
+        docs, "doc_id", "text", bits=32, chunks=4, max_hamming=3,
+        cache=_CALLER_CACHES,
     )
 
 
@@ -2591,7 +2598,7 @@ def emb_neardup_pairs(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     return similarity.neardup_pairs(
         emb, threshold=0.35, planes=_RH_PLANES, bands=4, rows_per_band=2,
-        cell_cap=_RH_CELL_CAP,
+        cell_cap=_RH_CELL_CAP, cache=_CALLER_CACHES,
     )
 
 
@@ -2690,7 +2697,7 @@ def emb_semantic_dedup(spark, sf_dir):
     pair join + the drop rule in SQL."""
     emb = load(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup(
-        emb, threshold=0.35, centroids=_IVF_CENTROIDS
+        emb, threshold=0.35, centroids=_IVF_CENTROIDS, cache=_CALLER_CACHES
     )
 
 
@@ -4215,7 +4222,7 @@ def text_pack_ids(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     enc = bpe_encode(docs, _bpe_model(spark, sf_dir))
-    return pack_token_ids(enc, ["doc_id"], budget=512)
+    return pack_token_ids(enc, ["doc_id"], budget=512, cache=_CALLER_CACHES)
 
 
 @register(
@@ -4277,7 +4284,8 @@ def text_token_budget_sample(spark, sf_dir):
         .alias("n_tok"),
     )
     out = token_budget_sample(
-        base, budgets={"src0": 2000, "src1": 100}, default_budget=400
+        base, budgets={"src0": 2000, "src1": 100}, default_budget=400,
+        cache=_CALLER_CACHES,
     )
     return out.select("doc_id", "source", "n_tok", "cum_before", "kept")
 
@@ -4325,7 +4333,7 @@ def graph_cc_chain(spark, sf_dir):
 
     edges = edge_family(1, 48).unionByName(edge_family(7, 42))
     cc = connected_components_star(
-        edges, nodes=docs.select("doc_id")
+        edges, nodes=docs.select("doc_id"), cache=_CALLER_CACHES
     )
     return cc.select(F.col("node"), F.col("label"))
 

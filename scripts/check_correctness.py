@@ -15,6 +15,7 @@ materialization locally (round-4 verdict #2).
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import os
 import sys
@@ -158,7 +159,14 @@ def main() -> int:
         else:
             print(f"ok    {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
 
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    # What the run left persisted: only the memoized inputs should stay.
+    # The map holds RDDs weakly, so collect both sides' garbage first.
+    gc.collect()
+    spark._jvm.System.gc()
+    time.sleep(0.5)
+    left = spark.sparkContext._jsc.getPersistentRDDs().size()
+    print(f"\n{left} persisted RDDs left after a JVM GC")
+    print(f"{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
 

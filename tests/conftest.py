@@ -12,5 +12,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def cache():
+    """The list an operator's ``cache=`` fills; every frame in it is
+    unpersisted after the test."""
+    frames: list = []
+    yield frames
+    for df in frames:
+        df.unpersist()
+
+
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"

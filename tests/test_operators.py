@@ -153,19 +153,19 @@ def test_exact_dedup_groups(spark):
     assert groups == {1: 3, 3: 1}  # whitespace-normalized equality
 
 
-def test_minhash_lsh_finds_near_duplicates(spark):
+def test_minhash_lsh_finds_near_duplicates(spark, cache):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")
     far = "completely different words about spark shuffles and parquet files"
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], ["doc_id", "text"]
     )
-    pairs = minhash_lsh_dedup(df, threshold=0.5).collect()
+    pairs = minhash_lsh_dedup(df, threshold=0.5, cache=cache).collect()
     assert [(p.a, p.b) for p in pairs] == [(1, 2)]
     assert pairs[0].jaccard > 0.5
 
 
-def test_hot_band_cell_cap_bounds_candidate_pairs(spark):
+def test_hot_band_cell_cap_bounds_candidate_pairs(spark, cache):
     """Boilerplate-heavy corpus (the 100-TB web reality): 120 of 200 docs
     are byte-identical, so every band/chunk cell they share holds 120
     members → an uncapped band self-join materializes all C(120,2)=7140
@@ -201,8 +201,8 @@ def test_hot_band_cell_cap_bounds_candidate_pairs(spark):
     big_cap = sorted((p.a, p.b) for p in lsh_candidate_pairs(sigs, cell_cap=10_000).collect())
     assert big_cap == sorted((p.a, p.b) for p in uncapped)
 
-    sp_uncapped = simhash_pairs(df, cell_cap=None).collect()
-    sp_capped = simhash_pairs(df, cell_cap=50).collect()
+    sp_uncapped = simhash_pairs(df, cell_cap=None, cache=cache).collect()
+    sp_capped = simhash_pairs(df, cell_cap=50, cache=cache).collect()
     assert sum(1 for p in sp_uncapped if p.a in hot_ids and p.b in hot_ids) == 7140
     assert all(not (p.a in hot_ids and p.b in hot_ids) for p in sp_capped)
     assert cold(sp_capped) == cold(sp_uncapped)
@@ -281,7 +281,7 @@ def _emb(spark):
     return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
 
-def test_lsh_neardup_recall_vs_brute_force(spark):
+def test_lsh_neardup_recall_vs_brute_force(spark, cache):
     """Banded RH-LSH (4 bands x 2 bits) must recover most brute-force
     pairs at the catalog threshold; every returned pair must be a true
     pair (precision 1.0 — the exact-cosine verify guarantees it)."""
@@ -296,7 +296,9 @@ def test_lsh_neardup_recall_vs_brute_force(spark):
     planes = random_hyperplanes(8, 64)
     got = {
         (r["a"], r["b"])
-        for r in neardup_pairs(emb, threshold=0.35, planes=planes).collect()
+        for r in neardup_pairs(
+            emb, threshold=0.35, planes=planes, cache=cache
+        ).collect()
     }
     rows = emb.select("vec_id", "embedding").collect()
     ids = [r["vec_id"] for r in rows]
@@ -315,7 +317,7 @@ def test_lsh_neardup_recall_vs_brute_force(spark):
     assert recall >= 0.6, f"LSH recall {recall:.2f} too low ({len(got)}/{len(want)})"
 
 
-def test_lsh_cell_cap_drops_hot_buckets(spark):
+def test_lsh_cell_cap_drops_hot_buckets(spark, cache):
     """cell_cap=0 drops every cell -> no pairs; a generous cap is a
     superset of a tight cap (monotone guard semantics)."""
     from basic_common_crawl_pipeline_spark.operators.similarity import (
@@ -326,18 +328,21 @@ def test_lsh_cell_cap_drops_hot_buckets(spark):
     emb = _emb(spark).limit(120)
     planes = random_hyperplanes(8, 64)
     assert (
-        neardup_pairs(emb, threshold=0.35, planes=planes, cell_cap=0).count() == 0
+        neardup_pairs(
+            emb, threshold=0.35, planes=planes, cell_cap=0, cache=cache
+        ).count()
+        == 0
     )
     tight = {
         (r["a"], r["b"])
         for r in neardup_pairs(
-            emb, threshold=0.35, planes=planes, cell_cap=10
+            emb, threshold=0.35, planes=planes, cell_cap=10, cache=cache
         ).collect()
     }
     loose = {
         (r["a"], r["b"])
         for r in neardup_pairs(
-            emb, threshold=0.35, planes=planes, cell_cap=100_000
+            emb, threshold=0.35, planes=planes, cell_cap=100_000, cache=cache
         ).collect()
     }
     assert tight <= loose
@@ -588,7 +593,7 @@ def test_asof_join_carries_whole_rows_not_columns(spark):
         assert (row["delay_asof"], row["rid_asof"]) == (None, 2), n_parts
 
 
-def test_asof_join_exact_for_60bit_ids(spark):
+def test_asof_join_exact_for_60bit_ids(spark, cache):
     """Integer value/left columns past 2^53 must survive the Arrow
     passes bit-exactly (the repo's md5-derived 60-bit id convention):
     nullable int64 → pandas float64 would silently round them, so they
@@ -604,7 +609,7 @@ def test_asof_join_exact_for_60bit_ids(spark):
         [("h1", 15, big + 4), ("h1", 25, big + 6)],
         "host string, ts long, lid long",
     )
-    df = asof_join(left, right, on="host", value_cols=("rid",))
+    df = asof_join(left, right, on="host", value_cols=("rid",), cache=cache)
     assert dict(df.dtypes) == {
         "host": "string", "ts": "bigint", "lid": "bigint",
         "rid_asof": "bigint",
@@ -613,7 +618,7 @@ def test_asof_join_exact_for_60bit_ids(spark):
     assert got == {big + 4: big, big + 6: big + 2}
 
 
-def test_asof_join_scale_shape_and_determinism(spark):
+def test_asof_join_scale_shape_and_determinism(spark, cache):
     """Scale contract of the two-phase as-of join: (a) the only Window
     in the physical plan partitions by the PHYSICAL partition id — never
     by the join key (a hot key never serializes through one task);
@@ -657,7 +662,7 @@ def test_asof_join_scale_shape_and_determinism(spark):
             spark.conf.set("spark.sql.shuffle.partitions", np_)
             df = asof_join(
                 left, right, on="host", value_cols=("rid", "v"),
-                right_order="rid",
+                right_order="rid", cache=cache,
             )
             import re as _re
 
@@ -986,7 +991,7 @@ def _union_find_components(edges, nodes=()):
     return {n: find(n) for n in parent}
 
 
-def test_connected_components_star_log_rounds(spark):
+def test_connected_components_star_log_rounds(spark, cache):
     """Large-star/small-star CC: a 64-node chain (diameter 63, where
     min-label propagation provably needs ~64 rounds) converges in
     O(log n) rounds with the correct single component; random and
@@ -1008,12 +1013,14 @@ def test_connected_components_star_log_rounds(spark):
     info: dict = {}
     got = {
         r["node"]: r["label"]
-        for r in connected_components_star(chain, info=info).collect()
+        for r in connected_components_star(
+            chain, info=info, cache=cache
+        ).collect()
     }
     assert got == {i: 0 for i in range(64)}
     assert info["rounds"] <= 12, info  # log-round, not diameter-round
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(chain, max_iterations=2)
+        connected_components_star(chain, max_iterations=2, cache=cache)
 
     rng = random.Random(13)
     edges = list(
@@ -1027,7 +1034,9 @@ def test_connected_components_star_log_rounds(spark):
     nodes = spark.createDataFrame([(i,) for i in range(70)], "doc_id long")
     star = {
         r["node"]: r["label"]
-        for r in connected_components_star(df, nodes=nodes).collect()
+        for r in connected_components_star(
+            df, nodes=nodes, cache=cache
+        ).collect()
     }
     assert star == _union_find_components(edges, range(70))
     assert star[69] == 69
@@ -1040,13 +1049,13 @@ def test_connected_components_star_log_rounds(spark):
     nodes = spark.createDataFrame([(i,) for i in cliq_nodes], "doc_id long")
     want = _union_find_components(cliq_edges, cliq_nodes)
     for got in (
-        connected_components_star(cliq, nodes=nodes),
+        connected_components_star(cliq, nodes=nodes, cache=cache),
         label_propagation_min(cliq, iterations=4, nodes=nodes),
     ):
         assert {r["node"]: r["label"] for r in got.collect()} == want
 
 
-def test_semantic_dedup_drop_rule_vs_numpy(spark):
+def test_semantic_dedup_drop_rule_vs_numpy(spark, cache):
     """semantic_dedup's kept set must equal the numpy replay of the
     contract: assign to argmax-round4-cosine centroid, then drop any
     vector with a smaller-id same-cluster mate at round4-cos >= t."""
@@ -1063,7 +1072,9 @@ def test_semantic_dedup_drop_rule_vs_numpy(spark):
     cents = ivf_centroids(16, 64)
     out = {
         r["vec_id"]: (r["list_id"], r["kept"])
-        for r in semantic_dedup(emb, threshold=0.35, centroids=cents).collect()
+        for r in semantic_dedup(
+            emb, threshold=0.35, centroids=cents, cache=cache
+        ).collect()
     }
     rows = emb.select("vec_id", "embedding").collect()
     ids = [r["vec_id"] for r in rows]
@@ -1091,7 +1102,7 @@ def test_semantic_dedup_drop_rule_vs_numpy(spark):
     assert any(not kept for _, kept in out.values())  # rule actually fires
 
 
-def test_semantic_dedup_hot_cluster_cap_keeps_members(spark):
+def test_semantic_dedup_hot_cluster_cap_keeps_members(spark, cache):
     """An over-cap cluster is excluded from PAIRING, not from the
     output: all its members come back kept=True."""
     from basic_common_crawl_pipeline_spark.operators.similarity import (
@@ -1101,7 +1112,9 @@ def test_semantic_dedup_hot_cluster_cap_keeps_members(spark):
 
     emb = _emb(spark)
     cents = ivf_centroids(16, 64)
-    out = semantic_dedup(emb, threshold=0.35, centroids=cents, cell_cap=2)
+    out = semantic_dedup(
+        emb, threshold=0.35, centroids=cents, cell_cap=2, cache=cache
+    )
     n = emb.count()
     assert out.count() == n
     # with every cluster > 2 members excluded from pairing, nearly all
@@ -1260,7 +1273,7 @@ def test_incremental_dedup_cross_snapshot(spark):
     assert out[4].keep == 1 and out[5].keep == 1
 
 
-def test_span_dedup_semantics(spark):
+def test_span_dedup_semantics(spark, cache):
     """Exact duplicate-span removal (operators/dedup.py::span_dedup):
     the globally-first occurrence of a duplicated 5-gram window is kept;
     later occurrences are removed with overlapping windows merged into
@@ -1278,7 +1291,7 @@ def test_span_dedup_semantics(spark):
     out = {
         r.doc_id: r
         for r in span_dedup(
-            spark.createDataFrame(rows, ["doc_id", "text"]), n=5
+            spark.createDataFrame(rows, ["doc_id", "text"]), n=5, cache=cache
         ).collect()
     }
     assert set(out) == {1, 2, 3, 4, 5}
@@ -1580,9 +1593,11 @@ def test_emb_kmeans_bench_trial_leaves_no_cached_copy(spark):
     """The emb_kmeans entry hands its persisted quantized frame to its
     caller; a bench trial of its declared action (exactly as bench.py
     runs it) must release that frame, so no trial leaves a cached copy
-    of the embeddings behind. The flagship is a committed one-wave
-    crawl whose rows are read from its snapshot store, so calling it
-    and reading its rows leaves no persisted RDD at all."""
+    of the embeddings behind. The same holds for one entry per other
+    persisting operator module, over bench trials and over a plain
+    collect followed by ``release_caller``. The flagship is a committed
+    one-wave crawl whose rows are read from its snapshot store, so
+    calling it and reading its rows leaves no persisted RDD at all."""
     from basic_common_crawl_pipeline_spark.plans import catalog
     from tests.conftest import SF_SMALL
 
@@ -1591,6 +1606,23 @@ def test_emb_kmeans_bench_trial_leaves_no_cached_copy(spark):
     for _ in range(2):
         catalog.bench_trial(spark, SF_SMALL, "emb_kmeans")
     assert set(jsc.getPersistentRDDs().keySet()) == before
+
+    for name in (
+        "j4_asof_join",  # temporal
+        "dedup_minhash_lsh",  # dedup
+        "text_span_dedup",  # dedup
+        "emb_neardup_pairs",  # similarity
+        "text_token_budget_sample",  # training
+    ):
+        before = set(jsc.getPersistentRDDs().keySet())
+        for _ in range(2):
+            catalog.bench_trial(spark, SF_SMALL, name)
+        try:
+            catalog.QUERIES[name](spark, SF_SMALL).collect()
+        finally:
+            catalog.release_caller(spark)
+        # new ids only: the map holds RDDs weakly (see below)
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set(), name
 
     catalog.pages_from_documents(spark, SF_SMALL)  # memoized
     for _ in range(2):
